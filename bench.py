@@ -63,6 +63,35 @@ def _calibration_probe(spark) -> float:
     return round(time.time() - t0, 3)
 
 
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _dirs, fs in os.walk(path) for f in fs
+    )
+
+
+def _warmup_dir(target: str) -> str | None:
+    """The smallest sibling sf* dir that is SMALLER than `target`, or
+    None. Larger siblings are skipped (a warmup at sf10 would cost more
+    than the run it warms); a sibling that vanishes or turns unreadable
+    between the glob and its stat is skipped, not raised."""
+    import glob
+
+    base = os.path.dirname(os.path.abspath(target.rstrip("/")))
+    limit = _dir_bytes(target)
+    cands = []
+    for p in glob.glob(os.path.join(base, "sf*")):
+        try:
+            if not os.path.isdir(p) or os.path.samefile(p, target):
+                continue
+            sz = _dir_bytes(p)
+        except OSError:
+            continue
+        if sz < limit:
+            cands.append((sz, p))
+    return min(cands)[1] if cands else None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -100,34 +129,17 @@ def main() -> None:
     # worker plus JVM JIT of the PythonMapInArrow path) -- measured 100
     # extra CPU-seconds across 32 workers (stage REST: 132.6 cold vs 31.5
     # warm executor_run seconds), landing on whichever decode/BLAS query
-    # ran first. One registered decode absorbs it; the warmup dir is now
-    # DERIVED -- the smallest sibling sf* dir that is not the bench
-    # sf_dir (r15 hardcoded /root/testdata/sf0.001, which crashed hosts
-    # without that fixture and, when sf_dir WAS sf0.001, pre-warmed the
-    # page cache of a measured query's own fixture). Without any sibling,
+    # ran first. One registered decode absorbs it; the warmup dir is
+    # DERIVED -- the smallest sibling sf* dir smaller than the bench
+    # sf_dir (_warmup_dir; a hardcoded fixture path crashed hosts without
+    # it and, when sf_dir WAS that fixture, pre-warmed the page cache of a
+    # measured query's own fixture). Without a smaller sibling,
     # warm_python_workers covers the per-worker import + MapInPandas JVM
     # path fixture-free. Nothing is cached; clearCache() runs below.
     from sqldataintegrationfunctiontriggerapp_spark import plans as _p
     from sqldataintegrationfunctiontriggerapp_spark.operators.multimodal import (
         warm_python_workers,
     )
-
-    def _warmup_dir(target: str) -> str | None:
-        import glob
-        base = os.path.dirname(os.path.abspath(target.rstrip("/")))
-        cands = []
-        for p in glob.glob(os.path.join(base, "sf*")):
-            if not os.path.isdir(p) or os.path.samefile(p, target):
-                continue
-            try:
-                sz = sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _dirs, fs in os.walk(p) for f in fs
-                )
-            except OSError:
-                continue
-            cands.append((sz, p))
-        return min(cands)[1] if cands else None
 
     wdir = _warmup_dir(sf_dir)
     if wdir is not None:

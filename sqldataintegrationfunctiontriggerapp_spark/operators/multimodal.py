@@ -1,23 +1,28 @@
 """Multimodal column plumbing (north-star C7): image/audio/video as opaque
-binary columns with typed metadata, processed by Arrow-batched Pandas UDFs.
+binary columns with typed metadata, decoded executor-side over Arrow-batched
+mapInPandas.
 
-Decode reality ladder: CONTAINER-HEADER decoding is real
-(decode_image_dims, r11: PNG IHDR + JPEG SOFn marker scan, pure stdlib);
-PNG PIXEL decoding is real (decode_png_pixels, r12: zlib inflate + all
-five ISO/IEC 15948 row filters reversed); baseline-JPEG ENTROPY decoding
-is real (decode_jpeg_pixels, r12: DQT/DHT/SOF0/SOS parse, canonical
-Huffman + byte unstuffing, run-length AC, dequant, full 8x8 IDCT);
-WAV/PCM AUDIO decoding is real (decode_wav_samples, r13: RIFF chunk walk
-+ fmt parse + interleaved 16-bit PCM sample statistics, pure struct);
-AVI video CONTAINER decoding is real (decode_avi_metadata, r13: RIFF
-LIST recursion, avih main header, frame-chunk census). The remaining
-boundary is progressive/arithmetic JPEG, chroma-subsampled frames,
-compressed audio, and the video-frame CODEC PAYLOADS -- `decode_stub=True`
-in extract_features
-produces deterministic fake features and `decode_stub=False` raises
-NotImplementedError where a libav/libjpeg-turbo call would go.
-Everything around that boundary -- schema, binary handling, mapInPandas
-batch iteration, partition sizing -- is real and tested.
+Two seams carry every codec:
+
+- `synth_media(docs, bytes_fn)` turns each doc_id into a deterministic
+  fixture payload (`_png_full_bytes`, `_gif_full_bytes`, ...), giving the
+  (media_id, content) layout a real ingest would land.
+- `decode_media(media, codec)` runs one row function from `CODECS` over
+  every (media_id, content) pair. A codec is declared once, as its DDL
+  output schema plus a `(media_id, bytes) -> list[tuple]` row function,
+  so a caller names a codec and never pairs a schema by hand. The pandas
+  frame's column names and nullable dtypes are derived from that schema.
+
+Decoders are pure stdlib/numpy and never throw per row: a NULL cell, junk
+bytes or a truncated payload degrades that row (status 'unknown' or
+'corrupt', header fields kept where they parse) instead of failing the
+task -- a 100 TB crawl always contains corrupt files. Real decodes:
+PNG/JPEG container headers; PNG pixels (all five row filters, Adam7);
+baseline, 4:2:0-subsampled and progressive JPEG; GIF (LZW, interlace,
+local palettes); WAV/PCM and IMA-ADPCM audio; the AVI container; and MJPEG
+video frames. The remaining boundary is perceptual audio codecs (MP3/AAC)
+and non-MJPEG video frame payloads, which stay opaque bytes.
+`extract_features` is the byte-statistics feature stub over text media.
 
 Scale notes: binary payloads ride in parquet as BYTE_ARRAY; with
 `spark.sql.files.maxPartitionBytes` at 128 MB a 100 TB media table yields
@@ -109,24 +114,15 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Decode + feature-extract via mapInPandas. With decode_stub, features
-    are deterministic functions of the bytes (testable end-to-end); without,
-    this is the seam where a real decoder plugs in."""
+def extract_features(media: DataFrame) -> DataFrame:
+    """Feature-extract via mapInPandas: dimensions and features are
+    deterministic functions of the payload bytes, so tests and the oracle
+    can assert exact values."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real JPEG/audio decode requires a codec library; "
-                    "install and replace this branch (PNG needs none -- "
-                    "see decode_png_pixels for the full stdlib pixel path,"
-                    " decode_image_dims for container headers)"
-                )
             content = pdf["content"]
             lens = content.map(len)
-            # deterministic fake 'decode': dimensions and features derived
-            # from byte statistics so tests can assert exact values
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -157,11 +153,8 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 100) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real (pure-stdlib) container-header decoding -- VERDICT r10 "What's
-# missing" #4: the NotImplementedError above now stands in ONLY for pixel
-# decoding; dimension/channel extraction from actual PNG/JPEG bytes is
-# implemented below and runs over the same Arrow-batched mapInPandas seam a
-# libvips-backed decoder would.
+# Real (pure-stdlib) container-header decoding: dimension/channel
+# extraction from actual PNG/JPEG bytes (codec 'image_dims').
 
 DIMS_SCHEMA = (
     "media_id bigint, format string, width int, height int, n_channels int"
@@ -233,44 +226,6 @@ def _parse_jpeg(buf: bytes):
     return None
 
 
-def decode_image_dims(media: DataFrame) -> DataFrame:
-    """Width/height/channels from REAL container bytes (PNG IHDR, JPEG SOFn
-    marker scan) -- pure stdlib, no image library, over the same
-    mapInPandas seam extract_features uses. Unparseable payloads yield NULL
-    dims with format 'unknown' (a 100 TB media crawl always contains
-    corrupt files; the decoder must degrade per-row, never throw a task)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, cs = [], [], [], []
-            for buf in pdf["content"]:
-                # NULL binary cells arrive as None; the per-row degradation
-                # contract says they decode to 'unknown', never TypeError
-                b = bytes(buf) if buf is not None else b""
-                parsed = _parse_png(b)
-                if parsed is not None:
-                    fmt = "png"
-                else:
-                    parsed = _parse_jpeg(b)
-                    fmt = "jpeg" if parsed is not None else "unknown"
-                w, h, c = parsed if parsed is not None else (None,) * 3
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-                cs.append(c)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_channels": pd.array(cs, dtype="Int32"),
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=DIMS_SCHEMA)
-
-
 def _png_bytes(width: int, height: int, color_type: int = 2) -> bytes:
     """Minimal PNG header fixture: signature + IHDR (zero CRC -- the
     dimension decoder reads the header, it does not verify checksums)."""
@@ -308,10 +263,18 @@ def _jpeg_bytes(width: int, height: int, n_comp: int = 3) -> bytes:
     return b"\xff\xd8" + app0 + com + sof + b"\xff\xd9"
 
 
+def _image_header_bytes(doc_id: int) -> bytes:
+    """Header fixture for the 'image_dims' codec: even doc_ids become PNGs,
+    odd become JPEGs, with dims a pure function of doc_id (so an external
+    oracle can recompute the expected decode output without parsing
+    bytes)."""
+    w, h = doc_id % 640 + 1, doc_id % 480 + 1
+    return _png_bytes(w, h) if doc_id % 2 == 0 else _jpeg_bytes(w, h)
+
+
 # ---------------------------------------------------------------------------
 # Real (pure-stdlib) PNG PIXEL decoding -- VERDICT r11 #2: zlib inflate +
-# per-row unfilter (all five ISO/IEC 15948 filter types), which narrows the
-# NotImplementedError boundary to JPEG entropy decode only. The synthetic
+# per-row unfilter (all five ISO/IEC 15948 filter types). The synthetic
 # fixture writes REAL PNGs (correct CRCs, split IDAT, every filter type in
 # rotation) whose pixel values are a closed-form function of (doc_id, x, y,
 # channel), so an arithmetic oracle can recompute the decoded statistics
@@ -689,75 +652,13 @@ def _decode_png_interlaced_one(buf: bytes):
     )
 
 
-def synth_png_interlaced_media(docs: DataFrame) -> DataFrame:
-    """Deterministic Adam7 PNG fixture over documents (see
-    _png_interlaced_bytes); doc_id % 101 == 0 rows are truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_png_interlaced_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_png_interlaced_pixels(media: DataFrame) -> DataFrame:
-    """Position-sensitive Adam7 PNG decode over the Arrow-batched
-    mapInPandas seam: channel sums + the raster-position-weighted
-    channel-0 sum that makes all seven pass placements hash-detectable;
-    truncated/unsupported layers keep header dims as status='corrupt',
-    non-PNG bytes are 'unknown'."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_png_interlaced_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 6)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2]) + (None,) * 4
-                    )
-                else:
-                    w, h, sums, wpos = r
-                    rows.append(
-                        (int(mid), "ok", w, h, sums[0], sums[1], sums[2],
-                         wpos)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height",
-                    "c0_sum", "c1_sum", "c2_sum", "wpos_sum",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "c0_sum": "Int64", "c1_sum": "Int64",
-                    "c2_sum": "Int64", "wpos_sum": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=POS_PIXEL_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Real (pure-stdlib) baseline-JPEG ENTROPY decoding -- VERDICT r11 #10
 # stretch: DQT/DHT/SOF0/SOS parse, canonical-Huffman bitstream decode with
 # byte-unstuffing, run-length AC expansion, dequantization, and a full 8x8
-# float IDCT. With this the extract_features stub boundary retires for
-# baseline JPEG; what remains out of scope is progressive/arithmetic JPEG
-# and real-world chroma subsampling (the fixture and decoder handle 1- or
-# 3-component 1x1-sampled frames).
+# float IDCT. Chroma-subsampled (4:2:0) and progressive scans decode too
+# (see _jpeg_decode_mcu_subsampled, _progressive_scan); arithmetic coding
+# does not.
 
 # natural-order index of each zigzag position (ISO/IEC 10918-1 figure A.6)
 _JPEG_ZIGZAG = [
@@ -1700,204 +1601,11 @@ def _jpeg_progressive_bytes(doc_id: int) -> bytes:
     )
 
 
-def synth_jpeg_media(docs: DataFrame) -> DataFrame:
-    """Deterministic full-JPEG fixture over documents (see
-    _jpeg_full_bytes); doc_id % 89 == 0 rows are entropy-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_jpeg_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_jpeg_pixels(media: DataFrame) -> DataFrame:
-    """REAL baseline-JPEG entropy decode over the Arrow-batched
-    mapInPandas seam: same output contract as decode_png_pixels (grayscale
-    fills c0_sum, c1/c2 stay NULL)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_jpeg_pixels_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 8)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2], r[3])
-                        + (None,) * 5
-                    )
-                else:
-                    w, h, ch, sums, mn, mx = r
-                    s = sums + [None] * (3 - len(sums))
-                    rows.append(
-                        (int(mid), "ok", w, h, ch, s[0], s[1], s[2], mn, mx)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height", "n_channels",
-                    "c0_sum", "c1_sum", "c2_sum", "px_min", "px_max",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "n_channels": "Int32", "c0_sum": "Int64",
-                    "c1_sum": "Int64", "c2_sum": "Int64",
-                    "px_min": "Int32", "px_max": "Int32",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=PIXEL_SCHEMA)
-
-
-def synth_jpeg_420_media(docs: DataFrame) -> DataFrame:
-    """Deterministic 4:2:0 baseline-JPEG fixture over documents (see
-    _jpeg_420_bytes); doc_id % 89 == 0 rows are entropy-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_jpeg_420_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def synth_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
-    """Deterministic PROGRESSIVE-JPEG fixture over documents (see
-    _jpeg_progressive_bytes); doc_id % 89 == 0 rows have their first DC
-    scan truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _jpeg_progressive_bytes(int(i)) for i in ids
-                    ],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def synth_pixel_media(docs: DataFrame) -> DataFrame:
-    """Deterministic full-PNG fixture over documents: every doc becomes a
-    real RGB8 PNG (see _png_full_bytes); doc_id % 97 == 0 rows are
-    IDAT-truncated corrupt files."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_png_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_png_pixels(media: DataFrame) -> DataFrame:
-    """REAL pixel decode for PNG payloads -- zlib inflate + all-five-filter
-    unfilter, pure stdlib, over the same Arrow-batched mapInPandas seam as
-    decode_image_dims. Emits per-image per-channel sums and global extrema
-    (the stats an arithmetic oracle can recompute); corrupt payloads keep
-    their header dims with status='corrupt' and NULL stats; non-PNG bytes
-    are status='unknown' with NULL everything."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_png_pixels_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 8)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2], r[3])
-                        + (None,) * 5
-                    )
-                else:
-                    w, h, ch, sums, mn, mx = r
-                    s = sums + [None] * (3 - len(sums))
-                    rows.append(
-                        (int(mid), "ok", w, h, ch, s[0], s[1], s[2], mn, mx)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height", "n_channels",
-                    "c0_sum", "c1_sum", "c2_sum", "px_min", "px_max",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "n_channels": "Int32", "c0_sum": "Int64",
-                    "c1_sum": "Int64", "c2_sum": "Int64",
-                    "px_min": "Int32", "px_max": "Int32",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=PIXEL_SCHEMA)
-
-
-def synth_image_media(docs: DataFrame) -> DataFrame:
-    """Deterministic binary image-header fixture from the documents table:
-    even doc_ids become PNGs, odd become JPEGs, with dims a pure function
-    of doc_id (so an external oracle can recompute the expected decode
-    output without parsing bytes). The byte ASSEMBLY runs in the same
-    Arrow-batched seam a real ingest's format conversion would."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            content = [
-                _png_bytes(int(i) % 640 + 1, int(i) % 480 + 1)
-                if int(i) % 2 == 0
-                else _jpeg_bytes(int(i) % 640 + 1, int(i) % 480 + 1)
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"media_id": ids, "content": content}
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Real (pure-stdlib) WAV/PCM audio decoding -- VERDICT r12 "What's missing"
 # #4 / next-round #8: RIFF container walk + fmt chunk parse + interleaved
-# 16-bit PCM sample statistics, built on `struct`/`wave` only. With this the
-# C7 decode boundary narrows to video + compressed audio + progressive JPEG;
-# uncompressed audio (the dominant raw-capture format in speech corpora)
+# 16-bit PCM sample statistics, built on `struct`/`wave` only. Uncompressed
+# audio (the dominant raw-capture format in speech corpora)
 # decodes for real. The synthetic fixture writes spec-valid WAV files whose
 # sample values are a closed form of (doc_id, frame, channel), so an
 # arithmetic oracle recomputes the decoded statistics without parsing bytes
@@ -2002,131 +1710,14 @@ def _decode_wav_one(buf: bytes):
     return (rate, nch, n_samples // nch, sums, amp_min, amp_max, samples)
 
 
-def synth_wav_media(docs: DataFrame) -> DataFrame:
-    """Deterministic full-WAV fixture over documents (see _wav_full_bytes);
-    doc_id % 101 == 0 rows are data-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_wav_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_wav_samples(media: DataFrame) -> DataFrame:
-    """REAL WAV/PCM decode over the Arrow-batched mapInPandas seam: RIFF
-    chunk walk, fmt parse, interleaved 16-bit sample statistics
-    (per-channel sums for the first two channels, global amplitude
-    extrema, duration). Same per-row degradation contract as the image
-    decoders: truncated data -> status='corrupt' with header fields kept,
-    non-WAV bytes -> status='unknown'."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_wav_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 8)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2]) + (None,) * 6
-                    )
-                else:
-                    rate, nch, n_frames, sums, mn, mx, _samples = r
-                    s = (sums + [None, None])[:2]
-                    rows.append(
-                        (
-                            int(mid), "ok", rate, nch, n_frames,
-                            s[0], s[1], mn, mx,
-                            n_frames * 1000 // rate,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "sample_rate", "n_channels",
-                    "n_frames", "c0_sum", "c1_sum", "amp_min", "amp_max",
-                    "duration_ms",
-                ],
-            ).astype(
-                {
-                    "sample_rate": "Int32", "n_channels": "Int32",
-                    "n_frames": "Int64", "c0_sum": "Int64",
-                    "c1_sum": "Int64", "amp_min": "Int32",
-                    "amp_max": "Int32", "duration_ms": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=AUDIO_SCHEMA)
-
+# ASR-style framing over decoded audio (codec 'wav_windows'): frames per
+# window of channel 0
+_AUDIO_WINDOW = 20
 
 AUDIO_WINDOW_SCHEMA = (
     "media_id bigint, win int, n_frames bigint, abs_sum bigint, "
     "zero_crossings bigint"
 )
-
-
-def wav_window_features(media: DataFrame, window: int = 20) -> DataFrame:
-    """ASR-style fixed-window framing over DECODED audio: channel 0 of
-    each valid WAV is segmented into windows of `window` frames, and each
-    window reports its frame count, integer energy (sum |sample| -- the
-    VAD/silence-trim signal), and zero-crossing count (the classic
-    voiced/unvoiced discriminator). All integer-exact, so a SQL oracle
-    recomputes every value from the fixture's closed form. Corrupt or
-    non-WAV payloads contribute no rows (the decode entry owns their
-    degradation semantics). Same 100 TB shape as the decoders: one scan,
-    no shuffle, Arrow-batch-bounded memory."""
-
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                r = _decode_wav_one(bytes(buf) if buf is not None else b"")
-                if r is None or r[0] == "corrupt":
-                    continue
-                _rate, nch, n_frames, _sums, _mn, _mx, samples = r
-                # reuse the samples from the SAME chunk walk that accepted
-                # the row -- a second, divergent walk here (first-vs-last
-                # data chunk, unchecked unpack length) is exactly how a
-                # WAV that decode accepts could throw and kill the task
-                ch0 = samples[::nch]
-                for w0 in range(0, n_frames, window):
-                    seg = ch0[w0 : w0 + window]
-                    zc = sum(
-                        1
-                        for a, b in zip(seg, seg[1:])
-                        if (a >= 0) != (b >= 0)
-                    )
-                    rows.append(
-                        (
-                            int(mid), w0 // window, len(seg),
-                            sum(abs(v) for v in seg), zc,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "win", "n_frames", "abs_sum",
-                    "zero_crossings",
-                ],
-            ).astype(
-                {
-                    "win": "Int32", "n_frames": "Int64",
-                    "abs_sum": "Int64", "zero_crossings": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_feats, schema=AUDIO_WINDOW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2482,129 +2073,6 @@ def _decode_gif_interlaced_one(buf: bytes):
     )
 
 
-def synth_gif_media(docs: DataFrame) -> DataFrame:
-    """Deterministic GIF fixture over documents (see _gif_full_bytes);
-    doc_id % 109 == 0 rows are data-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_gif_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_gif_pixels(media: DataFrame) -> DataFrame:
-    """REAL GIF decode over the Arrow-batched mapInPandas seam: same
-    output contract as decode_png_pixels (RGB channel sums + global
-    extrema); truncated/unsupported layers keep header dims as
-    status='corrupt', non-GIF bytes are 'unknown'."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_gif_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 8)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2], r[3])
-                        + (None,) * 5
-                    )
-                else:
-                    w, h, ch, sums, mn, mx = r
-                    rows.append(
-                        (int(mid), "ok", w, h, ch, sums[0], sums[1],
-                         sums[2], mn, mx)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height", "n_channels",
-                    "c0_sum", "c1_sum", "c2_sum", "px_min", "px_max",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "n_channels": "Int32", "c0_sum": "Int64",
-                    "c1_sum": "Int64", "c2_sum": "Int64",
-                    "px_min": "Int32", "px_max": "Int32",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=PIXEL_SCHEMA)
-
-
-def synth_gif_interlaced_media(docs: DataFrame) -> DataFrame:
-    """Deterministic interlaced+local-palette GIF fixture over documents
-    (see _gif_interlaced_bytes); doc_id % 113 == 0 rows are truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_gif_interlaced_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_gif_interlaced_pixels(media: DataFrame) -> DataFrame:
-    """Position-sensitive GIF decode over the Arrow-batched mapInPandas
-    seam: channel sums + the raster-position-weighted red sum (wpos)
-    that makes the 4-pass deinterlace and local-palette routing
-    hash-detectable; truncated streams keep header dims as
-    status='corrupt', non-GIF bytes are 'unknown'."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_gif_interlaced_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 6)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1], r[2]) + (None,) * 4
-                    )
-                else:
-                    w, h, sums, wpos = r
-                    rows.append(
-                        (int(mid), "ok", w, h, sums[0], sums[1], sums[2],
-                         wpos)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height",
-                    "c0_sum", "c1_sum", "c2_sum", "wpos_sum",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "c0_sum": "Int64", "c1_sum": "Int64",
-                    "c2_sum": "Int64", "wpos_sum": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=POS_PIXEL_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # IMA ADPCM audio decode (VERDICT r13 #6) -- COMPRESSED audio is no longer
 # uniformly out of scope: IMA/DVI ADPCM (WAV format code 0x11) is an
@@ -2767,67 +2235,6 @@ def _decode_adpcm_one(buf: bytes):
     return (rate, total, out_sum, amp_min, amp_max)
 
 
-def synth_adpcm_media(docs: DataFrame) -> DataFrame:
-    """Deterministic IMA-ADPCM WAV fixture over documents (see
-    _adpcm_full_bytes); doc_id % 107 == 0 rows are data-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_adpcm_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_adpcm_samples(media: DataFrame) -> DataFrame:
-    """REAL IMA ADPCM decode over the Arrow-batched mapInPandas seam:
-    RIFF walk, fmt/fact parse, block-header + nibble predictor walk,
-    per-file sample statistics. Truncated data or malformed blocks ->
-    status='corrupt' with the declared rate kept; non-WAV bytes ->
-    'unknown'. Same 100 TB shape as the PCM decoder."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(buf) if buf is not None else b""
-                r = _decode_adpcm_one(b)
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 6)
-                elif r[0] == "corrupt":
-                    rows.append(
-                        (int(mid), "corrupt", r[1]) + (None,) * 5
-                    )
-                else:
-                    rate, total, s, mn, mx = r
-                    rows.append(
-                        (int(mid), "ok", rate, total, s, mn, mx,
-                         total * 1000 // rate)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "sample_rate", "n_frames",
-                    "c0_sum", "amp_min", "amp_max", "duration_ms",
-                ],
-            ).astype(
-                {
-                    "sample_rate": "Int32", "n_frames": "Int64",
-                    "c0_sum": "Int64", "amp_min": "Int32",
-                    "amp_max": "Int32", "duration_ms": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=ADPCM_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Real (pure-stdlib) AVI video CONTAINER decoding -- r13 continuation of the
 # decode ladder: AVI is RIFF (like WAV), so the container layer -- main
@@ -2935,70 +2342,6 @@ def _decode_avi_one(buf: bytes):
     return (w, h, uspf, total, ns, frames_found, movi_bytes)
 
 
-def synth_avi_media(docs: DataFrame) -> DataFrame:
-    """Deterministic full-AVI fixture over documents (see _avi_full_bytes);
-    doc_id % 103 == 0 rows are movi-truncated."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_avi_full_bytes(int(i)) for i in ids],
-                }
-            )
-
-    return _spread(docs.select("doc_id")).mapInPandas(
-        _synth, schema="media_id bigint, content binary"
-    )
-
-
-def decode_avi_metadata(media: DataFrame) -> DataFrame:
-    """REAL AVI container decode over the Arrow-batched mapInPandas seam:
-    main-header fields, frame-chunk census, movi payload byte count,
-    duration. Truncated movi -> status='corrupt' with header fields kept;
-    non-AVI bytes -> 'unknown'. The frame PAYLOADS stay opaque -- that is
-    the codec boundary, exactly as documented for progressive JPEG."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                r = _decode_avi_one(bytes(buf) if buf is not None else b"")
-                if r is None:
-                    rows.append((int(mid), "unknown") + (None,) * 8)
-                elif r[0] == "corrupt":
-                    _s, w, h, uspf, total, ns = r
-                    rows.append(
-                        (int(mid), "corrupt", w, h, uspf, total, ns,
-                         None, None, None)
-                    )
-                else:
-                    w, h, uspf, total, ns, found, mb = r
-                    rows.append(
-                        (int(mid), "ok", w, h, uspf, total, ns, found, mb,
-                         total * uspf // 1000)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "status", "width", "height", "us_per_frame",
-                    "total_frames", "n_streams", "frames_found",
-                    "movi_bytes", "duration_ms",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "us_per_frame": "Int64", "total_frames": "Int64",
-                    "n_streams": "Int32", "frames_found": "Int64",
-                    "movi_bytes": "Int64", "duration_ms": "Int64",
-                }
-            )
-
-    return media.mapInPandas(_decode, schema=VIDEO_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # MJPEG: real video FRAME pixel decode (VERDICT r13 #2) -- the oldest
 # real-world AVI codec stores each frame as a complete baseline JPEG, so the
@@ -3083,19 +2426,23 @@ def _mjpeg_frames_one(buf: bytes):
     return frames, truncated
 
 
-def synth_mjpeg_media(docs: DataFrame) -> DataFrame:
-    """Deterministic MJPEG/AVI fixture over documents (see
-    _mjpeg_full_bytes); doc_id % 103 == 0 rows are container-truncated,
-    frames with (doc_id + 131*f) % 89 == 0 are entropy-truncated."""
+# ---------------------------------------------------------------------------
+# The two seams. Every fixture runs through synth_media and every decoder
+# through decode_media; a codec differs from the next only in its row
+# function and output schema, declared together in CODECS.
+
+
+def synth_media(docs: DataFrame, bytes_fn) -> DataFrame:
+    """Deterministic (media_id, content) fixture over documents: each
+    doc_id becomes `bytes_fn(doc_id)`. The byte assembly runs in the same
+    Arrow-batched seam a real ingest's format conversion would, spread
+    over the cores (see _spread)."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["doc_id"]
             yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_mjpeg_full_bytes(int(i)) for i in ids],
-                }
+                {"media_id": ids, "content": [bytes_fn(int(i)) for i in ids]}
             )
 
     return _spread(docs.select("doc_id")).mapInPandas(
@@ -3103,58 +2450,160 @@ def synth_mjpeg_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_mjpeg_frames(media: DataFrame) -> DataFrame:
-    """REAL video frame pixel decode: the AVI container walk locates each
-    '00dc' payload and the _FastBits baseline-JPEG reader decodes its
-    pixels -- one output row per frame (frame index, dims, channel-0 sum,
-    extrema). Degradation composes across BOTH layers: a corrupt frame
-    payload keeps its header dims with status='corrupt' (container intact,
-    other frames unaffected); a truncated container emits its intact
-    leading frames plus one frame=NULL status='container_truncated'
-    marker row; non-AVI bytes emit frame=NULL status='unknown'. One scan,
-    no shuffle, Arrow-batch-bounded memory."""
+def _status_row(mid: int, r, n_cols: int, ok) -> tuple:
+    """The shared per-row degradation rule for (media_id, status, ...)
+    schemas: a `_decode_*_one` result of None is (mid, 'unknown', NULL...);
+    ('corrupt', *hdr) keeps the parsed header fields and NULLs the rest;
+    anything else is (mid, 'ok', *ok(r))."""
+    if r is None:
+        return (mid, "unknown") + (None,) * (n_cols - 2)
+    if r[0] == "corrupt":
+        return (mid, "corrupt", *r[1:]) + (None,) * (n_cols - 1 - len(r))
+    return (mid, "ok", *ok(r))
+
+
+def _status_codec(schema: str, decode_one, ok):
+    """(schema, row function) for a decoder that emits one status row per
+    payload."""
+    n_cols = len(schema.split(","))
+
+    def rows(mid: int, buf: bytes) -> list[tuple]:
+        return [_status_row(mid, decode_one(buf), n_cols, ok)]
+
+    return schema, rows
+
+
+def _pixel_ok(r) -> tuple:
+    w, h, ch, sums, mn, mx = r
+    return (w, h, ch, *sums, *[None] * (3 - len(sums)), mn, mx)
+
+
+def _pos_pixel_ok(r) -> tuple:
+    w, h, sums, wpos = r
+    return (w, h, *sums, wpos)
+
+
+def _wav_ok(r) -> tuple:
+    rate, nch, n_frames, sums, mn, mx, _samples = r
+    s = (sums + [None, None])[:2]
+    return (rate, nch, n_frames, *s, mn, mx, n_frames * 1000 // rate)
+
+
+def _adpcm_ok(r) -> tuple:
+    rate, total, s, mn, mx = r
+    return (rate, total, s, mn, mx, total * 1000 // rate)
+
+
+def _avi_ok(r) -> tuple:
+    w, h, uspf, total, ns, found, mb = r
+    return (w, h, uspf, total, ns, found, mb, total * uspf // 1000)
+
+
+def _image_dims_rows(mid: int, buf: bytes) -> list[tuple]:
+    """Width/height/channels from a PNG IHDR or a JPEG SOFn marker scan;
+    unparseable payloads are format 'unknown' with NULL dims."""
+    for fmt, parse in (("png", _parse_png), ("jpeg", _parse_jpeg)):
+        parsed = parse(buf)
+        if parsed is not None:
+            return [(mid, fmt, *parsed)]
+    return [(mid, "unknown", None, None, None)]
+
+
+def _wav_window_rows(mid: int, buf: bytes) -> list[tuple]:
+    """One row per _AUDIO_WINDOW-frame window of channel 0 of a valid WAV:
+    frame count, integer energy (sum |sample| -- the VAD/silence-trim
+    signal) and zero-crossing count (the voiced/unvoiced discriminator).
+    Corrupt or non-WAV payloads contribute no rows (the 'wav' codec owns
+    their degradation). The samples come from the SAME chunk walk that
+    accepted the row: a second, divergent walk is how a WAV that decode
+    accepts could throw and kill the task."""
+    r = _decode_wav_one(buf)
+    if r is None or r[0] == "corrupt":
+        return []
+    _rate, nch, n_frames, _sums, _mn, _mx, samples = r
+    ch0 = samples[::nch]
+    rows = []
+    for w0 in range(0, n_frames, _AUDIO_WINDOW):
+        seg = ch0[w0 : w0 + _AUDIO_WINDOW]
+        zc = sum(1 for a, b in zip(seg, seg[1:]) if (a >= 0) != (b >= 0))
+        rows.append(
+            (mid, w0 // _AUDIO_WINDOW, len(seg), sum(abs(v) for v in seg), zc)
+        )
+    return rows
+
+
+def _mjpeg_rows(mid: int, buf: bytes) -> list[tuple]:
+    """One row per '00dc' frame, its pixels decoded by the baseline-JPEG
+    reader. Degradation composes across both layers: a corrupt frame keeps
+    its header dims with status='corrupt' (other frames unaffected); a
+    truncated container emits its intact leading frames plus one
+    frame=NULL status='container_truncated' row; non-AVI bytes emit one
+    frame=NULL status='unknown' row."""
+    r = _mjpeg_frames_one(buf)
+    if r is None:
+        return [(mid, None, "unknown") + (None,) * 5]
+    payloads, truncated = r
+    rows = []
+    for f, payload in enumerate(payloads):
+        jr = _decode_jpeg_pixels_one(payload)
+        if jr is None:
+            rows.append((mid, f, "unknown") + (None,) * 5)
+        elif jr[0] == "corrupt":
+            rows.append((mid, f, "corrupt", jr[1], jr[2], None, None, None))
+        else:
+            w, h, _ch, sums, mn, mx = jr
+            rows.append((mid, f, "ok", w, h, sums[0], mn, mx))
+    if truncated:
+        rows.append((mid, None, "container_truncated") + (None,) * 5)
+    return rows
+
+
+# codec name -> (DDL output schema, (media_id, bytes) -> list[tuple]).
+# The pixel codecs emit per-channel sums (NULL past the image's channel
+# count) and global extrema; the *_interlaced ones add the raster-position
+# weighted channel-0 sum that pins every deinterlace pass's placement.
+CODECS = {
+    "image_dims": (DIMS_SCHEMA, _image_dims_rows),
+    "png": _status_codec(PIXEL_SCHEMA, _decode_png_pixels_one, _pixel_ok),
+    "png_interlaced": _status_codec(
+        POS_PIXEL_SCHEMA, _decode_png_interlaced_one, _pos_pixel_ok
+    ),
+    "jpeg": _status_codec(PIXEL_SCHEMA, _decode_jpeg_pixels_one, _pixel_ok),
+    "gif": _status_codec(PIXEL_SCHEMA, _decode_gif_one, _pixel_ok),
+    "gif_interlaced": _status_codec(
+        POS_PIXEL_SCHEMA, _decode_gif_interlaced_one, _pos_pixel_ok
+    ),
+    "wav": _status_codec(AUDIO_SCHEMA, _decode_wav_one, _wav_ok),
+    "wav_windows": (AUDIO_WINDOW_SCHEMA, _wav_window_rows),
+    "adpcm": _status_codec(ADPCM_SCHEMA, _decode_adpcm_one, _adpcm_ok),
+    "avi": _status_codec(VIDEO_SCHEMA, _decode_avi_one, _avi_ok),
+    "mjpeg": (MJPEG_SCHEMA, _mjpeg_rows),
+}
+
+_NULLABLE_DTYPE = {"int": "Int32", "bigint": "Int64"}
+
+
+def decode_media(media: DataFrame, codec: str) -> DataFrame:
+    """Decode (media_id, content) through CODECS[codec] over the
+    Arrow-batched mapInPandas seam. A NULL content cell decodes as b""
+    (so it degrades like any unparseable payload, never a TypeError); the
+    row function may emit 0..n rows per payload. Column names and nullable
+    dtypes come from the codec's schema; media_id stays uncast."""
+    schema, rows_fn = CODECS[codec]
+    fields = [c.split() for c in schema.split(",")]
+    columns = [name for name, _typ in fields]
+    dtypes = {
+        name: _NULLABLE_DTYPE[typ]
+        for name, typ in fields[1:]
+        if typ in _NULLABLE_DTYPE
+    }
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                r = _mjpeg_frames_one(
-                    bytes(buf) if buf is not None else b""
-                )
-                if r is None:
-                    rows.append((mid, None, "unknown") + (None,) * 5)
-                    continue
-                payloads, truncated = r
-                for f, payload in enumerate(payloads):
-                    jr = _decode_jpeg_pixels_one(payload)
-                    if jr is None:
-                        rows.append((mid, f, "unknown") + (None,) * 5)
-                    elif jr[0] == "corrupt":
-                        rows.append(
-                            (mid, f, "corrupt", jr[1], jr[2],
-                             None, None, None)
-                        )
-                    else:
-                        w, h, _ch, sums, mn, mx = jr
-                        rows.append(
-                            (mid, f, "ok", w, h, sums[0], mn, mx)
-                        )
-                if truncated:
-                    rows.append(
-                        (mid, None, "container_truncated") + (None,) * 5
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame", "status", "width", "height",
-                    "c0_sum", "px_min", "px_max",
-                ],
-            ).astype(
-                {
-                    "frame": "Int32", "width": "Int32", "height": "Int32",
-                    "c0_sum": "Int64", "px_min": "Int32", "px_max": "Int32",
-                }
-            )
+                b = bytes(buf) if buf is not None else b""
+                rows.extend(rows_fn(int(mid), b))
+            yield pd.DataFrame(rows, columns=columns).astype(dtypes)
 
-    return media.mapInPandas(_decode, schema=MJPEG_SCHEMA)
+    return media.mapInPandas(_decode, schema=schema)

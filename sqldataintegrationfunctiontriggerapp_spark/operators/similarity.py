@@ -1752,7 +1752,7 @@ def pq_fit_multi(
     another can derive the second seed driver-side and skip its sample
     job). An empty seed yields [] for that variant, matching pq_fit.
 
-    `k` bounds the codebook size each seed may carry (asserted -- the
+    `k` bounds the codebook size each seed may carry (ValueError -- the
     actual size is len(seed), matching pq_fit where a short sample yields
     a short book). `via_blas`, when unset, is decided ONCE from
     corpora[0]'s row count and applied to every variant (ADVICE r15): the
@@ -1767,7 +1767,11 @@ def pq_fit_multi(
 
     w = dim // m
     for seed in seeds:
-        assert len(seed) <= k, (len(seed), k)
+        if len(seed) > k:
+            raise ValueError(
+                f"pq_fit_multi: seed has {len(seed)} rows, more than the "
+                f"codebook size k={k}"
+            )
     if via_blas is None:
         via_blas = corpora[0].count() > _PQ_BLAS_MIN_ROWS
     books_per: list[list[list[list[float]]] | None] = [

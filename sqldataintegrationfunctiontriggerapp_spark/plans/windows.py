@@ -2591,15 +2591,17 @@ def streaming_media_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     tracks source offsets only; the decode itself is the measured
     Arrow-batch path of multimodal_decode_adpcm."""
     from sqldataintegrationfunctiontriggerapp_spark.operators.multimodal import (
-        decode_adpcm_samples,
-        synth_adpcm_media,
+        _adpcm_full_bytes,
+        decode_media,
+        synth_media,
     )
 
     state: dict = {"n": 0, "parts": []}
 
     def fb(batch_df: DataFrame, epoch_id: int) -> None:
         state["n"] += 1
-        out = decode_adpcm_samples(synth_adpcm_media(batch_df))
+        media = synth_media(batch_df, _adpcm_full_bytes)
+        out = decode_media(media, "adpcm")
         state["parts"].append(
             out.withColumn(
                 "ingest_batch", F.lit(state["n"]).cast("int")

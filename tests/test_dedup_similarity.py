@@ -3,6 +3,7 @@ LSH recall vs the exact baselines, simhash locality, multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
@@ -77,22 +78,13 @@ def test_lsh_topk_subset_of_bruteforce_corpus(spark, sf_dir):
 
 def test_multimodal_stub_features(spark, sf_dir):
     media = MM.documents_as_media(load_table(spark, sf_dir, "documents"))
-    feats = MM.extract_features(media, decode_stub=True)
+    feats = MM.extract_features(media)
     rows = feats.limit(5).collect()
     assert rows and all(0 <= r.feature_0 < 1 for r in rows)
     assert all(r.byte_len >= 1 for r in rows)
     # determinism: same input => same features
     again = {r.media_id: r.feature_0 for r in feats.limit(5).collect()}
     assert {r.media_id: r.feature_0 for r in rows} == again
-
-
-def test_multimodal_stub_raises_without_decoder(spark, sf_dir):
-    import pytest
-
-    media = MM.documents_as_media(load_table(spark, sf_dir, "documents")).limit(1)
-    feats = MM.extract_features(media, decode_stub=False)
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        feats.collect()
 
 
 def test_png_pixel_codec_roundtrip_pure_python():
@@ -978,6 +970,17 @@ def test_pq_fit_multi_matches_sequential_fits_exactly(spark, sf_dir):
     assert fused == solo
 
 
+def test_pq_fit_multi_rejects_seed_larger_than_k(spark):
+    """A seed carrying more pivot rows than the codebook size is a caller
+    mistake: it must raise ValueError naming both lengths, before any
+    Spark job runs."""
+    k = 4
+    seed = [[float(i)] * 8 for i in range(k + 1)]
+    corpus = spark.range(1).select(F.array(*[F.lit(0.0)] * 8).alias("w"))
+    with pytest.raises(ValueError, match=r"5 rows.*k=4"):
+        S.pq_fit_multi([corpus], [seed], m=2, k=k, dim=8, vec_col="w")
+
+
 def test_pq_codes_are_bounded_ints(spark, sf_dir):
     from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
     from sqldataintegrationfunctiontriggerapp_spark.operators import (
@@ -1121,13 +1124,13 @@ def test_minhash_shard_merge_empty_corpus(spark):
 
 
 def test_image_header_parsers_and_corrupt_degradation(spark):
-    """decode_image_dims must parse real PNG/JPEG header bytes and degrade
+    """The 'image_dims' codec must parse real PNG/JPEG header bytes and degrade
     per-row on garbage (format 'unknown', NULL dims) without failing the
     task -- the corrupt-file contract of a media crawl."""
     from sqldataintegrationfunctiontriggerapp_spark.operators.multimodal import (
         _jpeg_bytes,
         _png_bytes,
-        decode_image_dims,
+        decode_media,
     )
 
     # r11 review hardening: a bit-flipped IHDR width field (FF FF FF FF)
@@ -1150,7 +1153,7 @@ def test_image_header_parsers_and_corrupt_degradation(spark):
         (8, None),
     ]
     media = spark.createDataFrame(rows, "media_id bigint, content binary")
-    out = {r.media_id: r for r in decode_image_dims(media).collect()}
+    out = {r.media_id: r for r in decode_media(media, "image_dims").collect()}
     assert (out[1].format, out[1].width, out[1].height,
             out[1].n_channels) == ("png", 800, 600, 4)
     assert (out[2].format, out[2].width, out[2].height,
@@ -1158,6 +1161,70 @@ def test_image_header_parsers_and_corrupt_degradation(spark):
     for bad in (3, 4, 5, 6, 7, 8):
         assert out[bad].format == "unknown", bad
         assert out[bad].width is None and out[bad].n_channels is None
+
+
+# one fixture per codec whose doc_id 1 payload decodes cleanly; a codec
+# added to MM.CODECS without an entry here fails the test below
+_GOOD_FIXTURE = {
+    "image_dims": MM._image_header_bytes,
+    "png": MM._png_full_bytes,
+    "png_interlaced": MM._png_interlaced_bytes,
+    "jpeg": MM._jpeg_full_bytes,
+    "gif": MM._gif_full_bytes,
+    "gif_interlaced": MM._gif_interlaced_bytes,
+    "wav": MM._wav_full_bytes,
+    "wav_windows": MM._wav_full_bytes,
+    "adpcm": MM._adpcm_full_bytes,
+    "avi": MM._avi_full_bytes,
+    "mjpeg": MM._mjpeg_full_bytes,
+}
+
+
+@pytest.mark.parametrize("codec", sorted(MM.CODECS))
+def test_codec_degrades_bad_payloads_per_row(spark, codec):
+    """The shared degradation contract of decode_media, for every codec: a
+    NULL cell, empty bytes and junk each degrade their own row ('unknown'
+    with NULL fields; mjpeg one frame=NULL row; WAV windows no rows)
+    while the good fixture row in the same batch decodes, and the output
+    columns carry exactly the codec's declared names and types."""
+    schema, _rows_fn = MM.CODECS[codec]
+    media = spark.createDataFrame(
+        [
+            (1, bytearray(_GOOD_FIXTURE[codec](1))),
+            (2, None),
+            (3, bytearray(b"")),
+            (4, bytearray(b"junk, not a media payload")),
+        ],
+        "media_id bigint, content binary",
+    ).coalesce(1)
+    out = MM.decode_media(media, codec)
+    declared = [tuple(c.split()) for c in schema.split(",")]
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == (
+        declared
+    )
+    rows = out.collect()
+    good = [r for r in rows if r.media_id == 1]
+    bad = sorted((r for r in rows if r.media_id != 1), key=lambda r: r[0])
+    assert good
+    if codec == "wav_windows":
+        assert bad == []
+        return
+    assert [r.media_id for r in bad] == [2, 3, 4]
+    if codec == "mjpeg":
+        assert all(r.status == "ok" for r in good)
+        for r in bad:
+            assert r.frame is None and r.status == "unknown"
+            assert all(v is None for v in r[3:])
+    elif codec == "image_dims":
+        assert good[0].format == "jpeg" and good[0].width == 2
+        for r in bad:
+            assert r.format == "unknown"
+            assert all(v is None for v in r[2:])
+    else:
+        assert good[0].status == "ok"
+        for r in bad:
+            assert r.status == "unknown"
+            assert all(v is None for v in r[2:])
 
 
 def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
@@ -1271,7 +1338,7 @@ def test_wav_window_features_match_closed_form(spark):
     20 frames over channel 0, energy and zero-crossings equal the
     fixture's closed form."""
     docs = spark.createDataFrame([(7,), (54,)], "doc_id long")
-    out = MM.wav_window_features(MM.synth_wav_media(docs), window=20)
+    out = MM.decode_media(MM.synth_media(docs, MM._wav_full_bytes), "wav_windows")
     got = {(r.media_id, r.win): (r.n_frames, r.abs_sum, r.zero_crossings)
            for r in out.collect()}
     for did in (7, 54):
@@ -1312,7 +1379,7 @@ def test_wav_window_features_never_throw_on_multi_data_chunks(spark):
     media = spark.createDataFrame(
         [(did, bytearray(evil))], "media_id long, content binary"
     )
-    out = MM.wav_window_features(media, window=20).collect()
+    out = MM.decode_media(media, "wav_windows").collect()
     # no task failure, and features come from the real (last) data chunk
     ch0 = [MM._wav_sample(did, i, 0) for i in range(nf)]
     got = {(row.win): (row.n_frames, row.abs_sum) for row in out}

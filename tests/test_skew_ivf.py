@@ -110,6 +110,10 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+        # pinned, not inherited from the core count: with as few shuffle
+        # partitions as 4 cores the hot partition never exceeds 2x the
+        # median, so AQE has nothing to split
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

@@ -2475,7 +2475,8 @@ def _status_codec(schema: str, decode_one, ok):
 
 def _pixel_ok(r) -> tuple:
     w, h, ch, sums, mn, mx = r
-    return (w, h, ch, *sums, *[None] * (3 - len(sums)), mn, mx)
+    s = (sums + [None] * 3)[:3]
+    return (w, h, ch, *s, mn, mx)
 
 
 def _pos_pixel_ok(r) -> tuple:

@@ -1227,6 +1227,40 @@ def test_codec_degrades_bad_payloads_per_row(spark, codec):
             assert all(v is None for v in r[2:])
 
 
+def test_png_rgba_decodes_ok_with_three_channel_sums(spark):
+    """An 8-bit RGBA PNG (color_type 6) decodes 'ok': the schema carries
+    three channel sums, so the alpha sum is dropped rather than widening
+    the row past PIXEL_SCHEMA and failing the task."""
+    import zlib
+
+    w, h = 3, 2
+    px = [(x * 10 + y, 50 + x, 100 + y, 200 + x + y)
+          for y in range(h) for x in range(w)]
+    raw = b"".join(
+        b"\x00" + bytes(v for p in px[y * w:(y + 1) * w] for v in p)
+        for y in range(h)
+    )
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + MM._png_chunk(
+            b"IHDR",
+            w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 6, 0, 0, 0]),
+        )
+        + MM._png_chunk(b"IDAT", zlib.compress(raw))
+        + MM._png_chunk(b"IEND", b"")
+    )
+    media = spark.createDataFrame(
+        [(1, bytearray(png)), (2, bytearray(MM._png_full_bytes(1)))],
+        "media_id bigint, content binary",
+    ).coalesce(1)
+    out = {r.media_id: r for r in MM.decode_media(media, "png").collect()}
+    r = out[1]
+    assert (r.status, r.width, r.height, r.n_channels) == ("ok", w, h, 4)
+    assert (r.c0_sum, r.c1_sum, r.c2_sum) == tuple(
+        sum(p[c] for p in px) for c in range(3)
+    )
+    assert out[2].status == "ok"
+
 def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
     """The r11 stage-materialization contract (plans/dedup.py
     _truthful_ckpt): the returned frame must (a) keep the materialized

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from sqldataintegrationfunctiontriggerapp_spark.session import get_session
+from sqldataintegrationfunctiontriggerapp_spark.session import DEFAULT_CPUS, get_session
 
 
 def _warm_fn(s: pd.Series) -> pd.Series:
@@ -120,7 +120,7 @@ def main() -> None:
     # not inside the first measured pandas_udf query (real clusters run
     # long-lived workers; first-fork cost is deployment, not query, time)
     warm_udf = F.pandas_udf(_warm_fn, "long")  # needs the active session
-    spark.range(10_000).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
+    spark.range(10_000).repartition(int(DEFAULT_CPUS)) \
         .select(warm_udf("id")).write.mode("overwrite").format("noop").save()
     # Python-decode-path warmup at the smallest OTHER SF (OPTIMIZATION
     # r15, path derivation fixed r16 per VERDICT r15 #8 / ADVICE): the

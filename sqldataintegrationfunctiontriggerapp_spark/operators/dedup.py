@@ -417,7 +417,19 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     stays distributed; the driver sees only a one-row convergence count per
     round. Lineage is truncated per round with localCheckpoint so the plan
     does not grow exponentially across iterations.
+
+    Node ids must be integral or string: the driver route orders ids with
+    Python ``<`` and the distributed route with Spark ``least``/``min``, and
+    for other types (NaN doubles, decimals) the two can disagree, so any
+    other id type raises ``ValueError``.
     """
+    for col in (src, dst):
+        id_type = edges.schema[col].dataType
+        if not isinstance(id_type, (T.IntegralType, T.StringType)):
+            raise ValueError(
+                f"connected_components: node id column {col!r} is "
+                f"{id_type.simpleString()}; ids must be integral or string"
+            )
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = sym.union(
         sym.select(F.col("v").alias("u"), F.col("u").alias("v"))

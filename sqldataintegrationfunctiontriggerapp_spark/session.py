@@ -23,7 +23,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[] width: the cores this process may run on, unless overridden
+DEFAULT_CPUS = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
 
 # Explode-aware bytes-derived shuffle sizing (VERDICT r10 #3, reworked per
 # VERDICT r12 #2, generalized per VERDICT r13 #3): one reduce partition per

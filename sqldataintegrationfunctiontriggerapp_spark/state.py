@@ -11,11 +11,16 @@ Storage: a parquet directory laid out as
 ``entity_type=<t>/bucket=<md5(key) % N>/``; an upsert reads, merges, and
 overwrites ONLY the one (entity_type, bucket) partition its key hashes to,
 so concurrent upserts against different tables touch disjoint files and the
-write cost is O(keys-in-bucket), never O(state). Point lookups (`get`) read
-one partition directory. On a cluster this layout maps 1:1 onto a Delta
-table partitioned the same way with `MERGE INTO`; the API is shaped so that
-swap is one method body. The md5 bucket (not Spark's hash()) keeps the
-layout engine-portable and stable across versions.
+write cost is O(keys-in-bucket), never O(state). Point operations (`get`
+and the read half of `upsert`) read that one partition directory on the
+driver with pyarrow: no Spark job is planned or run, so the allowlist read
+every micro-batch makes costs milliseconds, not a job launch. There is no
+cache -- every call re-reads the directory, so a write between two batches
+applies to the second. Only the analytic scan (`as_dataframe`) and the
+partition rewrite go through Spark. On a cluster this layout maps 1:1 onto
+a Delta table partitioned the same way with `MERGE INTO`; the API is shaped
+so that swap is one method body. The md5 bucket (not Spark's hash()) keeps
+the layout engine-portable and stable across versions.
 """
 
 from __future__ import annotations
@@ -24,6 +29,8 @@ import hashlib
 import os
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,6 +78,40 @@ def key_bucket(key: str, n_buckets: int = N_BUCKETS) -> int:
     return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % n_buckets
 
 
+def _read_rows(part_dir: str) -> list[tuple[str, str | None, datetime]]:
+    """Every (key, value, updated_at) row of one partition directory, read
+    on the driver. A missing directory or one without data files is empty;
+    Spark's `_SUCCESS` and `.crc` side files are skipped, and a directory
+    holding several part files is read whole. Spark stores updated_at as
+    INT96, a naive stamp of the UTC instant; it is read at microsecond
+    unit (Spark's precision; nanoseconds overflow past year 2262) and comes
+    back as an aware UTC datetime, so a rewrite stores the same instant."""
+    try:
+        names = sorted(os.listdir(part_dir))
+    except FileNotFoundError:
+        return []
+    rows: list[tuple[str, str | None, datetime]] = []
+    for name in names:
+        if name.startswith(("_", ".")):
+            continue
+        t = pq.read_table(os.path.join(part_dir, name),
+                          columns=["key", "value", "updated_at"],
+                          coerce_int96_timestamp_unit="us")
+        ts = t.column("updated_at").cast(pa.timestamp("us", tz="UTC"))
+        rows.extend(zip(t.column("key").to_pylist(),
+                        t.column("value").to_pylist(), ts.to_pylist()))
+    return rows
+
+
+def _latest(rows: list[tuple[str, str | None, datetime]]) -> dict[str, tuple]:
+    """key -> (value, updated_at) of its latest-stamped row. Only a crashed
+    writer leaves two rows for one key; the latest stamp resolves them."""
+    latest: dict[str, tuple] = {}
+    for k, v, ts in sorted(rows, key=lambda r: r[2]):
+        latest[k] = (v, ts)
+    return latest
+
+
 class StateStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -82,11 +123,6 @@ class StateStore:
             f"entity_type={entity_type}",
             f"bucket={key_bucket(key)}",
         )
-
-    def _read_partition(self, part_dir: str) -> DataFrame:
-        if not os.path.isdir(part_dir):
-            return _local_df(self.spark, [], _PART_SCHEMA)
-        return self.spark.read.schema(_PART_SCHEMA).parquet(part_dir)
 
     def _read(self) -> DataFrame:
         if not os.path.isdir(self.path) or not os.listdir(self.path):
@@ -119,23 +155,16 @@ class StateStore:
         (EntityFunctions.cs:17-21) -- and it makes the merge deterministic
         where a timestamp comparison would break ties by collect() order.
         Pinned by tests/test_state_retry.py (clock-skew case)."""
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc)
         part_dir = self._partition_dir(entity_type, key)
         # The partition is tiny BY CONSTRUCTION (one row per table in this
-        # bucket), so the last-writer-wins merge happens driver-side: one
-        # bounded collect + one single-file overwrite. The previous shape
-        # (unionByName + row_number window) planned a full shuffle --
-        # measured at ~5 s per upsert under spark.sql.shuffle.partitions=32
-        # for a ONE-ROW merge, which dominated the pipeline-parity run. At
-        # scale this method's contract is unchanged: cost is O(keys in this
-        # bucket), never O(state); a Delta deployment swaps the body for
-        # MERGE INTO on the same (entity_type, bucket) partition.
-        latest: dict[str, tuple] = {}
-        for r in sorted(
-            self._read_partition(part_dir).collect(),
-            key=lambda r: r["updated_at"],
-        ):
-            latest[r["key"]] = (r["value"], r["updated_at"])
+        # bucket), so the last-writer-wins merge happens on the driver: one
+        # read (_read_rows, no Spark job) + one single-file overwrite. A
+        # Spark-side merge (union + row_number window) plans a shuffle for a
+        # one-row merge. Cost is O(keys in this bucket), never O(state); a
+        # Delta deployment swaps the body for MERGE INTO on the same
+        # (entity_type, bucket) partition.
+        latest = _latest(_read_rows(part_dir))
         latest[key] = (value, now)
         rows = [(k, v, ts) for k, (v, ts) in latest.items()]
         out = _local_df(self.spark, rows, _PART_SCHEMA)
@@ -143,14 +172,9 @@ class StateStore:
 
     def get(self, entity_type: str, key: str) -> str | None:
         """Keyed point lookup (ClientAllowedColumnsFunction.cs:47-56): reads
-        exactly one partition directory."""
-        rows = (
-            self._read_partition(self._partition_dir(entity_type, key))
-            .where(F.col("key") == key)
-            .select("value")
-            .collect()
-        )
-        return rows[0]["value"] if rows else None
+        exactly one partition directory on the driver, no Spark job."""
+        hit = _latest(_read_rows(self._partition_dir(entity_type, key))).get(key)
+        return hit[0] if hit else None
 
     def save_last_error(self, table: str, message: str) -> None:
         """A10: LastError upsert with UTC stamp (EntityFunctions.cs:17-21,

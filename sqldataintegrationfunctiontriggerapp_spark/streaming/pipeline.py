@@ -2,7 +2,10 @@
 (SqlTriggerFunctions/ExecuteTriggerHelper.cs:28-158).
 
 Reference lifecycle per batch (SURVEY.md §3.1):
-  1. read client allowlist from entity state        (:49)   -> StateStore
+  1. read client allowlist from entity state        (:49)   -> StateStore.get
+     (re-read every batch, no cache; a driver-side read of one partition
+     directory that runs no Spark job, so the sink's POST job is the
+     batch's only job)
   2. read config allowlist from env                 (:57)   -> EngineSettings
   3. union case-insensitively                       (:65-86)
   4. project each row to the allowlist              (:89-113)

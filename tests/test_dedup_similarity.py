@@ -599,6 +599,18 @@ def test_frame_sample_offsets(spark, sf_dir):
     assert bad.count() == 0
 
 
+def test_connected_components_rejects_non_integral_ids(spark):
+    """Python ``<`` (driver route) and Spark ``min`` (distributed route) can
+    order double ids differently (NaN), so the gate refuses them on both
+    routes instead of letting the routes diverge."""
+    edges = spark.createDataFrame(
+        [(1.0, 2.0), (2.0, float("nan"))], "doc_a double, doc_b double"
+    )
+    for driver_max_edges in (None, -1):
+        with pytest.raises(ValueError, match="doc_a.*double"):
+            D.connected_components(edges, driver_max_edges=driver_max_edges)
+
+
 def test_connected_components_chain_and_islands(spark):
     """A 6-node chain (worst case for label propagation: full diameter) plus
     a 2-node island and a triangle must resolve to min-id components in the

@@ -159,6 +159,41 @@ def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline,
     assert sum(len(req) for req in handler.received) == 40
 
 
+def _small_batch(spark, n):
+    return spark.createDataFrame(
+        [(i, i % 3, "click", float(i), "Insert") for i in range(n)],
+        "event_id long, user_id long, event_type string, value double, "
+        "operation string",
+    )
+
+
+def test_process_batch_runs_one_spark_job(spark, pipeline, count_jobs):
+    """A micro-batch runs exactly one Spark job, the sink's: resolving the
+    allowlist from entity state is a driver-side read."""
+    pipe, handler, state = pipeline
+    state.save_allowed_columns("events", "value")
+    batch = _small_batch(spark, 5)
+    assert count_jobs(pipe.process_batch, batch, "events") == (5, 1)
+    assert sum(len(req) for req in handler.received) == 5
+
+
+def test_allowlist_saved_between_batches_applies_to_next(spark, pipeline):
+    """No allowlist cache: a client allowlist saved between two batches
+    (ClientAllowedColumnsFunction.cs:16-26) shapes the second batch, as the
+    reference's per-invocation entity read does (ExecuteTriggerHelper.cs:49)."""
+    pipe, handler, state = pipeline
+    pipe.process_batch(_small_batch(spark, 3), "events")
+    first = [doc["item"] for req in handler.received for doc in req]
+    handler.received.clear()
+    state.save_allowed_columns("events", "value")
+    pipe.process_batch(_small_batch(spark, 3), "events")
+    second = [doc["item"] for req in handler.received for doc in req]
+    assert {tuple(sorted(i)) for i in first} == {
+        ("event_id", "event_type", "user_id")}
+    assert {tuple(sorted(i)) for i in second} == {
+        ("event_id", "event_type", "user_id", "value")}
+
+
 def test_backoff_schedule_first_10s(http_server):
     """A15 first backoff = 10 s (RetryFunctions.cs:44), asserted against the
     driver-side post path where the sleeper is observable."""

@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
+from pathlib import Path
 
 from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
 from sqldataintegrationfunctiontriggerapp_spark.maintenance import purge_history
@@ -15,7 +16,12 @@ from sqldataintegrationfunctiontriggerapp_spark.retry import (
     rearm_attempt_count,
     timed_out,
 )
-from sqldataintegrationfunctiontriggerapp_spark.state import StateStore
+from sqldataintegrationfunctiontriggerapp_spark.state import (
+    _PART_SCHEMA,
+    StateStore,
+    _local_df,
+    key_bucket,
+)
 
 
 def test_state_upsert_and_point_lookup(spark, tmp_path):
@@ -81,6 +87,57 @@ def test_state_upsert_incoming_wins_under_clock_skew(spark, tmp_path):
     # one row per key survives the merge, future stamp notwithstanding
     rows = st.as_dataframe().where("key = 't1'").collect()
     assert len(rows) == 1 and rows[0]["value"] == "incoming"
+
+
+def test_state_get_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """Point reads are driver-side: the allowlist lookup every micro-batch
+    makes must not plan or run a Spark job."""
+    st = StateStore(spark, str(tmp_path / "state"))
+    st.save_allowed_columns("t1", "a,b")
+    assert count_jobs(st.get_allowed_columns, "t1") == ("a,b", 0)
+    assert count_jobs(st.get_allowed_columns, "missing") == (None, 0)
+
+
+def test_state_upsert_leaves_bucket_neighbours_exact(spark, tmp_path):
+    """The upsert rewrites its whole (entity_type, bucket) partition, so the
+    other keys in that bucket are read and written back: each must keep its
+    value AND its updated_at to the microsecond, including a stamp past
+    year 2262 (out of range for nanosecond timestamps)."""
+    keys = [f"t{i}" for i in range(200)]
+    a, b, c = [k for k in keys if key_bucket(k) == key_bucket(keys[0])][:3]
+    st = StateStore(spark, str(tmp_path / "state"))
+    st.save_allowed_columns(a, "a0")
+    st.save_allowed_columns(b, "b0")
+    _local_df(spark, [(c, None, datetime(2999, 1, 1, 0, 0, 0, 123456))],
+              _PART_SCHEMA).write.mode("append").parquet(
+                  st._partition_dir("AllowedColumns", c))
+
+    def rows():
+        return {r["key"]: (r["value"], r["updated_at"])
+                for r in st.as_dataframe().collect()}
+
+    before = rows()
+    st.save_allowed_columns(a, "a1")
+    after = rows()
+    assert after[a][0] == "a1"
+    assert {k: after[k] for k in (b, c)} == {k: before[k] for k in (b, c)}
+    assert before[c] == (None, datetime(2999, 1, 1, 0, 0, 0, 123456))
+    assert st.get_allowed_columns(b) == "b0"
+
+
+def test_state_get_missing_or_empty_partition_is_none(spark, tmp_path):
+    """No directory, a directory holding only Spark's side files, and one
+    holding an empty part file all read as 'no value'."""
+    st = StateStore(spark, str(tmp_path / "state"))
+    assert st.get("LastError", "t1") is None
+    part_dir = Path(st._partition_dir("LastError", "t1"))
+    part_dir.mkdir(parents=True)
+    (part_dir / "_SUCCESS").write_bytes(b"")
+    (part_dir / "._SUCCESS.crc").write_bytes(b"crc")
+    assert st.get("LastError", "t1") is None
+    _local_df(spark, [], _PART_SCHEMA).write.mode("overwrite").parquet(
+        str(part_dir))
+    assert st.get("LastError", "t1") is None
 
 
 def test_cli_shim_get_set(spark, tmp_path):

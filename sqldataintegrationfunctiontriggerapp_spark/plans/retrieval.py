@@ -261,15 +261,20 @@ def frequent_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_ = baskets.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # Materialize L1 once (OPTIMIZATION r16, the triples fix applied to
     # the pair entry it came from): both self-join sides re-ran the
-    # tokenize+explode+distinct+df chain (plan audit: 30 Exchanges).
+    # tokenize+explode+distinct+df chain (plan audit: 30 Exchanges). The
+    # session stage memoizes it per sf_dir and hands cleanup to the ledger.
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+        session_stage,
         truthful_ckpt,
     )
 
-    l1 = truthful_ckpt(
-        baskets.join(df_.hint("merge"), "term")
-        .crossJoin(F.broadcast(n))
-        .where(F.col("df") * _MINSUP_DEN >= F.col("n_docs") * _MINSUP_NUM)
+    l1 = session_stage(
+        spark, sf_dir, "frequent_pairs_l1",
+        lambda: truthful_ckpt(
+            baskets.join(df_.hint("merge"), "term")
+            .crossJoin(F.broadcast(n))
+            .where(F.col("df") * _MINSUP_DEN >= F.col("n_docs") * _MINSUP_NUM)
+        ),
     )
     a = l1.select(
         "doc_id",
@@ -374,7 +379,7 @@ def frequent_term_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = d.select("doc_id", F.explode(TX.tokens("text")).alias("term")).distinct()
     n = baskets.agg(F.count_distinct("doc_id").alias("n_docs"))
     df_ = baskets.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    l1 = (
+    l1_plan = (
         baskets.join(df_.hint("merge"), "term")
         .crossJoin(F.broadcast(n))
         .where(F.col("df") * _MINSUP_DEN >= F.col("n_docs") * _MINSUP_NUM)
@@ -389,12 +394,16 @@ def frequent_term_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frequent term), bounded by the >=50%-support singleton set. The
     # WIDE intermediates (pair_docs) stay lazy -- checkpointing one of
     # those was measured strictly worse (151 MB materialization at
-    # sf0.1) than recomputing the now-cheap 2-column self-join.
+    # sf0.1) than recomputing the now-cheap 2-column self-join. Its own
+    # session stage: this L1 drops the df column the pair entry keeps.
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+        session_stage,
         truthful_ckpt,
     )
 
-    l1 = truthful_ckpt(l1)
+    l1 = session_stage(
+        spark, sf_dir, "frequent_triples_l1", lambda: truthful_ckpt(l1_plan)
+    )
     a = l1.select("doc_id", F.col("term").alias("t1"), "n_docs")
     c = l1.select("doc_id", F.col("term").alias("t2"))
     pair_docs = (

@@ -10,6 +10,12 @@ are chosen so the same code scales to a 1000-executor cluster reading 100 TB:
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle
   and are cluster-location-independent.
 - Arrow enabled for the Pandas-UDF slow path (similarity / multimodal ops).
+- Python workers fork from ``_daemon``, not ``pyspark.daemon``: on CPython
+  < 3.13 pyspark's per-task ``importlib.invalidate_caches()`` makes every
+  zipimporter re-read pyspark.zip and the spark-core jar, 0.18-0.25 s per
+  task; the daemon backports 3.13's lazy re-read, so a one-task sink batch
+  stops paying it. ``spark.executorEnv.PYTHONPATH`` names the repo root so
+  the daemon imports from any driver working directory.
 
 At cluster scale the caller overrides ``shuffle_partitions`` (rule of thumb:
 2-3x total executor cores, or rely on AQE coalescing from a high initial
@@ -22,6 +28,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # local[] width: the cores this process may run on, unless overridden
 DEFAULT_CPUS = os.environ.get(
@@ -166,6 +174,15 @@ def get_session(
         # type, so read the raw int64 and convert in the catalog (floor to
         # microseconds, matching DuckDB's ns->us coercion).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers fork from the engine's daemon (see _daemon.py),
+        # which must import from any driver cwd; functions pickled by
+        # reference (foreachBatch, mapInPandas decoders) need the package
+        # too. Local and same-host standalone get it via PYTHONPATH; a
+        # multi-node deployment ships a wheel through --py-files /
+        # spark.submit.pyFiles instead.
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
+        .config("spark.python.daemon.module",
+                "sqldataintegrationfunctiontriggerapp_spark._daemon")
     )
     if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
         builder = builder.config(
@@ -175,17 +192,6 @@ def get_session(
         builder = builder.config(
             "spark.executor.memory", os.environ["SPARK_GRAFT_EXECUTOR_MEM"]
         )
-    if os.environ.get("SPARK_GRAFT_MASTER") and master is None:
-        # Cluster executors spawn their own Python workers, which need the
-        # engine package importable: functions pickled by reference (the
-        # streaming foreachBatch path, mapInPandas decoders) resolve their
-        # module at unpickle time. Same-host standalone gets it via
-        # PYTHONPATH; a real multi-node deployment ships a wheel through
-        # --py-files / spark.submit.pyFiles instead.
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__))
-        )
-        builder = builder.config("spark.executorEnv.PYTHONPATH", repo_root)
     # SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs applied before
     # the caller's extra_conf -- lets experiments (e.g. the r14 forced
     # network-shuffle run: spark.shuffle.readHostLocalDisk=false;

@@ -565,3 +565,74 @@ def test_ivm_retract_refresh_chained_and_out_of_order(spark):
         20: ("click", 2.0),
         30: ("click", 1.0),
     }
+
+
+def _funnel_reference(events):
+    """Per user: first view, first click strictly after it, first purchase
+    strictly after that click; counts of users reaching each stage."""
+    by_user = {}
+    for user, ts, kind in events:
+        by_user.setdefault(user, []).append((ts, kind))
+    counts = [0, 0, 0]
+    for rows in by_user.values():
+        cut = None
+        for stage, kind in enumerate(("view", "click", "purchase")):
+            hits = [ts for ts, k in rows if k == kind and (cut is None or ts > cut)]
+            if not hits:
+                break
+            cut = min(hits)
+            counts[stage] += 1
+    return tuple(counts)
+
+
+def test_funnel_analysis_matches_per_user_reference(spark, tmp_path):
+    """The chained-MIN-window funnel (OPTIMIZATION r16) against a plain
+    per-user walk, over events built to hit each boundary."""
+    from datetime import datetime as DT, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = DT(2024, 1, 1)
+
+    def at(minutes):
+        return t0 + timedelta(minutes=minutes)
+
+    events = [
+        # 1: full funnel, with a second view after the first
+        (1, at(0), "view"), (1, at(5), "view"), (1, at(1), "click"),
+        (1, at(2), "purchase"),
+        # 2: no view at all -- counted nowhere
+        (2, at(1), "click"), (2, at(2), "purchase"),
+        # 3: click only before the first view -- viewed, not clicked
+        (3, at(0), "click"), (3, at(1), "view"), (3, at(3), "purchase"),
+        # 4: click before and after the view -- the later one counts
+        (4, at(0), "click"), (4, at(2), "view"), (4, at(3), "click"),
+        (4, at(4), "purchase"),
+        # 5: click at the view's timestamp is not after it
+        (5, at(7), "view"), (5, at(7), "click"), (5, at(8), "purchase"),
+        # 6: purchase at the click's timestamp is not after it
+        (6, at(0), "view"), (6, at(1), "click"), (6, at(1), "purchase"),
+        # 7: repeated purchases count the user once
+        (7, at(0), "view"), (7, at(1), "click"), (7, at(2), "purchase"),
+        (7, at(3), "purchase"), (7, at(3), "purchase"),
+        # 8: purchase before the click only -- clicked, not purchased
+        (8, at(0), "view"), (8, at(1), "purchase"), (8, at(2), "click"),
+        # 9: off-funnel event types are ignored
+        (9, at(0), "view"), (9, at(1), "cart"), (9, at(2), "click"),
+    ]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(events)), pa.int64()),
+            "ts": pa.array([e[1] for e in events], pa.timestamp("us")),
+            "user_id": pa.array([e[0] for e in events], pa.int64()),
+            "event_type": [e[2] for e in events],
+            "value": pa.array([1.0] * len(events)),
+            "props": pa.array(["{}"] * len(events)),
+        }),
+        tmp_path / "events.parquet",
+    )
+    expected = _funnel_reference(events)
+    assert expected == (8, 6, 3)  # the cases above, counted by hand
+    row = entrymod.queries()["funnel_analysis"](spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in row] == [expected]

@@ -25,8 +25,9 @@ def _mk_stage(spark, name: str, builds: dict):
     return U.session_stage(spark, "/ledger-test", name, build)
 
 
-def _drop_test_stages():
-    for key in [k for k in U._STAGE_CACHE if k[1] == "/ledger-test"]:
+def _drop_test_stages(sf_dir="/ledger-test", name=None):
+    for key in [k for k in U._STAGE_CACHE
+                if k[1] == sf_dir and name in (None, k[2])]:
         U._release_stage(U._STAGE_CACHE[key])
         del U._STAGE_CACHE[key]
         U._STAGE_META.pop(key, None)
@@ -203,3 +204,22 @@ def test_truthful_ckpt_family_bound_leaves_small_sessions_alone(
     finally:
         for m in members:
             U._release_stage(m)
+
+
+def test_frequent_term_l1_is_one_session_stage_per_entry(spark, sf_dir,
+                                                         count_jobs):
+    """ADVICE r16: each frequent-term entry memoizes its own L1 (the two
+    frames differ), so a repeated build reuses the materialization instead
+    of running the L1 jobs again; the ledger owns its cleanup."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    for entry, stage in (("frequent_term_pairs", "frequent_pairs_l1"),
+                         ("frequent_term_triples", "frequent_triples_l1")):
+        _drop_test_stages(sf_dir, stage)
+        _, first_jobs = count_jobs(queries[entry], spark, sf_dir)
+        key = (spark.sparkContext.applicationId, sf_dir, stage)
+        l1 = U._STAGE_CACHE[key]
+        _, again_jobs = count_jobs(queries[entry], spark, sf_dir)
+        assert U._STAGE_CACHE[key] is l1
+        assert again_jobs < first_jobs

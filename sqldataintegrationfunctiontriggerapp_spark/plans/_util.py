@@ -18,7 +18,7 @@ whole-stage codegen; at 100 TB it changes nothing about the plan shape
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,6)"
@@ -449,3 +449,38 @@ def revenue_col(alias: str = "revenue") -> Column:
 
 def sql_revenue(alias: str = "revenue") -> str:
     return sql_dsum(SQL_REVENUE_EXPR, alias)
+
+
+def shared_pair_counts(
+    df: DataFrame, key: str, item: str, a: str, b: str, n: str
+) -> DataFrame:
+    """For every pair of distinct ``item`` values ``a < b``, the number of
+    ``key`` values carried by both: ``(a, b, n)`` rows, pairs sharing no
+    key omitted. One key-grain aggregate (OPTIMIZATION r16) collects each
+    key's sorted item set and expands it to its a<b pairs -- the counts of
+    the key-joined self-join without its second evaluation of ``df`` or
+    its two string-key sorts. The expansion is bounded by |items|^2 per
+    key, so ``item`` must be low-cardinality (sources, not documents)."""
+    ss = F.col("ss")
+    # transform's index i is 0-based and slice is 1-based: the slice from
+    # i + 2 holds the items after x, so each pair is emitted once
+    pairs = F.flatten(
+        F.transform(
+            ss,
+            lambda x, i: F.transform(
+                F.slice(
+                    ss, i + F.lit(2),
+                    F.greatest(F.size(ss) - i - 1, F.lit(0)),
+                ),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+    return (
+        df.groupBy(key)
+        .agg(F.sort_array(F.collect_set(item)).alias("ss"))
+        .where(F.size(ss) >= 2)
+        .select(F.explode(pairs).alias("p"))
+        .groupBy(F.col(f"p.{a}").alias(a), F.col(f"p.{b}").alias(b))
+        .agg(F.count(F.lit(1)).alias(n))
+    )

@@ -18,7 +18,11 @@ from sqldataintegrationfunctiontriggerapp_spark.operators.asof import (
     asof_join,
     asof_join_cogroup,
 )
-from sqldataintegrationfunctiontriggerapp_spark.plans._util import DEC, dsum
+from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+    DEC,
+    dsum,
+    shared_pair_counts,
+)
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 
 _ASOF_ORACLE = """
@@ -1986,38 +1990,11 @@ def kmv_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sizes = tokd.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    # Exact intersections from ONE shingle-grain aggregate (OPTIMIZATION
-    # r16) instead of the tokd-x-tokd self-join: per shingle, the sorted
-    # source set, expanded to its src_a < src_b pairs and counted --
-    # identical counts (each shared shingle contributes exactly its source
-    # pairs) without the second corpus scan and the sort-merge join's two
-    # 52-char-shingle sorts. The pair expansion is bounded by |sources|^2
-    # per shingle -- sources are a handful of crawl snapshots, never
-    # corpus-scale.
-    pair_expand = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(
-                    F.col("ss"), i + F.lit(2),
-                    F.greatest(F.size("ss") - i - 1, F.lit(0)),
-                ),
-                lambda y: F.struct(
-                    x.alias("src_a"), y.alias("src_b")
-                ),
-            ),
-        )
-    )
-    inter = (
-        tokd.groupBy("shingle")
-        .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .where(F.size("ss") >= 2)
-        .select(F.explode(pair_expand).alias("p"))
-        .groupBy(
-            F.col("p.src_a").alias("src_a"),
-            F.col("p.src_b").alias("src_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    # Exact intersections from one shingle-grain aggregate instead of the
+    # tokd-x-tokd self-join; sources are a handful of crawl snapshots, so
+    # the per-shingle pair expansion stays small.
+    inter = shared_pair_counts(
+        tokd, "shingle", "source", "src_a", "src_b", "n_inter"
     )
     ni = F.coalesce(F.col("n_inter"), F.lit(0))
     uni = F.col("sa.n") + F.col("sb.n") - ni

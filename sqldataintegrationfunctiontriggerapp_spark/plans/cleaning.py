@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
 from sqldataintegrationfunctiontriggerapp_spark.functions import text as TX
 from sqldataintegrationfunctiontriggerapp_spark.operators.dedup import word_shingles
-from sqldataintegrationfunctiontriggerapp_spark.plans._util import davg, sql_davg
+from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+    davg,
+    shared_pair_counts,
+    sql_davg,
+)
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 from sqldataintegrationfunctiontriggerapp_spark.plans.text import _docs, _TOKS
 
@@ -289,38 +293,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "shingle")
         .distinct()
     )
-    # Pair counts from ONE shingle-grain aggregate (OPTIMIZATION r16, the
-    # kmv_jaccard_sources exact-audit shape): per shingle the sorted
-    # source set, expanded to its a<b pairs and counted -- identical to
-    # the shingle-keyed self-join (each shared shingle contributes
-    # exactly its source pairs) without the second evaluation of the
-    # explode+distinct chain and the sort-merge join's two string-key
-    # sorts (plan audit: 14 -> 6 Exchanges). The expansion is bounded by
-    # |sources|^2 per shingle.
-    pair_expand = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(
-                    F.col("ss"), i + F.lit(2),
-                    F.greatest(F.size("ss") - i - 1, F.lit(0)),
-                ),
-                lambda y: F.struct(
-                    x.alias("source_a"), y.alias("source_b")
-                ),
-            ),
-        )
-    )
-    return (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .where(F.size("ss") >= 2)
-        .select(F.explode(pair_expand).alias("p"))
-        .groupBy(
-            F.col("p.source_a").alias("source_a"),
-            F.col("p.source_b").alias("source_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
+    return shared_pair_counts(
+        sh, "shingle", "source", "source_a", "source_b", "n_shared_shingles"
     )
 
 

@@ -16,6 +16,18 @@ are chosen so the same code scales to a 1000-executor cluster reading 100 TB:
   task; the daemon backports 3.13's lazy re-read, so a one-task sink batch
   stops paying it. ``spark.executorEnv.PYTHONPATH`` names the repo root so
   the daemon imports from any driver working directory.
+- Streaming checkpoints on a local default filesystem are written through
+  ``FileSystemBasedCheckpointFileManager`` (``use_filesystem_checkpoints``).
+  Spark's default ``FileContext`` manager goes through Hadoop's ``LocalFs``,
+  which, without the native Hadoop library, forks ``readlink`` and ``ls``
+  to resolve symlinks and permissions: ~27 ms per log entry against
+  ~7.5 ms on a 4-core x86 host, and a micro-batch writes three (offset,
+  commit, source log).
+  The two managers differ only for ``createAtomic(overwriteIfPossible=True)``
+  onto an existing file (state-store deltas of a re-executed batch): the
+  FileSystem manager keeps the first file, which Spark's "if possible"
+  contract allows. Other default filesystems, and a manager class the
+  caller set, are left alone.
 
 At cluster scale the caller overrides ``shuffle_partitions`` (rule of thumb:
 2-3x total executor cores, or rely on AQE coalescing from a high initial
@@ -205,4 +217,27 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    use_filesystem_checkpoints(spark)
     return spark
+
+
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def use_filesystem_checkpoints(spark: SparkSession) -> None:
+    """Write this session's streaming checkpoints through the Hadoop
+    FileSystem API when the default filesystem is local (see the module
+    docstring). A manager class already set on the session is kept, and a
+    non-local default filesystem keeps Spark's default manager. The conf
+    is read by ``CheckpointFileManager.create`` at query start, so it
+    applies to every query started afterwards."""
+    if spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is not None:
+        return
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem
+    if fs.getDefaultUri(hadoop_conf).getScheme() == "file":
+        spark.conf.set(_CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)

@@ -45,6 +45,9 @@ def main(argv: list[str]) -> int:
     from pyspark.sql import SparkSession
 
     from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
+    from sqldataintegrationfunctiontriggerapp_spark.session import (
+        use_filesystem_checkpoints,
+    )
     from sqldataintegrationfunctiontriggerapp_spark.sinks.http_sink import HttpSink
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import (
         with_operation,
@@ -73,6 +76,8 @@ def main(argv: list[str]) -> int:
         )
         .getOrCreate()
     )
+    # checkpoint writes go through the same manager as get_session's
+    use_filesystem_checkpoints(spark)
     schema = spark.read.parquet(src_dir).schema
 
     settings = EngineSettings(

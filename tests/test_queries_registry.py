@@ -636,3 +636,40 @@ def test_funnel_analysis_matches_per_user_reference(spark, tmp_path):
     assert expected == (8, 6, 3)  # the cases above, counted by hand
     row = entrymod.queries()["funnel_analysis"](spark, str(tmp_path)).collect()
     assert [tuple(r) for r in row] == [expected]
+
+
+def test_shared_pair_counts_matches_combinations_reference(spark):
+    """The sorted-set a<b pair expansion behind source_overlap_matrix and
+    kmv_jaccard_sources against an itertools.combinations count."""
+    from collections import Counter
+    from itertools import combinations
+
+    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+        shared_pair_counts,
+    )
+
+    rows = [
+        ("s1", "a"),                                        # 1 source
+        ("s1", "b"), ("s2", "b"),                           # 2 sources
+        ("s3", "c"), ("s1", "c"), ("s2", "c"),              # 3, unsorted
+        ("s4", "d"), ("s2", "d"), ("s3", "d"), ("s1", "d"),  # 4 sources
+        ("s2", "e"), ("s2", "e"), ("s3", "e"),              # repeated source
+        ("s4", "f"), ("s4", "f"),                           # 1 source, twice
+    ]
+    carriers: dict[str, set[str]] = {}
+    for source, shingle in rows:
+        carriers.setdefault(shingle, set()).add(source)
+    expected = Counter(
+        pair
+        for sources in carriers.values()
+        for pair in combinations(sorted(sources), 2)
+    )
+    # by hand: b:(1,2) c:(1,2)(1,3)(2,3) d:all six e:(2,3)
+    assert expected == {
+        ("s1", "s2"): 3, ("s1", "s3"): 2, ("s2", "s3"): 3,
+        ("s1", "s4"): 1, ("s2", "s4"): 1, ("s3", "s4"): 1,
+    }
+    df = spark.createDataFrame(rows, "source string, shingle string")
+    got = shared_pair_counts(df, "shingle", "source", "a", "b", "n").collect()
+    assert {(r["a"], r["b"]): r["n"] for r in got} == expected
+    assert len(got) == len(expected)

@@ -153,6 +153,79 @@ def test_fused_equals_separate_operators(spark, typed_stream_dir):
     )
 
 
+def test_reexecuted_stateful_batch_redelivers_same_rows(
+    spark, typed_stream_dir, tmp_path
+):
+    """A batch whose commit-log entry is lost re-executes on restart and
+    re-commits its state-store version onto delta files that already
+    exist (createAtomic with overwriteIfPossible=True). The checkpoint
+    manager may keep the first file there; the redelivered rows and the
+    final totals must not change."""
+    import glob
+    import os
+
+    path, schema = typed_stream_dir
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    # two range-split files => two availableNow micro-batches
+    spark.read.schema(schema).parquet(path).repartitionByRange(
+        2, "ts"
+    ).write.parquet(src)
+    delivered: list[tuple[int, list]] = []
+
+    def fb(df, epoch):
+        delivered.append((epoch, sorted(map(tuple, df.collect()))))
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            running_key_stats(stream, "user_id")
+            .writeStream.outputMode("update")
+            .foreachBatch(fb)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+    run()
+    last = delivered[-1][0]
+    assert [e for e, _ in delivered] == list(range(last + 1)) and last >= 1
+    # batch `last` committed state version last + 1 in every partition
+    assert glob.glob(os.path.join(ckpt, "state", "0", "*", f"{last + 1}.delta"))
+    os.remove(os.path.join(ckpt, "commits", str(last)))
+    os.remove(os.path.join(ckpt, "commits", f".{last}.crc"))
+
+    run()
+    assert [e for e, _ in delivered] == list(range(last + 1)) + [last]
+    assert delivered[-1][1] == delivered[-2][1]
+
+    final: dict[str, tuple] = {}
+    for _epoch, rows in delivered:
+        for key, n, s, _ts in rows:
+            if key not in final or n > final[key][0]:
+                final[key] = (n, s)
+    exp = (
+        spark.read.schema(schema)
+        .parquet(path)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            (F.sum(F.floor(F.col("value") * 1000).cast("long")) / 1000.0)
+            .alias("s"),
+        )
+        .collect()
+    )
+    assert final == {r["user_id"]: (r["n"], r["s"]) for r in exp}
+
+
 class _FakeState:
     """Minimal GroupState stand-in for unit-driving the update functions."""
 

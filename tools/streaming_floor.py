@@ -1,8 +1,9 @@
 """Streaming parity family floor table (VERDICT r15 #7): run each
 streaming_* entry once in ONE session (suite-like: shared staging, warm
 JVM) and record, per entry, the wall time plus every micro-batch's
-recentProgress durations (triggerExecution / addBatch / queryPlanning /
-walCommit / commitOffsets) captured session-wide by a
+recentProgress durations (triggerExecution / addBatch / queryPlanning,
+the offset log's latestOffset + getBatch, the commit logs' walCommit +
+commitOffsets) captured session-wide by a
 StreamingQueryListener. The table separates the per-entry floor --
 Structured Streaming's own query-lifecycle machinery (start: incremental
 plan + state-store init + offset log; per batch: planning + addBatch +
@@ -11,7 +12,7 @@ commit; stop) -- from anything the entry's own plan could still save.
 Usage: python tools/streaming_floor.py [sf_dir]
 Prints one line per entry:
   FLOOR <name>: wall=..s n_queries=N n_batches=B trigger_ms=[..]
-  addbatch_ms=[..] plan_ms=[..] commit_ms=[..]
+  addbatch_ms=[..] plan_ms=[..] offset_ms=[..] commit_ms=[..] rows=[..]
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ class _Collector(StreamingQueryListener):
                 "trigger": d.get("triggerExecution"),
                 "addBatch": d.get("addBatch"),
                 "plan": d.get("queryPlanning"),
+                "offset": (d.get("latestOffset") or 0)
+                + (d.get("getBatch") or 0),
                 "commit": (d.get("commitOffsets") or 0)
                 + (d.get("walCommit") or 0),
                 "rows": p.numInputRows,
@@ -88,6 +91,7 @@ def main() -> int:
             f" trigger_ms={[m['trigger'] for m in mine]}"
             f" addbatch_ms={[m['addBatch'] for m in mine]}"
             f" plan_ms={[m['plan'] for m in mine]}"
+            f" offset_ms={[m['offset'] for m in mine]}"
             f" commit_ms={[m['commit'] for m in mine]}"
             f" rows={[m['rows'] for m in mine]}",
             flush=True,

@@ -28,8 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 _BYTE_SUFFIXES = {
     "": 1,
     "b": 1,
@@ -196,13 +194,3 @@ def load_table(
         if n_bytes < split_bytes * max(1, target // 2):
             df = df.repartition(target)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view named after itself."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

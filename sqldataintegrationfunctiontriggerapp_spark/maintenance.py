@@ -44,6 +44,8 @@ def purge_history(log: DataFrame, now: datetime, completed_days: int = 7,
 def clean_orphan_state(state: DataFrame, live_keys: DataFrame,
                        key_col: str = "key") -> DataFrame:
     """Entity-storage cleanup (CleanupFunction.cs:36-40): drop state rows
-    whose key no longer corresponds to a live table/orchestration -- an
-    anti-join, the set-difference the reference does via the management API."""
+    whose key no longer corresponds to a live table/orchestration -- the
+    set-difference the reference does via the management API, as a
+    semi-join on the live keys (duplicate live keys never duplicate a
+    state row)."""
     return state.join(live_keys, state[key_col] == live_keys[key_col], "left_semi")

@@ -20,7 +20,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,12 +34,6 @@ def exact_dedup_groups(df: DataFrame, key: str = "text", id_col: str = "doc_id")
         F.min(id_col).alias("keeper_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
-
-
-def keyed_latest(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
-    """C2 latest-wins compaction (CDC 'current row state', README.md:5)."""
-    w = Window.partitionBy(key).orderBy(*[F.desc(c) for c in order_cols])
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 def _explode_partitions(df: DataFrame) -> int:
@@ -153,7 +147,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     trust_stats (r11): pass True ONLY when `sigs` descends from a
     MATERIALIZED persist() cache -- or from a localCheckpoint TAKEN OF one
     (the LogicalRDD snapshots the cache's honest sizeInBytes; see
-    plans/dedup.py _truthful_ckpt). The
+    plans/_util.py truthful_ckpt). The
     join is then left unhinted: initial planning sees an honest (large,
     conservative) estimate so nothing multi-GiB is eagerly broadcast, and
     AQE's runtime SMJ->BHJ conversion re-earns the broadcast from ACTUAL

@@ -25,17 +25,18 @@ DEC = "decimal(18,6)"
 
 # Session-scoped shared-stage memo (used by plans/dedup.py for the minhash/
 # ngram families and plans/similarity.py for the IVF index): expensive
-# localCheckpointed builds computed once per (application, sf_dir, stage)
-# and reused by every family member in the suite.
+# builds materialized once per (application, sf_dir, stage) and reused by
+# every family member in the suite.
 _STAGE_CACHE: dict[tuple[str, str, str], object] = {}
 
 # Stage ledger (VERDICT r11 #1): access order, executor-storage attribution,
 # and the set of stages touched since the last between-queries tick. Stage
 # residency was measured bending sf10 results (dedup_embedding_cosine
 # 162.2 s in-subset vs 96.1 s solo) and OOMing the 8 g 20M-vector ANN run;
-# the ledger bounds resident checkpoint blocks under a configurable budget
+# the ledger bounds resident checkpoint blocks under _LEDGER_BUDGET_BYTES
 # with LRU eviction at query boundaries (never mid-query: an in-use
 # localCheckpoint is unrecomputable once its blocks drop).
+_LEDGER_BUDGET_BYTES = 2048 * 1024 * 1024
 _STAGE_SEQ = 0
 _STAGE_META: dict[tuple[str, str, str], dict] = {}
 _STAGE_ACTIVE: set[tuple[str, str, str]] = set()
@@ -81,69 +82,44 @@ def _stage_spill_root() -> str:
     return _SPILL_ROOT
 
 
-def _spill_threshold_bytes(spark) -> float:
-    """Cached-stage size above which truthful_ckpt lands on local parquet.
-
-    SPARK_GRAFT_STAGE_MODE forces a branch (memory = always checkpoint,
-    the pre-r13 behavior, kept for A/B ladders; disk = always parquet);
-    SPARK_GRAFT_STAGE_SPILL_MB pins the threshold. Default: heap/32 with
-    a 256 MB floor. The constant is calibrated by the sf10 minhash family
-    at 8 g: a FAMILY holds 3-4 big stages at once (shingles, signatures,
-    jacc0), the threshold compares COLUMNAR-CACHE bytes, and the
-    checkpoint the memory branch builds is typically 2-4x larger -- at
-    heap/8 every minhash stage individually stayed under the line, their
-    AGGREGATE 3.4 GB of checkpoint residency starved execution memory,
-    and run 4/4 of the 8 g ladder died with UNABLE_TO_ACQUIRE_MEMORY;
-    heap/32 per stage bounds a 4-stage family near heap/8 of cache
-    (~heap/3 checkpoint) if it all stayed resident, and in practice sends
-    the big members to parquet. The floor keeps default-1g test/bench
-    sessions (stage caches there are tens of MB) entirely on the fast
-    path."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_STAGE_MODE", "auto")
-    if mode == "memory":
-        return float("inf")
-    if mode == "disk":
-        return -1.0
-    if os.environ.get("SPARK_GRAFT_STAGE_SPILL_MB"):
-        return int(os.environ["SPARK_GRAFT_STAGE_SPILL_MB"]) * 1024.0 * 1024.0
+def _heap_bytes(spark) -> int:
+    """The driver JVM's max heap (1 GiB if it cannot be read)."""
     try:
-        heap = int(
+        return int(
             spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
         )
     except Exception:
-        heap = 1 << 30
-    return max(256.0 * 1024 * 1024, heap / 32.0)
+        return 1 << 30
+
+
+def _spill_threshold_bytes(spark) -> float:
+    """Cached-stage size above which truthful_ckpt lands on local parquet:
+    heap/32 with a 256 MB floor. The constant is calibrated by the sf10
+    minhash family at 8 g: a FAMILY holds 3-4 big stages at once
+    (shingles, signatures, jacc0), the threshold compares COLUMNAR-CACHE
+    bytes, and the checkpoint the memory branch builds is typically 2-4x
+    larger -- at heap/8 every minhash stage individually stayed under the
+    line, their AGGREGATE 3.4 GB of checkpoint residency starved execution
+    memory, and run 4/4 of the 8 g ladder died with
+    UNABLE_TO_ACQUIRE_MEMORY; heap/32 per stage bounds a 4-stage family
+    near heap/8 of cache (~heap/3 checkpoint) if it all stayed resident,
+    and in practice sends the big members to parquet. The floor keeps
+    default-1g test/bench sessions (stage caches there are tens of MB)
+    entirely on the fast path."""
+    return max(256.0 * 1024 * 1024, _heap_bytes(spark) / 32.0)
 
 
 def _family_admission_bytes(spark) -> float:
-    """FAMILY-aggregate admission bound (VERDICT r13 #4): the per-stage
-    heap/32 constant is calibrated to 3-4-stage families -- a 6-stage
-    family each individually under the line would re-create the aggregate
-    starvation the r12 minhash trio hit at heap/8. This makes the bound
-    structural instead of calibrated: before choosing the memory branch,
-    truthful_ckpt checks CURRENT resident stage storage (checkpoint
-    blocks, measured via getRDDStorageInfo) and spills when
-    resident + new_cache_bytes would exceed max(heap/8, 512 MB). The
-    512 MB floor keeps default-1g test/bench sessions untouched (the full
-    sf0.1 sweep's largest per-query resident peak is 151 MB --
-    BENCH_FULL r13), so the sf0.1 plans and bench are unchanged; at 8 g
-    the bound is 1 GB of aggregate residency, the level the r13
-    calibration targeted for a 4-stage family, now enforced for ANY
-    family size. SPARK_GRAFT_STAGE_FAMILY_MB pins it for tests/ladders;
-    STAGE_MODE=memory/disk still forces the branch outright."""
-    import os
+    """FAMILY-aggregate admission bound: max(heap/8, 512 MB).
 
-    if os.environ.get("SPARK_GRAFT_STAGE_FAMILY_MB"):
-        return int(os.environ["SPARK_GRAFT_STAGE_FAMILY_MB"]) * 1024.0 * 1024.0
-    try:
-        heap = int(
-            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-        )
-    except Exception:
-        heap = 1 << 30
-    return max(512.0 * 1024 * 1024, heap / 8.0)
+    truthful_ckpt spills a stage when CURRENT resident storage (measured
+    via getRDDStorageInfo) plus its cache bytes would cross it, so a
+    6-stage family of individually small stages degrades to disk exactly
+    like one big stage would (VERDICT r13 #4). The 512 MB floor keeps
+    default-1g test/bench sessions untouched (the full sf0.1 sweep's
+    largest per-query resident peak is ~200 MB); at 8 g the bound is 1 GB,
+    the aggregate the r13 family calibration targets."""
+    return max(512.0 * 1024 * 1024, _heap_bytes(spark) / 8.0)
 
 
 def truthful_ckpt(df):
@@ -151,10 +127,11 @@ def truthful_ckpt(df):
     (b) the materialization survives ``spark.catalog.clearCache()``, and
     (c) a stage bigger than the heap degrades to disk instead of dying:
 
-    1. persist + count -- the InMemoryRelation accumulates REAL bytes (a
-       checkpoint of a raw explode inherits the pre-explode estimate:
-       measured 25.1 MiB reported for 3.5 GiB), and the SQL cache build
-       spills under pressure instead of failing;
+    1. persist + one shuffle-free job over the persisted plan (a ``noop``
+       write) -- the InMemoryRelation accumulates REAL bytes (a checkpoint
+       of a raw explode inherits the pre-explode estimate: measured
+       25.1 MiB reported for 3.5 GiB), and the SQL cache build spills
+       under pressure instead of failing;
     2. read the measured size off the materialized cache;
     3. SMALL stage: localCheckpoint of the cache (LogicalRDD snapshots the
        honest sizeInBytes; RDD-level blocks survive clearCache -- verified
@@ -164,30 +141,29 @@ def truthful_ckpt(df):
        rehydration of spilled blocks -- the 8 g OOM class retired);
     4. release the now-redundant SQL-cache copy.
 
+    The size is known only after step 1, so the branch is chosen before
+    any checkpoint exists: a big stage never holds checkpoint blocks. The
+    small path runs two jobs (step 1 and the checkpoint).
+
     The parquet branch tags the returned frame with a ``StagedDir`` via
     ``_staged_dir`` so ledger eviction / sf_dir switch / drop_stage remove
     the directory with the memo entry.
 
-    Admission is per-stage AND per-family: a stage spills when its own
-    measured cache bytes exceed the heap/32 threshold, OR when adding it
-    to the CURRENTLY RESIDENT stage storage would cross the family bound
-    (see _family_admission_bytes) -- so a 6-stage family of individually
-    small stages degrades to disk exactly like one big stage would."""
+    A stage spills when its own measured cache bytes exceed the heap/32
+    threshold, OR when adding it to the CURRENTLY RESIDENT stage storage
+    would cross _family_admission_bytes."""
     spark = df.sparkSession
     resident_before = storage_bytes(spark)
     cached = df.persist()
-    cached.count()
+    cached.write.format("noop").mode("overwrite").save()
     try:
         size = int(
             cached._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         size = 0
-    over_family = (
-        resident_before + size > _family_admission_bytes(spark)
-        and _spill_threshold_bytes(spark) != float("inf")  # MODE=memory wins
-    )
-    if size > _spill_threshold_bytes(spark) or over_family:
+    if (size > _spill_threshold_bytes(spark)
+            or resident_before + size > _family_admission_bytes(spark)):
         import tempfile
 
         path = tempfile.mkdtemp(prefix="stage_", dir=_stage_spill_root())
@@ -200,46 +176,61 @@ def truthful_ckpt(df):
     return out
 
 
-def _release_stage(value, blocking: bool = False) -> None:
-    """Best-effort release of an evicted stage's executor storage.
-
-    The cached stage values are localCheckpointed DataFrames, and
-    ``DataFrame.unpersist()`` does NOT free checkpoint blocks (it only
-    uncaches CacheManager entries -- verified empirically: RDD storage info
-    is unchanged after ``unpersist(blocking=True)``). A checkpointed
-    DataFrame's analyzed plan is a ``LogicalRDD`` wrapping the persisted
-    RDD, so unpersisting THAT rdd is what actually drops the blocks
-    (verified: storage-info count goes to 0). Plain ``unpersist()`` runs
-    too, covering any persist()-cached value; never-persisted plans and
-    stopped sessions make both calls harmless no-ops / ignored failures."""
+def _stage_backing(value):
+    """``(item, staged_dir, checkpoint_rdd)`` for each item of a stage
+    value (a frame, a StagedDir, a scalar, or a tuple/list of them): the
+    directory a StagedDir or parquet-branch frame owns, else the RDD whose
+    blocks ARE a localCheckpointed frame's data (its analyzed plan is a
+    ``LogicalRDD``); both None for scalars / never-checkpointed plans."""
     items = value if isinstance(value, (tuple, list)) else (value,)
     for item in items:
-        if isinstance(item, StagedDir):
-            import shutil
+        sd = item if isinstance(item, StagedDir) else getattr(
+            item, "_staged_dir", None)
+        rdd = None
+        if sd is None:
+            try:
+                plan = item._jdf.queryExecution().analyzed()
+                if plan.getClass().getSimpleName() == "LogicalRDD":
+                    rdd = plan.rdd()
+            except Exception:
+                pass
+        yield item, sd, rdd
 
-            shutil.rmtree(item, ignore_errors=True)
-            continue
-        sd = getattr(item, "_staged_dir", None)
+
+def _release_stage(value, blocking: bool = False) -> None:
+    """Best-effort release of an evicted stage's storage.
+
+    A staged directory is removed (the parquet frame holds no executor
+    storage). ``DataFrame.unpersist()`` does NOT free checkpoint blocks (it
+    only uncaches CacheManager entries -- verified empirically: RDD storage
+    info is unchanged after ``unpersist(blocking=True)``); unpersisting the
+    LogicalRDD's rdd is what actually drops them (verified: storage-info
+    count goes to 0). Plain ``unpersist()`` runs too, covering any
+    persist()-cached value; never-persisted plans and stopped sessions make
+    both calls harmless no-ops / ignored failures. ``blocking=True`` inside
+    the ledger's eviction loop (ADVICE r12): the tick re-samples residency
+    after each victim, and a non-blocking release would overstate
+    post-eviction bytes."""
+    import shutil
+
+    for item, sd, rdd in _stage_backing(value):
         if sd is not None:
-            # parquet-backed truthful_ckpt stage: evicting it removes the
-            # spill directory (the frame holds no executor storage)
-            import shutil
-
             shutil.rmtree(sd, ignore_errors=True)
             continue
-        try:
-            plan = item._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                # blocking=True inside the ledger's eviction loop (ADVICE
-                # r12): the tick re-samples residency after each victim, and
-                # a non-blocking release would overstate post-eviction bytes
-                plan.rdd().unpersist(blocking)
-        except Exception:
-            pass
-        try:
-            item.unpersist(blocking)
-        except Exception:
-            pass
+        for release in (rdd, item):
+            try:
+                release.unpersist(blocking)
+            except Exception:  # None, a scalar, a stopped session
+                pass
+
+
+def _evict(key, blocking: bool = False, release: bool = True) -> None:
+    """Drop one memo entry: release its storage, forget its ledger row."""
+    value = _STAGE_CACHE.pop(key)
+    _STAGE_META.pop(key, None)
+    _STAGE_ACTIVE.discard(key)
+    if release:
+        _release_stage(value, blocking)
 
 
 def session_stage(spark, sf_dir: str, name: str, build):
@@ -247,7 +238,8 @@ def session_stage(spark, sf_dir: str, name: str, build):
 
     Two evictions keep the cache bounded (ADVICE r04 #1):
     - entries from other (stopped) applications: their DataFrames pin py4j
-      references to defunct JVMs and can never be served again;
+      references to defunct JVMs and can never be served again, so they
+      are forgotten without a release call;
     - entries from the LIVE application but a different sf_dir: a long-lived
       driver sweeping several fixture dirs would otherwise pin every dir's
       localCheckpointed stages on the executors forever. Suites run one
@@ -258,11 +250,7 @@ def session_stage(spark, sf_dir: str, name: str, build):
     key = (app, sf_dir, name)
     if key not in _STAGE_CACHE:
         for old in [k for k in _STAGE_CACHE if k[0] != app or k[1] != sf_dir]:
-            if old[0] == app:
-                _release_stage(_STAGE_CACHE[old])
-            del _STAGE_CACHE[old]
-            _STAGE_META.pop(old, None)
-            _STAGE_ACTIVE.discard(old)
+            _evict(old, release=old[0] == app)
         _STAGE_CACHE[key] = build()
         _STAGE_META[key] = {"rdd_ids": _stage_rdd_ids(_STAGE_CACHE[key])}
     _STAGE_SEQ += 1
@@ -272,21 +260,10 @@ def session_stage(spark, sf_dir: str, name: str, build):
 
 
 def _stage_rdd_ids(value) -> list[int]:
-    """RDD ids backing a stage value's localCheckpoint blocks (empty for
-    scalars / StagedDir / never-checkpointed frames) -- lets the ledger
-    attribute executor storage per stage from getRDDStorageInfo."""
-    ids: list[int] = []
-    items = value if isinstance(value, (tuple, list)) else (value,)
-    for item in items:
-        if isinstance(item, StagedDir):
-            continue
-        try:
-            plan = item._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                ids.append(plan.rdd().id())
-        except Exception:
-            pass
-    return ids
+    """RDD ids backing a stage value's localCheckpoint blocks -- lets the
+    ledger attribute executor storage per stage from getRDDStorageInfo."""
+    return [rdd.id() for _item, _sd, rdd in _stage_backing(value)
+            if rdd is not None]
 
 
 def storage_bytes(spark) -> int:
@@ -318,30 +295,22 @@ def _stage_resident_bytes(spark) -> dict[tuple[str, str, str], int]:
 
 def _stage_disk_bytes() -> int:
     """Bytes held by parquet-backed (spill-branch) stages -- visibility
-    only: they use local disk, not executor storage, so the memory budget
+    only: they use local disk, not executor storage, so the ledger budget
     does not govern them; sf_dir switch / drop_stage / process exit are
     what bound their lifetime."""
     import os
 
     total = 0
     for value in _STAGE_CACHE.values():
-        items = value if isinstance(value, (tuple, list)) else (value,)
-        for item in items:
-            p = (
-                item if isinstance(item, StagedDir)
-                else getattr(item, "_staged_dir", None)
-            )
-            if not p:
+        for _item, sd, _rdd in _stage_backing(value):
+            if sd is None:
                 continue
-            try:
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        try:
-                            total += os.path.getsize(os.path.join(root, f))
-                        except OSError:
-                            pass
-            except OSError:
-                pass
+            for root, _dirs, files in os.walk(sd):
+                for f in files:
+                    try:
+                        total += os.path.getsize(os.path.join(root, f))
+                    except OSError:
+                        pass
     return total
 
 
@@ -356,22 +325,16 @@ def stage_ledger_tick(spark, budget_bytes: int | None = None) -> dict:
     (lineage is truncated -- the blocks are the data). Eviction deletes the
     memo entry too, so the next consumer transparently rebuilds.
 
-    Budget: ``budget_bytes`` arg, else $SPARK_GRAFT_STAGE_BUDGET_MB
-    (default 2048). Returns {"stage_bytes", "global_bytes", "evicted"}.
+    Budget: ``budget_bytes`` arg, else _LEDGER_BUDGET_BYTES (2048 MB: it
+    counts checkpoint blocks, which run 2-4x the columnar-cache bytes
+    admission compares, so it is not the admission bound). Returns
+    {"stage_bytes", "global_bytes", "disk_bytes", "evicted"}.
     """
-    import os
-
     if budget_bytes is None:
-        budget_bytes = (
-            int(os.environ.get("SPARK_GRAFT_STAGE_BUDGET_MB", "2048"))
-            * 1024 * 1024
-        )
+        budget_bytes = _LEDGER_BUDGET_BYTES
     evicted: list[str] = []
     sizes = _stage_resident_bytes(spark)
-    while True:
-        total = sum(sizes.values())
-        if total <= budget_bytes:
-            break
+    while sum(sizes.values()) > budget_bytes:
         # LRU among evictable entries that actually hold resident bytes
         # (evicting a 0-byte entry frees nothing and forces a rebuild)
         candidates = [
@@ -381,9 +344,7 @@ def stage_ledger_tick(spark, budget_bytes: int | None = None) -> dict:
         if not candidates:
             break
         victim = min(candidates, key=lambda k: _STAGE_META[k].get("seq", 0))
-        _release_stage(_STAGE_CACHE[victim], blocking=True)
-        del _STAGE_CACHE[victim]
-        _STAGE_META.pop(victim, None)
+        _evict(victim, blocking=True)
         evicted.append(victim[2])
         sizes = _stage_resident_bytes(spark)
     _STAGE_ACTIVE.clear()
@@ -403,9 +364,17 @@ def drop_stage(spark, sf_dir: str, name: str) -> None:
     session_stage call transparently rebuilds."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if key in _STAGE_CACHE:
-        _release_stage(_STAGE_CACHE.pop(key))
-        _STAGE_META.pop(key, None)
-        _STAGE_ACTIVE.discard(key)
+        _evict(key)
+
+
+def state_partitions() -> str:
+    """Shuffle-partition count the staged streaming replays run under (a
+    streaming query fixes it as its state-store count at first start): 8,
+    or $SPARK_GRAFT_STATE_PARTITIONS (tools/check_state_partitions.py sets
+    it to show results are invariant under the partition count)."""
+    import os
+
+    return os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
 
 
 def _c(col: Column | str) -> Column:

@@ -22,6 +22,7 @@ from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
     DEC,
     dsum,
     shared_pair_counts,
+    truthful_ckpt,
 )
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 
@@ -1909,7 +1910,6 @@ def kmv_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
         _shingles_stage,
-        _truthful_ckpt,
     )
 
     k = _KMVJ_K
@@ -1920,7 +1920,7 @@ def kmv_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint each re-paid the full explode+distinct -- measured
     # 85.5 s/scan at sf10, ~5 scans = the whole 285 s sf10 cost.
     src_of = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    tokd = _truthful_ckpt(
+    tokd = truthful_ckpt(
         _shingles_stage(spark, sf_dir)
         .join(src_of, "doc_id")
         .select("source", "shingle")

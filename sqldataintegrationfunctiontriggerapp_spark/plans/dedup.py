@@ -45,9 +45,9 @@ def _shingles_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     first pays it once. The shingle table is id-hash-partitioned by
     word_shingles, which every downstream per-doc groupBy reuses.
 
-    r11: persist()+count, then localCheckpoint OF THE MATERIALIZED CACHE,
-    then unpersist (`_truthful_ckpt`). The persist step is what makes the
-    stats honest -- a materialized InMemoryRelation reports its ACTUAL
+    r11: persist()+materialize, then localCheckpoint OF THE MATERIALIZED
+    CACHE, then unpersist (`truthful_ckpt`). The persist step is what makes
+    the stats honest -- a materialized InMemoryRelation reports its ACTUAL
     bytes, where a checkpoint of the raw explode inherits the pre-explode
     estimate (measured 25.1 MiB for 3.5 GiB) -- and the checkpoint step is
     what makes the materialization DURABLE: the LogicalRDD snapshots the
@@ -63,20 +63,11 @@ def _shingles_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at runtime (the r10 trade, recovered -- VERDICT r10 #2)."""
 
     def build():
-        return _truthful_ckpt(
+        return truthful_ckpt(
             D.word_shingles(load_table(spark, sf_dir, "documents"), n=3)
         )
 
     return _stage(spark, sf_dir, "shingles_n3", build)
-
-
-# r13: the truthful materializer moved to plans/_util.py and grew a
-# spill-safe branch -- stages whose measured cache size exceeds a
-# heap-derived threshold land on local parquet instead of a
-# localCheckpoint, retiring the 8 g OOM class (consuming disk-spilled
-# deserialized checkpoint blocks rehydrates whole ~150 MB blocks through
-# Java serialization per task). Semantics for small stages are unchanged.
-_truthful_ckpt = truthful_ckpt
 
 
 def _minhash_stage(spark: SparkSession, sf_dir: str):
@@ -84,20 +75,20 @@ def _minhash_stage(spark: SparkSession, sf_dir: str):
     candidate pairs, and every candidate pair's EXACT Jaccard at threshold
     0 (the unfiltered verify table both consumers filter/join), all fed by
     the shared shingle stage. sigs/jacc0 are materialized via
-    _truthful_ckpt (honest stats AND clearCache-proof -- see
+    truthful_ckpt (honest stats AND clearCache-proof -- see
     _shingles_stage) so the candidate self-join and the verification joins
     run unhinted with AQE choosing the strategy from real sizes at every
     scale."""
 
     def build():
         shingled = _shingles_stage(spark, sf_dir)
-        sigs = _truthful_ckpt(D.minhash_signatures(shingled, n_bands=8))
+        sigs = truthful_ckpt(D.minhash_signatures(shingled, n_bands=8))
         # r15: cands IS materialized now -- verify_jaccard consumes it
         # twice (doc-id restriction list + intersection left side), so the
         # third barrier earns itself; the count feeds the broadcast bound
         # of the restriction semi-join (VERDICT r14 #1)
-        cands = _truthful_ckpt(D.lsh_candidate_pairs(sigs, trust_stats=True))
-        jacc0 = _truthful_ckpt(
+        cands = truthful_ckpt(D.lsh_candidate_pairs(sigs, trust_stats=True))
+        jacc0 = truthful_ckpt(
             D.verify_jaccard(cands, shingled, threshold=0.0,
                              trust_stats=True,
                              n_candidates=cands.count())
@@ -327,13 +318,13 @@ def _cos_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b, cos) at cosine >= 0.4 -- the embedding family's shared
     pair stage: whichever of dedup_embedding_cosine / dbscan_embedding_
     clusters runs first pays the kernel; honest stats + clearCache
-    immunity via _truthful_ckpt (the similarity graph is re-read by
+    immunity via truthful_ckpt (the similarity graph is re-read by
     DBSCAN's component loop, which is exactly the recompute class the
     r11 ladders caught three times)."""
 
     def build():
         e = load_table(spark, sf_dir, "embeddings")
-        return _truthful_ckpt(S.cosine_pairs_above_auto(e, 0.4))
+        return truthful_ckpt(S.cosine_pairs_above_auto(e, 0.4))
 
     return _stage(spark, sf_dir, "cos_pairs_04", build)
 
@@ -1189,7 +1180,7 @@ def _span_postings_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent-recomputation class as r11's kmv/dbscan fixes)."""
 
     def build():
-        return _truthful_ckpt(
+        return truthful_ckpt(
             D.word_shingles_pos(
                 load_table(spark, sf_dir, "documents"), n=_RUN_K
             )
@@ -1209,7 +1200,7 @@ def _span_dfs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     route flips)."""
 
     def build():
-        return _truthful_ckpt(
+        return truthful_ckpt(
             D.word_shingles_pos(
                 load_table(spark, sf_dir, "documents"), n=_RUN_K
             )

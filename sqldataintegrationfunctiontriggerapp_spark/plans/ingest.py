@@ -191,12 +191,12 @@ def streaming_jsonl_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     precomputed n_chars column) is deliberate: it makes the hash depend
     on the PARSED text of every record, so a single mis-unescaped line
     anywhere in the replay breaks it."""
-    import os as _os
     import shutil
     import tempfile
 
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
         session_stage,
+        state_partitions,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -208,10 +208,7 @@ def streaming_jsonl_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         ckpt = q = None
         sink = "jsonl_ingest_counts"
         try:
-            spark.conf.set(
-                shuffle_conf,
-                _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"),
-            )
+            spark.conf.set(shuffle_conf, state_partitions())
             ckpt = tempfile.mkdtemp(prefix="jsonl_ingest_ckpt_")
             stream = (
                 spark.readStream.schema(docs.schema)

@@ -564,7 +564,8 @@ def _compaction_dirs(spark: SparkSession, sf_dir: str):
                 )
 
         published = publish_layout(root, compacted, validate=validate, keep=2)
-        assert table_current(root) == published
+        if table_current(root) != published:
+            raise RuntimeError(f"{root}: current layout is not {published}")
         return StagedDir(small), StagedDir(published)
 
     return session_stage(spark, sf_dir, "events_compaction_exec", build)

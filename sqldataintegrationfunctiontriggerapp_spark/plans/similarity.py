@@ -440,8 +440,10 @@ def ann_index_publish_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()
             )
         # keep=2: the superseded generation stays readable for audits
-        assert os.path.isdir(published[0]), "v1 GC'd despite keep=2"
-        assert table_current(root) == published[1]
+        if not os.path.isdir(published[0]):
+            raise RuntimeError(f"{published[0]}: v1 GC'd despite keep=2")
+        if table_current(root) != published[1]:
+            raise RuntimeError(f"{root}: current index is not {published[1]}")
         return (StagedDir(base), parts[0].unionByName(parts[1]))
 
     _dir, out = session_stage(spark, sf_dir, "ann_index_publish", build)
@@ -587,7 +589,9 @@ def ann_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d10 = S.route_ann(10, 0.9, _ROUTE_CURVE, _ROUTE_COST)
     d500 = S.route_ann(500, 0.9, _ROUTE_CURVE, _ROUTE_COST)
-    assert d10 == ("ivf", 4) and d500 == "exact", (d10, d500)
+    if d10 != ("ivf", 4) or d500 != "exact":
+        raise RuntimeError(f"route_ann moved off the calibrated routes: "
+                           f"{d10}, {d500}")
 
     # ivf branch, |Q|=10: probe pairs over the SHARED session-staged
     # assignment (_ivf_assigned_16 -- same pivots, same argmin frame the

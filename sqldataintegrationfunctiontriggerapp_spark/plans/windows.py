@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
-from sqldataintegrationfunctiontriggerapp_spark.plans._util import DEC, dsum
+from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+    DEC,
+    dsum,
+    state_partitions,
+)
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 from sqldataintegrationfunctiontriggerapp_spark.plans.text import _mg_shard
 
@@ -690,14 +694,10 @@ def _staged_replay(spark: SparkSession, sf_dir: str, sink: str,
     # overrides for the invariance evidence run (r09: the two stateful
     # parities hashed identical at 8 vs 32 state stores at sf1 --
     # tools/check_state_partitions.py, recorded in COVERAGE.md).
-    import os as _os
-
     shuffle_conf = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(shuffle_conf)
     try:
-        spark.conf.set(
-            shuffle_conf, _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-        )
+        spark.conf.set(shuffle_conf, state_partitions())
         ckpt_dir = tempfile.mkdtemp(prefix=f"{sink}_ckpt_", dir=_fast_tmp())
         stream = (
             spark.readStream.schema(schema)  # staged write preserves it
@@ -738,7 +738,6 @@ def _staged_foreach_replay(spark: SparkSession, sf_dir: str, batch_fn) -> None:
     does not advance), minus the HTTP sink. Used by parity queries whose
     per-batch work is a driver-orchestrated refresh rather than a
     streaming operator."""
-    import os as _os
     import shutil
     import tempfile
 
@@ -747,9 +746,7 @@ def _staged_foreach_replay(spark: SparkSession, sf_dir: str, batch_fn) -> None:
     prev_parts = spark.conf.get(shuffle_conf)
     ckpt_dir = q = None
     try:
-        spark.conf.set(
-            shuffle_conf, _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-        )
+        spark.conf.set(shuffle_conf, state_partitions())
         ckpt_dir = tempfile.mkdtemp(prefix="ivm_ckpt_", dir=_fast_tmp())
         q = (
             spark.readStream.schema(schema)
@@ -1623,7 +1620,6 @@ def _staged_docs_dir(spark: SparkSession, sf_dir: str):
 def _staged_docs_foreach_replay(spark: SparkSession, sf_dir: str,
                                 batch_fn) -> None:
     """_staged_foreach_replay over the staged DOCUMENTS source."""
-    import os as _os
     import shutil
     import tempfile
 
@@ -1632,9 +1628,7 @@ def _staged_docs_foreach_replay(spark: SparkSession, sf_dir: str,
     prev_parts = spark.conf.get(shuffle_conf)
     ckpt_dir = q = None
     try:
-        spark.conf.set(
-            shuffle_conf, _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-        )
+        spark.conf.set(shuffle_conf, state_partitions())
         ckpt_dir = tempfile.mkdtemp(prefix="cur_ckpt_", dir=_fast_tmp())
         q = (
             spark.readStream.schema(schema)
@@ -1936,7 +1930,6 @@ def streaming_late_data_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir, schema = _staged_late_replay_dir(spark, sf_dir)
 
     def build():
-        import os as _os
         import shutil
         import tempfile
 
@@ -1945,10 +1938,7 @@ def streaming_late_data_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt = q = None
         sink = "late_data_windows"
         try:
-            spark.conf.set(
-                shuffle_conf,
-                _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"),
-            )
+            spark.conf.set(shuffle_conf, state_partitions())
             ckpt = tempfile.mkdtemp(prefix="late_ckpt_", dir=_fast_tmp())
             stream = (
                 spark.readStream.schema(schema)

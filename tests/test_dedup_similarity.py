@@ -1274,8 +1274,8 @@ def test_png_rgba_decodes_ok_with_three_channel_sums(spark):
     assert out[2].status == "ok"
 
 def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
-    """The r11 stage-materialization contract (plans/dedup.py
-    _truthful_ckpt): the returned frame must (a) keep the materialized
+    """The r11 stage-materialization contract (plans/_util.py
+    truthful_ckpt): the returned frame must (a) keep the materialized
     cache's HONEST size statistics -- not the raw explode chain's
     lying-small estimate -- and (b) stay materialized across
     spark.catalog.clearCache(), which the bench harness runs between
@@ -1283,8 +1283,8 @@ def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
     re-paid the whole family build per query)."""
     from pyspark.sql import functions as F
 
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
-        _truthful_ckpt,
+    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+        truthful_ckpt,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1299,7 +1299,7 @@ def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
         )
 
     raw_estimate = size_of(exploded)
-    out = _truthful_ckpt(exploded)
+    out = truthful_ckpt(exploded)
     honest = size_of(out)
     # the explode estimate inherits the parquet scan's bytes (lying small
     # for a token explosion); the materialized stats must exceed it

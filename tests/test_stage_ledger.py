@@ -9,14 +9,27 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.plans import _util as U
-from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import _truthful_ckpt
+from sqldataintegrationfunctiontriggerapp_spark.plans._util import truthful_ckpt
+
+_MB = 1024.0 * 1024.0
+
+
+def _pin(monkeypatch, spill_mb=None, family_mb=None):
+    """Force truthful_ckpt's branch: pin the per-stage spill threshold
+    and/or the resident-storage bound (None keeps the heap-derived one)."""
+    if spill_mb is not None:
+        monkeypatch.setattr(U, "_spill_threshold_bytes",
+                            lambda spark: spill_mb * _MB)
+    if family_mb is not None:
+        monkeypatch.setattr(U, "_family_admission_bytes",
+                            lambda spark: family_mb * _MB)
 
 
 def _mk_stage(spark, name: str, builds: dict):
     def build():
         builds[name] = builds.get(name, 0) + 1
         # ~64k rows of longs: enough resident bytes to attribute/evict
-        return _truthful_ckpt(
+        return truthful_ckpt(
             spark.range(65536).select(
                 F.col("id"), (F.col("id") * 2).alias("v")
             )
@@ -28,10 +41,7 @@ def _mk_stage(spark, name: str, builds: dict):
 def _drop_test_stages(sf_dir="/ledger-test", name=None):
     for key in [k for k in U._STAGE_CACHE
                 if k[1] == sf_dir and name in (None, k[2])]:
-        U._release_stage(U._STAGE_CACHE[key])
-        del U._STAGE_CACHE[key]
-        U._STAGE_META.pop(key, None)
-        U._STAGE_ACTIVE.discard(key)
+        U._evict(key)
 
 
 def test_ledger_attributes_and_evicts_lru(spark):
@@ -93,10 +103,10 @@ def test_truthful_ckpt_disk_branch_spills_and_releases(spark, monkeypatch):
     import os
 
     _drop_test_stages()
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_MODE", "disk")
+    _pin(monkeypatch, spill_mb=-1)
 
     def build():
-        return U.truthful_ckpt(
+        return truthful_ckpt(
             spark.range(1000).select(
                 F.col("id"), (F.col("id") * 3).alias("v")
             )
@@ -118,16 +128,15 @@ def test_truthful_ckpt_disk_branch_spills_and_releases(spark, monkeypatch):
 
 
 def test_truthful_ckpt_threshold_picks_branch(spark, monkeypatch):
-    """Auto mode: a tiny stage stays a localCheckpoint (no _staged_dir), a
-    stage above a forced-low threshold goes to parquet."""
+    """A tiny stage stays a localCheckpoint (no _staged_dir), a stage
+    above a forced-low threshold goes to parquet."""
     _drop_test_stages()
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_MODE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_SPILL_MB", "100000")
-    small = U.truthful_ckpt(spark.range(100).select("id"))
+    _pin(monkeypatch, spill_mb=100000)
+    small = truthful_ckpt(spark.range(100).select("id"))
     assert getattr(small, "_staged_dir", None) is None
     small.unpersist()
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_SPILL_MB", "0")
-    big = U.truthful_ckpt(spark.range(5000).select("id"))
+    _pin(monkeypatch, spill_mb=0)
+    big = truthful_ckpt(spark.range(5000).select("id"))
     assert getattr(big, "_staged_dir", None) is not None
     U._release_stage(big)
 
@@ -140,21 +149,18 @@ def test_truthful_ckpt_family_aggregate_admission(spark, monkeypatch):
     spill to parquet even though each is individually under the per-stage
     threshold."""
     _drop_test_stages()
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_MODE", raising=False)
-    # per-stage threshold far above any member: the old rule keeps ALL
-    # of them memory-resident
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_SPILL_MB", "100000")
-    # family bound = whatever is already resident (other tests in the
-    # shared session may hold blocks) + ~2 MB of headroom: members are
-    # ~0.5-1.5 MB each, so the first stage stays on the fast path and
-    # later ones must spill
+    # per-stage threshold far above any member (the per-stage rule alone
+    # keeps ALL of them memory-resident); family bound = whatever is
+    # already resident (other tests in the shared session may hold
+    # blocks) + ~2 MB of headroom: members are ~0.5-1.5 MB each, so the
+    # first stage stays on the fast path and later ones must spill
     base_mb = U.storage_bytes(spark) // (1024 * 1024)
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_FAMILY_MB", str(base_mb + 2))
+    _pin(monkeypatch, spill_mb=100000, family_mb=base_mb + 2)
 
     members = []
     try:
         for i in range(6):
-            df = U.truthful_ckpt(
+            df = truthful_ckpt(
                 spark.range(65536).select(
                     F.col("id"), (F.col("id") * (i + 1)).alias("v")
                 )
@@ -186,16 +192,15 @@ def test_truthful_ckpt_family_aggregate_admission(spark, monkeypatch):
 def test_truthful_ckpt_family_bound_leaves_small_sessions_alone(
     spark, monkeypatch
 ):
-    """The 512 MB family floor: with no env pin, a handful of small
-    stages all stay on the localCheckpoint fast path (sf0.1's largest
-    per-query resident peak is 151 MB -- the bound must not reshape
-    small-session plans)."""
+    """The 512 MB family floor: with the heap-derived bound, a handful of
+    small stages all stay on the localCheckpoint fast path (sf0.1's
+    largest per-query resident peak is ~200 MB -- the bound must not
+    reshape small-session plans)."""
     _drop_test_stages()
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_MODE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_FAMILY_MB", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_SPILL_MB", "100000")
+    _pin(monkeypatch, spill_mb=100000)
+    assert U._family_admission_bytes(spark) >= 512 * _MB
     members = [
-        U.truthful_ckpt(spark.range(10000).select("id")) for _ in range(3)
+        truthful_ckpt(spark.range(10000).select("id")) for _ in range(3)
     ]
     try:
         assert all(
@@ -223,3 +228,30 @@ def test_frequent_term_l1_is_one_session_stage_per_entry(spark, sf_dir,
         _, again_jobs = count_jobs(queries[entry], spark, sf_dir)
         assert U._STAGE_CACHE[key] is l1
         assert again_jobs < first_jobs
+
+
+def test_truthful_ckpt_small_stage_runs_two_jobs(spark, count_jobs):
+    """Sizing the cache is one shuffle-free job over the persisted plan
+    and the checkpoint is the second; an aggregate (e.g. count()) there
+    costs two jobs more."""
+    out, jobs = count_jobs(truthful_ckpt, spark.range(97).select("id"))
+    try:
+        assert getattr(out, "_staged_dir", None) is None
+        assert out.count() == 97
+        assert jobs <= 2, jobs
+    finally:
+        U._release_stage(out)
+
+
+def test_ledger_default_budget_is_the_named_constant(spark, monkeypatch):
+    """With no budget argument the tick evicts past _LEDGER_BUDGET_BYTES
+    (2048 MB), not past the admission bound."""
+    assert U._LEDGER_BUDGET_BYTES == 2048 * _MB
+    _drop_test_stages()
+    _mk_stage(spark, "stage_budget", {})
+    U.stage_ledger_tick(spark)  # touched this query: protected
+    _pin(monkeypatch, family_mb=0)  # admission bound plays no part
+    assert "stage_budget" not in U.stage_ledger_tick(spark)["evicted"]
+    monkeypatch.setattr(U, "_LEDGER_BUDGET_BYTES", 0)
+    assert "stage_budget" in U.stage_ledger_tick(spark)["evicted"]
+    _drop_test_stages()

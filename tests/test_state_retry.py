@@ -8,7 +8,10 @@ from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
 from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
-from sqldataintegrationfunctiontriggerapp_spark.maintenance import purge_history
+from sqldataintegrationfunctiontriggerapp_spark.maintenance import (
+    clean_orphan_state,
+    purge_history,
+)
 from sqldataintegrationfunctiontriggerapp_spark.retry import (
     Notifier,
     RetryController,
@@ -230,3 +233,16 @@ def test_purge_history(spark):
     assert sorted((r.status, r.created_at) for r in kept.collect()) == sorted(
         [rows[1], rows[3], rows[4]]
     )
+
+
+def test_clean_orphan_state(spark):
+    state = spark.createDataFrame(
+        [("t1", 1), ("t2", 2), ("gone", 3)], "key string, value int"
+    )
+    # "t1" listed twice; "new" is live but has no state yet
+    live = spark.createDataFrame(
+        [("t1",), ("t1",), ("t2",), ("new",)], "key string"
+    )
+    kept = clean_orphan_state(state, live)
+    assert kept.columns == ["key", "value"]
+    assert sorted(tuple(r) for r in kept.collect()) == [("t1", 1), ("t2", 2)]

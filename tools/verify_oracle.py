@@ -81,7 +81,7 @@ def main() -> int:
         if only and name not in only:
             continue
         # query boundary: bound shared-stage checkpoint residency the same
-        # way bench.py does (LRU past $SPARK_GRAFT_STAGE_BUDGET_MB)
+        # way bench.py does (LRU past the ledger's 2048 MB budget)
         stage_ledger_tick(spark)
         n_checked += 1
         t0 = time.time()

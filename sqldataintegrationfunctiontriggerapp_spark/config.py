@@ -11,27 +11,30 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class EngineSettings:
-    """Reference knob -> engine knob mapping (README.md:50-52, :95-98):
+    """Reference knob -> engine knob mapping (README.md:50-52, :95-98).
 
-    - Sql_Trigger_MaxBatchSize      -> max_batch_rows (maxFilesPerTrigger /
-      maxOffsetsPerTrigger in a streaming source)
-    - Sql_Trigger_PollingIntervalMs -> poll_interval_ms (Trigger.ProcessingTime)
+    Bound here:
     - TotalRetryTimeOutHours        -> total_retry_timeout_hours (A19)
     - RetryIntervalMinutesFirst/Max -> capped-linear backoff (A12)
     - NotifyOnRetryCount            -> notify_on_retry_count (A20)
-    - KeepInstance*HistoryDays      -> retention GC windows (A24)
+    - HttpPostBaseUrl               -> http_base_url
+    - AllowedColumns_{table}        -> allowed_columns (A2)
+
+    Taken as an argument where the knob acts, not carried here:
+    - Sql_Trigger_MaxBatchSize      -> sources/changefeed.py
+      stream_changes(max_files_per_trigger=)
+    - Sql_Trigger_PollingIntervalMs -> the caller's
+      writeStream.trigger(processingTime=...)
+    - POST timeout (HttpPostAction.cs:39) -> HttpSink(timeout_seconds=)
+    - notify throttle (A22)         -> retry.Notifier(throttle_minutes=)
+    - KeepInstance*HistoryDays      -> maintenance.purge_history(
+      completed_days=, failed_days=) (A24)
     """
 
-    max_batch_rows: int = 500
-    poll_interval_ms: int = 5000
     total_retry_timeout_hours: int = 168
     retry_interval_minutes_first: int = 6
     retry_interval_minutes_max: int = 12
     notify_on_retry_count: int = 4
-    notify_throttle_minutes: int = 360
-    keep_completed_history_days: int = 7
-    keep_failed_history_days: int = 30
-    http_timeout_seconds: int = 960  # HttpPostAction.cs:39 (doc says 60, code 960)
     http_base_url: str = ""
     # Per-table config allowlists: AllowedColumns_{table} (local.settings.json:14)
     allowed_columns: dict[str, str] = field(default_factory=dict)
@@ -48,14 +51,10 @@ class EngineSettings:
             if k.startswith("AllowedColumns_")
         }
         return cls(
-            max_batch_rows=int(e.get("Sql_Trigger_MaxBatchSize", 500)),
-            poll_interval_ms=int(e.get("Sql_Trigger_PollingIntervalMs", 5000)),
             total_retry_timeout_hours=int(e.get("TotalRetryTimeOutHours", 168)),
             retry_interval_minutes_first=int(e.get("RetryIntervalMinutesFirst", 6)),
             retry_interval_minutes_max=int(e.get("RetryIntervalMinutesMax", 12)),
             notify_on_retry_count=int(e.get("NotifyOnRetryCount", 4)),
-            keep_completed_history_days=int(e.get("KeepInstanceCompletedHistoryDays", 7)),
-            keep_failed_history_days=int(e.get("KeepInstanceFailedHistoryDays", 30)),
             http_base_url=e.get("HttpPostBaseUrl", ""),
             allowed_columns=allow,
         )

@@ -191,53 +191,33 @@ def streaming_jsonl_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     precomputed n_chars column) is deliberate: it makes the hash depend
     on the PARSED text of every record, so a single mis-unescaped line
     anywhere in the replay breaks it."""
-    import shutil
-    import tempfile
-
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
         session_stage,
-        state_partitions,
+    )
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _run_available_now,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     path = _staged_text_format(spark, sf_dir, "json")
 
     def build():
-        shuffle_conf = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(shuffle_conf)
-        ckpt = q = None
         sink = "jsonl_ingest_counts"
-        try:
-            spark.conf.set(shuffle_conf, state_partitions())
-            ckpt = tempfile.mkdtemp(prefix="jsonl_ingest_ckpt_")
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .json(str(path))
-            )
-            agg = stream.groupBy("source").agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum(F.length("text")).cast("long").alias("sum_chars"),
-            )
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.table(sink).localCheckpoint()
-        finally:
-            spark.conf.set(shuffle_conf, prev)
-            if q is not None:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            if ckpt is not None:
-                shutil.rmtree(ckpt, ignore_errors=True)
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(path))
+        )
+        agg = stream.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.length("text")).cast("long").alias("sum_chars"),
+        )
+        _run_available_now(
+            spark,
+            agg.writeStream.outputMode("complete").format("memory")
+            .queryName(sink),
+        )
+        return spark.table(sink).localCheckpoint()
 
     return session_stage(spark, sf_dir, "jsonl_ingest_parity", build)
 

@@ -11,6 +11,8 @@ Spark, which would drift in doubles.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -539,24 +541,21 @@ def streaming_sessions_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _staged_events_dir(spark: SparkSession, sf_dir: str):
-    """(dir_path, schema) of the 2-file staged events replay, built ONCE per
-    session+sf_dir via the stage memo and shared by all the streaming
-    parity queries -- the staging write is identical for them, so whichever
-    runs first pays it. The path is a _util.StagedDir, so cross-sf_dir eviction
-    rmtree's it (one live copy per memo entry, however often a long-lived
-    driver switches fixture dirs); atexit covers process exit.
+def _stage_split(spark: SparkSession, sf_dir: str, key: str, table: str,
+                 split) -> tuple:
+    """(dir_path, schema) of a fixture table staged as one parquet file per
+    part of `split(df)`, built ONCE per session+sf_dir under the stage memo
+    `key` and shared by every parity that replays it -- whichever runs
+    first pays the write.
 
-    The split is BY EVENT TIME (midpoint of [min ts, max ts]), one file per
-    half, with file names AND mtimes forcing replay order early-then-late
-    (FileStreamSource orders pending files by modification time;
-    maxFilesPerTrigger=1 then yields micro-batch 1 = early half, batch 2 =
-    late half). Order-insensitive parity queries (windowed counts, keyed
-    dedup) are unaffected by which split they get; the ORDER-SENSITIVE
-    throttle parity query (streaming_throttle_parity) requires it: its
-    greedy per-key gap state machine only equals the batch oracle when
-    event time is non-decreasing across micro-batches, which is exactly the
-    arrival order a production tail of a live feed provides."""
+    The file streaming source monitors a DIRECTORY and orders pending files
+    by modification time, so with maxFilesPerTrigger=1 part i is exactly
+    micro-batch i: file names AND widely spaced explicit mtimes force the
+    order `split` returns (write completion times could land in the same
+    clock tick). Each part is written by one task (coalesce(1)) so it is
+    one file. The path is a _util.StagedDir, so cross-sf_dir eviction
+    rmtree's it (one live copy per memo entry, however often a long-lived
+    driver switches fixture dirs); atexit covers process exit."""
     import atexit
     import glob as globmod
     import os
@@ -565,61 +564,78 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str):
     import time
 
     from sqldataintegrationfunctiontriggerapp_spark.plans import _util
-    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
-        session_stage,
-    )
 
     def build():
-        d = tempfile.mkdtemp(prefix="strm_events_src_", dir=_fast_tmp())
+        d = tempfile.mkdtemp(prefix=f"{key}_", dir=_fast_tmp())
         atexit.register(shutil.rmtree, d, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        if lo is None or lo == hi:
-            # one distinct timestamp (or all-null ts) cannot be split by
-            # time; fail loudly rather than stage an empty first batch the
-            # parity queries would silently mis-replay
-            raise ValueError(
-                f"events ts span in {sf_dir} is degenerate ({lo!r}..{hi!r});"
-                " the time-split streaming staging needs >=2 distinct"
-                " timestamps"
-            )
-        # FLOOR-microsecond midpoint, not `lo + (hi - lo) / 2`:
-        # timedelta division rounds half-to-even at the microsecond, a
-        # rule no SQL engine reproduces. The integer floor is exactly
-        # `lo_us + (hi_us - lo_us) // 2`, which the streaming-MG parity
-        # oracle replays via epoch_us() to reconstruct the batch split --
-        # the first oracle whose SEMANTICS depend on the boundary (the
-        # order-sensitive throttle oracle needs only monotonicity).
-        import datetime as _dt
+        df = load_table(spark, sf_dir, table)
+        now = time.time()
+        for i, part in enumerate(split(df)):
+            tmp = tempfile.mkdtemp(prefix=f"{key}_part_")
+            try:
+                part.coalesce(1).write.mode("overwrite").parquet(tmp)
+                (written,) = globmod.glob(os.path.join(tmp, "part-*.parquet"))
+                dest = os.path.join(d, f"{i:02d}-part.parquet")
+                shutil.move(written, dest)
+                os.utime(dest, (now - 100 + 30 * i, now - 100 + 30 * i))
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+        return _util.StagedDir(d), df.schema
 
+    return _util.session_stage(spark, sf_dir, key, build)
+
+
+def _split_midpoint(df: DataFrame, col: str, sf_dir: str):
+    """FLOOR midpoint `lo + (hi - lo) // 2` of `col` over `df`, in whole
+    microseconds for a timestamp column.
+
+    Not `lo + (hi - lo) / 2`: timedelta division rounds half-to-even at the
+    microsecond, a rule no SQL engine reproduces. The integer floor is
+    exactly what the oracles replay to reconstruct the split -- epoch_us()
+    arithmetic for event time (streaming_mg_parity, the first oracle whose
+    SEMANTICS depend on the boundary; the order-sensitive throttle oracle
+    needs only monotonicity) and `(MIN(doc_id) + MAX(doc_id)) // 2` for
+    documents. One distinct value (or an all-NULL column) cannot be split:
+    fail loudly rather than stage an empty micro-batch the parity queries
+    would silently mis-replay."""
+    import datetime as _dt
+
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    if lo is None or lo == hi:
+        raise ValueError(
+            f"{col} span in {sf_dir} is degenerate ({lo!r}..{hi!r}); a split"
+            f" streaming replay needs >=2 distinct {col} values"
+        )
+    if isinstance(lo, _dt.datetime):
         us = _dt.timedelta(microseconds=1)
-        mid = lo + us * (((hi - lo) // us) // 2)
+        return lo + us * (((hi - lo) // us) // 2)
+    return lo + (hi - lo) // 2
+
+
+def _staged_events_dir(spark: SparkSession, sf_dir: str):
+    """(dir_path, schema) of the 2-file staged events replay shared by the
+    streaming parity queries.
+
+    The split is BY EVENT TIME (floor midpoint of [min ts, max ts]), early
+    half first, so micro-batch 1 = early half and batch 2 = late half.
+    Order-insensitive parity queries (windowed counts, keyed dedup) are
+    unaffected by which split they get; the ORDER-SENSITIVE throttle parity
+    query (streaming_throttle_parity) requires it: its greedy per-key gap
+    state machine only equals the batch oracle when event time is
+    non-decreasing across micro-batches, which is exactly the arrival order
+    a production tail of a live feed provides."""
+
+    def split(ev: DataFrame) -> list[DataFrame]:
+        mid = F.lit(_split_midpoint(ev, "ts", sf_dir))
         # the split must be TOTAL -- a NULL ts satisfies neither inequality
         # and would silently vanish from the replay while every batch
         # oracle still counts the row; route NULLs to the early half
         # ('earliest arrivals')
-        halves = [ev.where((F.col("ts") < F.lit(mid)) | F.col("ts").isNull()),
-                  ev.where(F.col("ts") >= F.lit(mid))]
-        now = time.time()
-        for i, half in enumerate(halves):
-            tmp = tempfile.mkdtemp(prefix="strm_events_half_")
-            try:
-                half.coalesce(1).write.mode("overwrite").parquet(tmp)
-                (part,) = globmod.glob(os.path.join(tmp, "part-*.parquet"))
-                dest = os.path.join(d, f"{i:02d}-half.parquet")
-                shutil.move(part, dest)
-                # widely-spaced explicit mtimes: the source must never see
-                # the two staged files as simultaneous (write completion
-                # times could land in the same clock tick)
-                os.utime(dest, (now - 100 + 60 * i, now - 100 + 60 * i))
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        # StagedDir: the memo's eviction hook rmtree's the path, so a
-        # driver switching fixture dirs holds ONE staged copy per live
-        # entry, not one per switch; atexit covers process exit
-        return _util.StagedDir(d), ev.schema
+        return [ev.where((F.col("ts") < mid) | F.col("ts").isNull()),
+                ev.where(F.col("ts") >= mid)]
 
-    return session_stage(spark, sf_dir, "staged_events_timesplit", build)
+    return _stage_split(spark, sf_dir, "staged_events_timesplit", "events",
+                        split)
 
 
 def _fast_tmp() -> str | None:
@@ -643,78 +659,69 @@ def _fast_tmp() -> str | None:
     return d if os.path.isdir(d) and os.access(d, os.W_OK) else None
 
 
-def _staged_replay(spark: SparkSession, sf_dir: str, sink: str,
-                   output_mode: str, transform) -> DataFrame:
-    """Replay the events fixture through the REAL streaming engine in 2
-    micro-batches and return the memory-sink table.
+def _replay_stream(spark: SparkSession, staged: tuple) -> DataFrame:
+    """readStream over a staged split (_stage_split's (dir, schema)), one
+    file per micro-batch; the staged write preserves the schema."""
+    src_dir, schema = staged
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src_dir))
+    )
 
-    The file streaming source monitors a DIRECTORY; the fixture is a single
-    single-split parquet file. The staging (_staged_events_dir) splits it
-    into exactly 2 files BY EVENT TIME with forced early-then-late replay
-    order, so maxFilesPerTrigger=1 runs 2 real micro-batches whose event
-    time advances the way a live feed's would -- accumulation genuinely
-    crosses batch boundaries, and order-sensitive stateful operators see
-    production arrival order.
+
+def _run_available_now(spark: SparkSession, writer, checkpoint=None):
+    """Run a DataStreamWriter to completion (availableNow) and return the
+    finished query -- the ONE runner behind every streaming parity.
+
+    Without `checkpoint` the runner owns a fresh per-run checkpoint dir and
+    removes it afterwards (the sink has fully materialized by then, so it
+    is dead weight); a caller that resumes one checkpoint across runs
+    (pipeline and crash-recovery parity) passes its own and cleans it up
+    itself. Errors raised inside a micro-batch propagate. The finally
+    stops the query BEFORE the rmtree (ADVICE r04 #2): an interrupt between
+    start() and awaitTermination() must not rmtree directories under a
+    still-active query.
+
+    A streaming query's STATE partition count is fixed at first start from
+    spark.sql.shuffle.partitions; 32 state stores x (batches+1) commits is
+    pure fixed overhead against a 2-file fixture replay, so the run uses
+    state_partitions() (results are partitioning-invariant: hash
+    aggregation / keyed state give the same rows under any partition count
+    -- pinned by the partitioning property tests, and r09 hashed the two
+    stateful parities identical at 8 vs 32 state stores at sf1 --
+    tools/check_state_partitions.py, recorded in COVERAGE.md). The conf is
+    restored in the finally; the suite is single-threaded, so nothing else
+    plans under the temporary value. A production tail sizes this to key
+    cardinality instead (state rows per partition), not to a fixture.
 
     Test-harness concessions, all documented local-mode-only (VERDICT r04
-    "What's wrong" #4): the staging/checkpoint dirs are driver-local
-    tempfile.mkdtemp, on tmpfs when available (_fast_tmp: state-store
-    fsyncs must not inherit the host's writeback backlog; a real cluster
-    would need a shared filesystem -- the deployment path is
-    streaming/pipeline.py), and the memory-sink /
-    temp-view name is session-global, so a repeated sweep holds ONE result
-    table instead of a growing uuid-named set, at the cost that two
-    CONCURRENT invocations sharing a SparkSession would collide on it. The
-    driver and bench harness are single-threaded, so the stable name is the
-    right trade; derive it from sf_dir if concurrent use ever appears.
-
-    The staged source directory is SHARED among all streaming parity
-    queries via the session stage memo (one events write per session+sf_dir,
-    whichever query runs first pays it); it is registered for atexit
-    removal at creation, so it outlives each run but not the process. The
-    per-run checkpoint dir is still created inside the try and removed in
-    the finally, which stops the streaming query BEFORE the rmtree
-    (ADVICE r04 #2) -- an interrupt between start() and awaitTermination()
-    must not rmtree directories under a still-active query."""
+    "What's wrong" #4): staging/checkpoint dirs are driver-local mkdtemp,
+    on tmpfs when available (_fast_tmp; a real cluster would need a shared
+    filesystem -- the deployment path is streaming/pipeline.py), and a
+    memory sink's temp-view name is session-global, so a repeated sweep
+    holds ONE result table instead of a growing uuid-named set, at the
+    cost that two CONCURRENT invocations sharing a SparkSession would
+    collide on it. The driver and bench harness are single-threaded, so
+    the stable name is the right trade."""
     import shutil
     import tempfile
 
-    src_dir, schema = _staged_events_dir(spark, sf_dir)
-    ckpt_dir = q = None
-    # A streaming query's STATE partition count is fixed at first start
-    # from spark.sql.shuffle.partitions; 32 state stores x (batches+1)
-    # commits is pure fixed overhead against a 2-file fixture replay, so
-    # run the harness at 8 (results are partitioning-invariant: hash
-    # aggregation / keyed state give the same rows under any partition
-    # count -- that invariance is itself pinned by the partitioning
-    # property tests). The conf is restored in the finally; the suite is
-    # single-threaded, so nothing else plans under the temporary value. A
-    # production tail sizes this to key cardinality instead (state rows
-    # per partition), not to a fixture. SPARK_GRAFT_STATE_PARTITIONS
-    # overrides for the invariance evidence run (r09: the two stateful
-    # parities hashed identical at 8 vs 32 state stores at sf1 --
-    # tools/check_state_partitions.py, recorded in COVERAGE.md).
     shuffle_conf = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(shuffle_conf)
+    owned = q = None
     try:
         spark.conf.set(shuffle_conf, state_partitions())
-        ckpt_dir = tempfile.mkdtemp(prefix=f"{sink}_ckpt_", dir=_fast_tmp())
-        stream = (
-            spark.readStream.schema(schema)  # staged write preserves it
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        if checkpoint is None:
+            checkpoint = owned = tempfile.mkdtemp(prefix="strm_ckpt_",
+                                                  dir=_fast_tmp())
         q = (
-            transform(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt_dir)
+            writer.option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        return spark.table(sink)
+        return q
     finally:
         spark.conf.set(shuffle_conf, prev_parts)
         if q is not None:
@@ -722,51 +729,36 @@ def _staged_replay(spark: SparkSession, sf_dir: str, sink: str,
                 q.stop()  # no-op after awaitTermination; vital on interrupt
             except Exception:
                 pass
-        # the memory sink has fully materialized by awaitTermination, so
-        # the checkpoint dir is dead weight (the shared staged source stays
-        # for the session; atexit removes it)
-        if ckpt_dir is not None:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+        if owned is not None:
+            shutil.rmtree(owned, ignore_errors=True)
 
 
-def _staged_foreach_replay(spark: SparkSession, sf_dir: str, batch_fn) -> None:
-    """_staged_replay's foreachBatch sibling: the same staged 2-file
-    time-split source and state-partition conf discipline, but delivered
-    through writeStream.foreachBatch + checkpoint + availableNow -- the
-    DEPLOYED wrapper shape (streaming/pipeline.py foreach_batch: an
-    exception inside the body fails the micro-batch and the checkpoint
-    does not advance), minus the HTTP sink. Used by parity queries whose
-    per-batch work is a driver-orchestrated refresh rather than a
-    streaming operator."""
-    import shutil
-    import tempfile
+def _staged_replay(spark: SparkSession, sf_dir: str, sink: str,
+                   output_mode: str, transform) -> DataFrame:
+    """Replay the events fixture through the REAL streaming engine in 2
+    time-ordered micro-batches (_staged_events_dir) into `transform` and a
+    memory sink; returns the sink table. Accumulation genuinely crosses the
+    batch boundary, and order-sensitive stateful operators see production
+    arrival order."""
+    stream = _replay_stream(spark, _staged_events_dir(spark, sf_dir))
+    _run_available_now(
+        spark,
+        transform(stream).writeStream.outputMode(output_mode)
+        .format("memory").queryName(sink),
+    )
+    return spark.table(sink)
 
-    src_dir, schema = _staged_events_dir(spark, sf_dir)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(shuffle_conf)
-    ckpt_dir = q = None
-    try:
-        spark.conf.set(shuffle_conf, state_partitions())
-        ckpt_dir = tempfile.mkdtemp(prefix="ivm_ckpt_", dir=_fast_tmp())
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(batch_fn)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, prev_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        if ckpt_dir is not None:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+
+def _foreach_replay(spark: SparkSession, staged: tuple, batch_fn) -> None:
+    """Replay a staged split through writeStream.foreachBatch + checkpoint
+    + availableNow -- the DEPLOYED wrapper shape (streaming/pipeline.py
+    foreach_batch: an exception inside the body fails the micro-batch and
+    the checkpoint does not advance), minus the HTTP sink. Used by parity
+    queries whose per-batch work is a driver-orchestrated refresh rather
+    than a streaming operator."""
+    _run_available_now(
+        spark, _replay_stream(spark, staged).writeStream.foreachBatch(batch_fn)
+    )
 
 
 @register(
@@ -819,7 +811,7 @@ def streaming_ivm_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 holder["state"], batch_df
             ).localCheckpoint()
 
-        _staged_foreach_replay(spark, sf_dir, refresh)
+        _foreach_replay(spark, _staged_events_dir(spark, sf_dir), refresh)
         if holder["state"] is None:
             raise ValueError("staged replay delivered no micro-batches")
         return holder["state"]
@@ -884,7 +876,7 @@ def streaming_ivm_retract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             holder["users"] = users.localCheckpoint()
             holder["aggs"] = aggs.localCheckpoint()
 
-        _staged_foreach_replay(spark, sf_dir, refresh)
+        _foreach_replay(spark, _staged_events_dir(spark, sf_dir), refresh)
         if holder["aggs"] is None:
             raise ValueError("staged replay delivered no micro-batches")
         return holder["aggs"]
@@ -1207,6 +1199,96 @@ def streaming_mg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _loopback_receiver(fail_first: int = 0):
+    """In-process HTTP receiver on 127.0.0.1 standing in for the
+    reference's remote endpoint (HttpPostAction.cs:39) in the delivery
+    parities. Yields a namespace with `url`, `delivered` (accepted POST
+    bodies, in arrival order), `rejected` (a count) and `lock`, which
+    guards both: handlers run on server threads. The first `fail_first`
+    POSTs get a 503 -- an injected outage the sink must classify
+    retryable. The server shuts down on exit."""
+    import http.server
+    import threading
+    import types
+
+    rx = types.SimpleNamespace(lock=threading.Lock(), delivered=[],
+                               rejected=0)
+
+    class _Handler(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
+            with rx.lock:
+                ok = rx.rejected >= fail_first
+                if ok:
+                    rx.delivered.append(body)
+                else:
+                    rx.rejected += 1
+            self.send_response(200 if ok else 503)
+            self.send_header("Content-Type", "text/plain")
+            self.end_headers()
+            self.wfile.write(b"ok" if ok else b"injected outage")
+
+        def log_message(self, *a):  # silence request logging
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
+    rx.url = f"http://127.0.0.1:{srv.server_address[1]}"
+    thread = threading.Thread(target=srv.serve_forever, daemon=True)
+    thread.start()
+    try:
+        yield rx
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        thread.join(timeout=10)
+
+
+def _delivered_frame(spark: SparkSession, delivered: list) -> DataFrame:
+    """The delivery parities' result: every accepted envelope item
+    aggregated per (operation, event_type) exactly as their oracle's
+    GROUP BY does -- row count, floor-milli value sum (the registry's
+    commuting-integer determinism idiom) and distinct users. Driver-side
+    JSON parse is bounded by the fixture size; the deployment path itself
+    posts executor-side (post_partitions) and collects nothing."""
+    import json
+    import math
+
+    from sqldataintegrationfunctiontriggerapp_spark.state import _local_df
+
+    counts: dict[tuple, list] = {}
+    users: dict[tuple, set] = {}
+    for body in delivered:
+        for change in json.loads(body):
+            item = change["item"]
+            key = (change["operation"], item.get("event_type"))
+            acc = counts.setdefault(key, [0, None])
+            acc[0] += 1
+            v = item.get("value")
+            if v is not None:  # to_json omits null fields; SUM skips NULLs
+                # an all-NULL group must stay None (SQL SUM over no non-null
+                # inputs is NULL, not 0) or the oracle hash would diverge
+                acc[1] = (acc[1] or 0) + math.floor(v * 1000)
+            u = item.get("user_id")
+            if u is not None:  # COUNT(DISTINCT ...) skips NULLs
+                users.setdefault(key, set()).add(u)
+    # no sort: the driver's comparator orders rows itself, and a NULL
+    # event_type group key would make tuple sorting raise
+    rows = [
+        (op, et, n, s, len(users.get((op, et), ())))
+        for (op, et), (n, s) in counts.items()
+    ]
+    # single-slice frame (state.py _local_df): the default createDataFrame
+    # would split these few rows into defaultParallelism slices and the
+    # driver's collect would pay one Python-worker roundtrip per slice
+    return _local_df(
+        spark,
+        rows,
+        "operation string, event_type string, n_rows bigint,"
+        " sum_milli bigint, n_users bigint",
+    )
+
+
 @register(
     "streaming_pipeline_parity",
     oracle="""
@@ -1260,10 +1342,9 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
          accounting end to end: a lost chunk, a double-posted chunk, or a
          mis-projected column all break the hash.
 
-    Harness concessions (local-mode, same class as _staged_replay, all
-    inside this function): the receiver is an in-process
-    ThreadingHTTPServer on 127.0.0.1 (the reference's remote endpoint,
-    HttpPostAction.cs:39); the state store and checkpoint live in driver
+    Harness concessions (local-mode, same class as _run_available_now's,
+    all inside this function): the receiver is an in-process
+    ThreadingHTTPServer on 127.0.0.1 (_loopback_receiver); the state store and checkpoint live in driver
     tmp dirs; the sink's A15 sleeper is a no-op and the A12 wait is
     recorded instead of slept (the suite doesn't idle 10 s + 6 min); and the
     explicit coalesce(1) (verified by the guard below) pins each
@@ -1271,16 +1352,8 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and redelivery re-posts a fully-unposted batch (at scale a
     partially-posted batch redelivers at-least-once instead -- that IS the
     reference's contract, but it would make the delivered-set
-    nondeterministic, which a hash row cannot tolerate). Driver-side JSON
-    parse of the delivered payloads is bounded by the fixture size; the
-    deployment path itself posts executor-side (post_partitions) and
-    collects nothing."""
-    import http.server
-    import json as jsonmod
-    import math
-    import shutil
+    nondeterministic, which a hash row cannot tolerate)."""
     import tempfile
-    import threading
 
     from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
     from sqldataintegrationfunctiontriggerapp_spark.sinks.http_sink import (
@@ -1292,50 +1365,27 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sqldataintegrationfunctiontriggerapp_spark.state import (
         LAST_ERROR,
         StateStore,
-        _local_df,
     )
     from sqldataintegrationfunctiontriggerapp_spark.streaming.pipeline import (
         ChangePipeline,
     )
 
-    src_dir, schema = _staged_events_dir(spark, sf_dir)
-
-    class _Receiver(http.server.BaseHTTPRequestHandler):
-        lock = threading.Lock()
-        fail_remaining = 0
-        rejected = 0
-        delivered: list[bytes] = []
-
-        def do_POST(self):  # noqa: N802
-            body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-            with _Receiver.lock:
-                if _Receiver.fail_remaining > 0:
-                    _Receiver.fail_remaining -= 1
-                    _Receiver.rejected += 1
-                    ok = False
-                else:
-                    _Receiver.delivered.append(body)
-                    ok = True
-            self.send_response(200 if ok else 503)
-            self.send_header("Content-Type", "text/plain")
-            self.end_headers()
-            self.wfile.write(b"ok" if ok else b"injected outage")
-
-        def log_message(self, *a):  # silence request logging
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Receiver)
-    srv_thread = threading.Thread(target=srv.serve_forever, daemon=True)
-    srv_thread.start()
-
+    staged = _staged_events_dir(spark, sf_dir)
+    max_attempts = 2
     a12_waits: list[int] = []
-    settings = EngineSettings(
-        http_base_url=f"http://127.0.0.1:{srv.server_address[1]}",
-        allowed_columns={"events": "Event_Type,Value"},
-    )
-    state_dir = tempfile.mkdtemp(prefix="pipe_parity_state_", dir=_fast_tmp())
-    ckpt_dir = tempfile.mkdtemp(prefix="pipe_parity_ckpt_", dir=_fast_tmp())
-    try:
+    with (
+        _loopback_receiver(fail_first=max_attempts) as rx,
+        tempfile.TemporaryDirectory(prefix="pipe_parity_state_",
+                                    dir=_fast_tmp(),
+                                    ignore_cleanup_errors=True) as state_dir,
+        tempfile.TemporaryDirectory(prefix="pipe_parity_ckpt_",
+                                    dir=_fast_tmp(),
+                                    ignore_cleanup_errors=True) as ckpt_dir,
+    ):
+        settings = EngineSettings(
+            http_base_url=rx.url,
+            allowed_columns={"events": "Event_Type,Value"},
+        )
         st = StateStore(spark, state_dir)
         st.save_allowed_columns("events", "USER_ID")
         # the sleeper (A15 backoff between attempts) runs EXECUTOR-side
@@ -1346,7 +1396,7 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tests/test_pipeline.py::test_backoff_schedule_first_10s)
         sink = HttpSink(
             base_url=settings.http_base_url,
-            max_attempts=2,
+            max_attempts=max_attempts,
             sleeper=lambda _s: None,
         )
         pipe = ChangePipeline(settings=settings, state=st, sink=sink)
@@ -1365,11 +1415,6 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             inner(batch_df, epoch_id)
 
         def run_once() -> Exception | None:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
-            )
             # the single-partition concession is EXPLICIT, not an accident
             # of file size: a parquet scan splits at maxSplitBytes =
             # max(openCostInBytes, totalBytes/defaultParallelism), so once a
@@ -1379,24 +1424,18 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             # redelivery, which IS the reference contract but breaks the
             # deterministic hash row. coalesce(1) (narrow, no shuffle) pins
             # the batch to one task; the fb guard verifies it held.
-            q = (
-                with_operation(stream)
+            writer = (
+                with_operation(_replay_stream(spark, staged))
                 .coalesce(1)
                 .writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
             )
             try:
-                q.awaitTermination()
+                _run_available_now(spark, writer, checkpoint=ckpt_dir)
                 return None
             except Exception as e:  # StreamingQueryException wraps the sink error
                 return e
-            finally:
-                q.stop()
 
         # ---- run 1: outage -> classified failure, LastError, no commit
-        _Receiver.fail_remaining = sink.max_attempts
         err = run_once()
         if err is None:
             raise RuntimeError("injected outage did not fail the micro-batch")
@@ -1408,12 +1447,12 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_err = st.get(LAST_ERROR, "events")
         if not last_err or "status=503" not in last_err:
             raise RuntimeError(f"A10 LastError not recorded: {last_err!r}")
-        with _Receiver.lock:
-            rejected = _Receiver.rejected
-        if rejected != sink.max_attempts:
+        with rx.lock:
+            rejected = rx.rejected
+        if rejected != max_attempts:
             raise RuntimeError(
                 f"A15 retry loop made {rejected} attempts against the"
-                f" outage, expected exactly max_attempts={sink.max_attempts}"
+                f" outage, expected exactly max_attempts={max_attempts}"
             )
 
         # ---- A12 wait between orchestration retries: record the
@@ -1430,49 +1469,12 @@ def streaming_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(f"recovery run failed: {err}")
         if not pipe.last_outcome.get("ok"):
             raise RuntimeError(f"recovery outcome: {pipe.last_outcome!r}")
-        with _Receiver.lock:
-            delivered = list(_Receiver.delivered)
+        with rx.lock:
+            delivered = list(rx.delivered)
         if not delivered:
             raise RuntimeError("receiver accepted no payloads")
-    finally:
-        srv.shutdown()
-        srv.server_close()
-        srv_thread.join(timeout=10)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
-    # aggregate the delivered envelope items exactly as the oracle does
-    counts: dict[tuple, list] = {}
-    users: dict[tuple, set] = {}
-    for body in delivered:
-        for change in jsonmod.loads(body):
-            item = change["item"]
-            key = (change["operation"], item.get("event_type"))
-            acc = counts.setdefault(key, [0, None])
-            acc[0] += 1
-            v = item.get("value")
-            if v is not None:  # to_json omits null fields; SUM skips NULLs
-                # an all-NULL group must stay None (SQL SUM over no non-null
-                # inputs is NULL, not 0) or the oracle hash would diverge
-                acc[1] = (acc[1] or 0) + math.floor(v * 1000)
-            u = item.get("user_id")
-            if u is not None:  # COUNT(DISTINCT ...) skips NULLs
-                users.setdefault(key, set()).add(u)
-    # no sort: the driver's comparator orders rows itself, and a NULL
-    # event_type group key would make tuple sorting raise
-    rows = [
-        (op, et, n, s, len(users.get((op, et), ())))
-        for (op, et), (n, s) in counts.items()
-    ]
-    # single-slice frame (state.py _local_df): the default createDataFrame
-    # would split these few rows into defaultParallelism slices and the
-    # driver's collect would pay one Python-worker roundtrip per slice
-    return _local_df(
-        spark,
-        rows,
-        "operation string, event_type string, n_rows bigint,"
-        " sum_milli bigint, n_users bigint",
-    )
+    return _delivered_frame(spark, delivered)
 
 
 @register(
@@ -1559,7 +1561,7 @@ def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             holder["hist"] = closed.unionByName(delta).localCheckpoint()
 
-        _staged_foreach_replay(spark, sf_dir, refresh)
+        _foreach_replay(spark, _staged_events_dir(spark, sf_dir), refresh)
         if holder["hist"] is None:
             raise ValueError("staged replay delivered no micro-batches")
         return holder["hist"]
@@ -1571,84 +1573,16 @@ def _staged_docs_dir(spark: SparkSession, sf_dir: str):
     """(dir_path, schema) of a 2-file staged DOCUMENTS replay -- the
     corpus-ingestion sibling of _staged_events_dir. Documents carry no
     event time, so the split is by doc_id midpoint (integer floor of
-    (min+max)/2, trivially mirrored in SQL), file names and mtimes forcing
-    replay order low-ids-then-high-ids -- the arrival order of an
-    id-ordered crawl backfill."""
-    import atexit
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-    import time
+    (min+max)/2, trivially mirrored in SQL), low ids first -- the arrival
+    order of an id-ordered crawl backfill."""
 
-    from sqldataintegrationfunctiontriggerapp_spark.plans import _util
-    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
-        session_stage,
-    )
+    def split(docs: DataFrame) -> list[DataFrame]:
+        mid = _split_midpoint(docs, "doc_id", sf_dir)
+        return [docs.where(F.col("doc_id") <= mid),
+                docs.where(F.col("doc_id") > mid)]
 
-    def build():
-        d = tempfile.mkdtemp(prefix="strm_docs_src_", dir=_fast_tmp())
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None or lo == hi:
-            raise ValueError(
-                f"documents doc_id span in {sf_dir} is degenerate"
-                f" ({lo!r}..{hi!r}); the id-split staging needs >=2 ids"
-            )
-        mid = (int(lo) + int(hi)) // 2
-        halves = [
-            docs.where(F.col("doc_id") <= mid),
-            docs.where(F.col("doc_id") > mid),
-        ]
-        now = time.time()
-        for i, half in enumerate(halves):
-            tmp = tempfile.mkdtemp(prefix="strm_docs_half_")
-            try:
-                half.coalesce(1).write.mode("overwrite").parquet(tmp)
-                (part,) = globmod.glob(os.path.join(tmp, "part-*.parquet"))
-                dest = os.path.join(d, f"{i:02d}-half.parquet")
-                shutil.move(part, dest)
-                os.utime(dest, (now - 100 + 60 * i, now - 100 + 60 * i))
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        return _util.StagedDir(d), docs.schema
-
-    return session_stage(spark, sf_dir, "staged_docs_idsplit", build)
-
-
-def _staged_docs_foreach_replay(spark: SparkSession, sf_dir: str,
-                                batch_fn) -> None:
-    """_staged_foreach_replay over the staged DOCUMENTS source."""
-    import shutil
-    import tempfile
-
-    src_dir, schema = _staged_docs_dir(spark, sf_dir)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(shuffle_conf)
-    ckpt_dir = q = None
-    try:
-        spark.conf.set(shuffle_conf, state_partitions())
-        ckpt_dir = tempfile.mkdtemp(prefix="cur_ckpt_", dir=_fast_tmp())
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src_dir))
-            .writeStream.foreachBatch(batch_fn)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, prev_parts)
-        if q is not None:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        if ckpt_dir is not None:
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+    return _stage_split(spark, sf_dir, "staged_docs_idsplit", "documents",
+                        split)
 
 
 def _curation_oracle() -> str:
@@ -1786,7 +1720,7 @@ def streaming_curation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             holder["state"] = merged.localCheckpoint()
 
-        _staged_docs_foreach_replay(spark, sf_dir, refresh)
+        _foreach_replay(spark, _staged_docs_dir(spark, sf_dir), refresh)
         if holder["state"] is None:
             raise ValueError("staged docs replay delivered no micro-batches")
         return holder["state"]
@@ -1803,53 +1737,18 @@ def _staged_late_replay_dir(spark: SparkSession, sf_dir: str):
     to max(ts) - delay), file 1 = the even-event_id early rows (admitted
     while the operative watermark still lags one batch, finalized at the
     batch-1 commit), file 2 = the odd-event_id early rows (same hours as
-    file 1 -- now BELOW the operative watermark, dropped). mtimes force
-    replay order 0, 1, 2."""
-    import atexit
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-    import time
+    file 1 -- now BELOW the operative watermark, dropped). NULL-ts rows
+    ride with the early parts, as in _staged_events_dir."""
 
-    from sqldataintegrationfunctiontriggerapp_spark.plans import _util
-    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
-        session_stage,
-    )
+    def split(ev: DataFrame) -> list[DataFrame]:
+        mid = F.lit(_split_midpoint(ev, "ts", sf_dir))
+        early = (F.col("ts") < mid) | F.col("ts").isNull()
+        return [ev.where(F.col("ts") >= mid),
+                ev.where(early & (F.col("event_id") % 2 == 0)),
+                ev.where(early & (F.col("event_id") % 2 == 1))]
 
-    def build():
-        d = tempfile.mkdtemp(prefix="strm_late_src_", dir=_fast_tmp())
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-        if lo is None or lo == hi:
-            raise ValueError(
-                f"events ts span in {sf_dir} is degenerate ({lo!r}..{hi!r})"
-            )
-        import datetime as _dt
-
-        us = _dt.timedelta(microseconds=1)
-        mid = lo + us * (((hi - lo) // us) // 2)
-        early = (F.col("ts") < F.lit(mid)) | F.col("ts").isNull()
-        parts = [
-            ev.where(F.col("ts") >= F.lit(mid)),
-            ev.where(early & (F.col("event_id") % 2 == 0)),
-            ev.where(early & (F.col("event_id") % 2 == 1)),
-        ]
-        now = time.time()
-        for i, half in enumerate(parts):
-            tmp = tempfile.mkdtemp(prefix="strm_late_half_")
-            try:
-                half.coalesce(1).write.mode("overwrite").parquet(tmp)
-                (part,) = globmod.glob(os.path.join(tmp, "part-*.parquet"))
-                dest = os.path.join(d, f"{i:02d}-part.parquet")
-                shutil.move(part, dest)
-                os.utime(dest, (now - 100 + 30 * i, now - 100 + 30 * i))
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-        return _util.StagedDir(d), ev.schema
-
-    return session_stage(spark, sf_dir, "staged_events_late_replay", build)
+    return _stage_split(spark, sf_dir, "staged_events_late_replay", "events",
+                        split)
 
 
 @register(
@@ -1927,77 +1826,43 @@ def streaming_late_data_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_counts,
     )
 
-    src_dir, schema = _staged_late_replay_dir(spark, sf_dir)
+    staged = _staged_late_replay_dir(spark, sf_dir)
 
     def build():
-        import shutil
-        import tempfile
-
-        shuffle_conf = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(shuffle_conf)
-        ckpt = q = None
         sink = "late_data_windows"
-        try:
-            spark.conf.set(shuffle_conf, state_partitions())
-            ckpt = tempfile.mkdtemp(prefix="late_ckpt_", dir=_fast_tmp())
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src_dir))
+        agg = windowed_counts(_replay_stream(spark, staged), window="1 hour",
+                              watermark="1 hour")
+        q = _run_available_now(
+            spark,
+            agg.writeStream.outputMode("append").format("memory")
+            .queryName(sink),
+        )
+        # Fail-fast semantics probe (ADVICE r10 #3): the oracle hard-codes
+        # the empirically pinned micro-batch admission pattern (batch 0
+        # late-half + batch 1 early-even admitted, batch 2 early-odd
+        # dropped by the now-operative watermark). That is internal
+        # scheduling behavior a Spark version bump could silently flip,
+        # which would surface as an opaque hash mismatch -- so assert the
+        # measured drop profile here and name the contract in the error
+        # instead.
+        drops = [
+            int((p.get("stateOperators") or [{}])[0].get(
+                "numRowsDroppedByWatermark") or 0)
+            for p in (q.recentProgress or [])
+            if int(p.get("numInputRows") or 0) > 0
+        ]
+        if len(drops) != 3 or any(drops[:-1]) or drops[-1] == 0:
+            raise RuntimeError(
+                "streaming_late_data_parity: watermark admission "
+                "profile changed -- expected 3 data micro-batches "
+                "with drops only in the last (one-batch watermark "
+                "lag admits batch 1's early rows, batch 2's are "
+                f"late), observed numRowsDroppedByWatermark={drops}. "
+                "Spark's micro-batch watermark semantics shifted; "
+                "re-derive the oracle's contribution set before "
+                "trusting the hash."
             )
-            agg = windowed_counts(stream, window="1 hour", watermark="1 hour")
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # Fail-fast semantics probe (ADVICE r10 #3): the oracle
-            # hard-codes the empirically pinned micro-batch admission
-            # pattern (batch 0 late-half + batch 1 early-even admitted,
-            # batch 2 early-odd dropped by the now-operative watermark).
-            # That is internal scheduling behavior a Spark version bump
-            # could silently flip, which would surface as an opaque hash
-            # mismatch -- so assert the measured drop profile here and
-            # name the contract in the error instead.
-            data = [
-                p
-                for p in (q.recentProgress or [])
-                if int(p.get("numInputRows") or 0) > 0
-            ]
-            drops = [
-                int(
-                    (p.get("stateOperators") or [{}])[0].get(
-                        "numRowsDroppedByWatermark"
-                    )
-                    or 0
-                )
-                for p in data
-            ]
-            if len(drops) != 3 or any(drops[:-1]) or drops[-1] == 0:
-                raise RuntimeError(
-                    "streaming_late_data_parity: watermark admission "
-                    "profile changed -- expected 3 data micro-batches "
-                    "with drops only in the last (one-batch watermark "
-                    "lag admits batch 1's early rows, batch 2's are "
-                    f"late), observed numRowsDroppedByWatermark={drops}. "
-                    "Spark's micro-batch watermark semantics shifted; "
-                    "re-derive the oracle's contribution set before "
-                    "trusting the hash."
-                )
-            return spark.table(sink).localCheckpoint()
-        finally:
-            spark.conf.set(shuffle_conf, prev)
-            if q is not None:
-                try:
-                    q.stop()
-                except Exception:
-                    pass
-            if ckpt is not None:
-                shutil.rmtree(ckpt, ignore_errors=True)
+        return spark.table(sink).localCheckpoint()
 
     out = session_stage(spark, sf_dir, "late_data_parity", build)
     return out.select("window_start", "event_type", "n", "sum_value")
@@ -2054,15 +1919,10 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
     the checkpoint contract is identical on a shared filesystem — resuming
     from HDFS/S3 offsets is exactly this code path with a durable
     checkpointLocation."""
-    import http.server
-    import json as jsonmod
-    import math
     import os as osmod
-    import shutil
     import subprocess
     import sys as sysmod
     import tempfile
-    import threading
 
     from sqldataintegrationfunctiontriggerapp_spark.config import EngineSettings
     from sqldataintegrationfunctiontriggerapp_spark.sinks.http_sink import (
@@ -2071,41 +1931,22 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import (
         with_operation,
     )
-    from sqldataintegrationfunctiontriggerapp_spark.state import (
-        StateStore,
-        _local_df,
-    )
+    from sqldataintegrationfunctiontriggerapp_spark.state import StateStore
     from sqldataintegrationfunctiontriggerapp_spark.streaming import crash_child
     from sqldataintegrationfunctiontriggerapp_spark.streaming.pipeline import (
         ChangePipeline,
     )
 
-    src_dir, schema = _staged_events_dir(spark, sf_dir)
-
-    class _Receiver(http.server.BaseHTTPRequestHandler):
-        lock = threading.Lock()
-        delivered: list[bytes] = []
-
-        def do_POST(self):  # noqa: N802
-            body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-            with _Receiver.lock:
-                _Receiver.delivered.append(body)
-            self.send_response(200)
-            self.send_header("Content-Type", "text/plain")
-            self.end_headers()
-            self.wfile.write(b"ok")
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Receiver)
-    srv_thread = threading.Thread(target=srv.serve_forever, daemon=True)
-    srv_thread.start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}"
-
-    state_dir = tempfile.mkdtemp(prefix="crash_parity_state_", dir=_fast_tmp())
-    ckpt_dir = tempfile.mkdtemp(prefix="crash_parity_ckpt_", dir=_fast_tmp())
-    try:
+    staged = _staged_events_dir(spark, sf_dir)
+    with (
+        _loopback_receiver() as rx,
+        tempfile.TemporaryDirectory(prefix="crash_parity_state_",
+                                    dir=_fast_tmp(),
+                                    ignore_cleanup_errors=True) as state_dir,
+        tempfile.TemporaryDirectory(prefix="crash_parity_ckpt_",
+                                    dir=_fast_tmp(),
+                                    ignore_cleanup_errors=True) as ckpt_dir,
+    ):
         # A11 state written by THIS process, read by two others below
         StateStore(spark, state_dir).save_allowed_columns("events", "USER_ID")
 
@@ -2117,7 +1958,7 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
         proc = subprocess.run(
             [sysmod.executable, "-m",
              "sqldataintegrationfunctiontriggerapp_spark.streaming.crash_child",
-             src_dir, ckpt_dir, state_dir, url],
+             staged[0], ckpt_dir, state_dir, rx.url],
             env=env, cwd=repo_root, timeout=300,
             capture_output=True, text=True,
         )
@@ -2135,20 +1976,20 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
                 "micro-batch 2 committed before the scripted halt -- the"
                 " crash point drifted; the resume below would prove nothing"
             )
-        with _Receiver.lock:
-            n_child = len(_Receiver.delivered)
+        with rx.lock:
+            n_child = len(rx.delivered)
         if n_child == 0:
             raise RuntimeError("child committed batch 1 but posted nothing")
 
         # ---- process B (this session): resume the SAME checkpoint
         settings = EngineSettings(
-            http_base_url=url,
+            http_base_url=rx.url,
             allowed_columns={"events": "Event_Type,Value"},
         )
         pipe = ChangePipeline(
             settings=settings,
             state=StateStore(spark, state_dir),
-            sink=HttpSink(base_url=url, max_attempts=2,
+            sink=HttpSink(base_url=rx.url, max_attempts=2,
                           sleeper=lambda _s: None),
         )
         inner = pipe.foreach_batch("events")
@@ -2158,21 +1999,12 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
             resume_epochs.append(epoch_id)
             inner(batch_df, epoch_id)
 
-        q = (
-            with_operation(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
-            )
-            .writeStream.foreachBatch(fb)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        _run_available_now(
+            spark,
+            with_operation(_replay_stream(spark, staged))
+            .writeStream.foreachBatch(fb),
+            checkpoint=ckpt_dir,
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
         if resume_epochs[:1] != [1]:
             raise RuntimeError(
                 f"resume replayed epochs {resume_epochs}: expected to START"
@@ -2181,44 +2013,14 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
             )
         if not pipe.last_outcome.get("ok"):
             raise RuntimeError(f"resume outcome: {pipe.last_outcome!r}")
-        with _Receiver.lock:
-            delivered = list(_Receiver.delivered)
+        with rx.lock:
+            delivered = list(rx.delivered)
         if len(delivered) <= n_child:
             raise RuntimeError("resume posted nothing for micro-batch 2")
-    finally:
-        srv.shutdown()
-        srv.server_close()
-        srv_thread.join(timeout=10)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
-    # aggregate the union of both processes' deliveries, exactly as the
-    # oracle's batch GROUP BY does (same envelope algebra as
-    # streaming_pipeline_parity)
-    counts: dict[tuple, list] = {}
-    users: dict[tuple, set] = {}
-    for body in delivered:
-        for change in jsonmod.loads(body):
-            item = change["item"]
-            key = (change["operation"], item.get("event_type"))
-            acc = counts.setdefault(key, [0, None])
-            acc[0] += 1
-            v = item.get("value")
-            if v is not None:
-                acc[1] = (acc[1] or 0) + math.floor(v * 1000)
-            u = item.get("user_id")
-            if u is not None:
-                users.setdefault(key, set()).add(u)
-    rows = [
-        (op, et, n, s, len(users.get((op, et), ())))
-        for (op, et), (n, s) in counts.items()
-    ]
-    return _local_df(
-        spark,
-        rows,
-        "operation string, event_type string, n_rows bigint,"
-        " sum_milli bigint, n_users bigint",
-    )
+    # the union of both processes' deliveries, aggregated as the oracle's
+    # batch GROUP BY does
+    return _delivered_frame(spark, delivered)
 
 
 def _minhash_ingest_oracle() -> str:
@@ -2337,7 +2139,7 @@ def streaming_minhash_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFram
         state["sigs"] = standing_sigs
         state["shingles"] = standing_sh
 
-    _staged_docs_foreach_replay(spark, sf_dir, fb)
+    _foreach_replay(spark, _staged_docs_dir(spark, sf_dir), fb)
     out = state["pairs"][0]
     for p in state["pairs"][1:]:
         out = out.unionByName(p)
@@ -2497,7 +2299,7 @@ def streaming_gdpr_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             holder["store"] = store.localCheckpoint()
             holder["tombs"] = tombs
 
-        _staged_foreach_replay(spark, sf_dir, refresh)
+        _foreach_replay(spark, _staged_events_dir(spark, sf_dir), refresh)
         if holder["store"] is None:
             raise ValueError("staged replay delivered no micro-batches")
         if holder["tombs"] is None:
@@ -2598,7 +2400,7 @@ def streaming_media_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame
             ).localCheckpoint()
         )
 
-    _staged_docs_foreach_replay(spark, sf_dir, fb)
+    _foreach_replay(spark, _staged_docs_dir(spark, sf_dir), fb)
     out = state["parts"][0]
     for p in state["parts"][1:]:
         out = out.unionByName(p)

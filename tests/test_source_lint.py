@@ -5,6 +5,9 @@
 - README's environment table lists exactly the ``SPARK_GRAFT_*`` names the
   package and bench.py read, so a new knob cannot ship undocumented and a
   removed one cannot linger in the docs.
+- The streaming parity harness under ``plans/`` stays one copy: one
+  availableNow runner, one staged-split writer, one loopback receiver and
+  one delivered-envelope aggregator.
 """
 
 from __future__ import annotations
@@ -59,3 +62,39 @@ def test_readme_env_table_matches_env_vars_read():
     assert read, "found no SPARK_GRAFT_* reads at all"
     assert not read - documented, f"read but not in README: {read - documented}"
     assert not documented - read, f"in README but never read: {documented - read}"
+
+
+def _replay_harness_sites(node) -> str | None:
+    """Which one-copy streaming-harness mechanism `node` is, if any."""
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        if node.func.attr == "trigger" and any(
+            k.arg == "availableNow" for k in node.keywords
+        ):
+            return "trigger(availableNow=True)"
+        if node.func.attr == "utime":
+            return "os.utime"
+    if isinstance(node, ast.ClassDef) and any(
+        (b.attr if isinstance(b, ast.Attribute) else getattr(b, "id", None))
+        == "BaseHTTPRequestHandler"
+        for b in node.bases
+    ):
+        return "BaseHTTPRequestHandler subclass"
+    if (isinstance(node, ast.Subscript) and isinstance(node.slice, ast.Constant)
+            and node.slice.value == "item"):
+        return 'envelope ["item"] read'
+    return None
+
+
+def test_streaming_replay_harness_has_one_copy():
+    sites: dict[str, list[str]] = {}
+    for path, tree in _trees(sorted((PACKAGE / "plans").rglob("*.py"))):
+        for node in ast.walk(tree):
+            kind = _replay_harness_sites(node)
+            if kind:
+                sites.setdefault(kind, []).append(
+                    f"{path.relative_to(ROOT)}:{node.lineno}")
+    expected = {"trigger(availableNow=True)", "os.utime",
+                "BaseHTTPRequestHandler subclass", 'envelope ["item"] read'}
+    assert set(sites) == expected, f"mechanisms found: {sorted(sites)}"
+    copies = {k: v for k, v in sites.items() if len(v) > 1}
+    assert not copies, f"copied streaming-harness mechanisms: {copies}"

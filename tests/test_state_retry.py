@@ -170,6 +170,27 @@ def test_backoff_capped_linear():
     assert [s.backoff_minutes(n) for n in (0, 1, 5, 6, 99)] == [6, 7, 11, 12, 12]
 
 
+def test_settings_from_env_binds_reference_names():
+    """Program.cs:34-42 binding: AllowedColumns_{table} by prefix (the
+    table name keeps its case), ints parsed, unset names keep defaults."""
+    s = EngineSettings.from_env({
+        "AllowedColumns_Events": "Event_Type,Value",
+        "AllowedColumns_orders": "o_orderkey",
+        "AllowedColumnsEvents": "not a prefix match",
+        "RetryIntervalMinutesFirst": "2",
+        "NotifyOnRetryCount": "9",
+        "HttpPostBaseUrl": "http://sink.example:8080",
+    })
+    assert s.allowed_columns == {"Events": "Event_Type,Value",
+                                 "orders": "o_orderkey"}
+    assert s.retry_interval_minutes_first == 2
+    assert s.notify_on_retry_count == 9
+    assert s.http_base_url == "http://sink.example:8080"
+    assert s.retry_interval_minutes_max == 12
+    assert s.total_retry_timeout_hours == 168
+    assert s.backoff_minutes(0) == 2
+
+
 def test_timeout_and_rearm():
     now = datetime(2026, 1, 10, tzinfo=timezone.utc)
     assert timed_out(now - timedelta(hours=169), 168, now)  # A19

@@ -138,6 +138,199 @@ def test_staged_replay_is_time_split_and_ordered(spark, sf_dir):
     assert early_max < late_min
 
 
+def _staged_files(d) -> list[str]:
+    """Staged split files in name order, after checking mtimes agree."""
+    import glob
+    import os
+
+    files = sorted(glob.glob(os.path.join(str(d), "*.parquet")))
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+    return files
+
+
+@pytest.fixture()
+def private_stages(monkeypatch, tmp_path):
+    """A stage memo (and staging dir) of the test's own: staging a
+    throwaway sf_dir must not evict the session's shared fixture stages."""
+    from sqldataintegrationfunctiontriggerapp_spark.plans import _util as U
+    from sqldataintegrationfunctiontriggerapp_spark.plans import windows as W
+
+    monkeypatch.setattr(U, "_STAGE_CACHE", {})
+    monkeypatch.setattr(U, "_STAGE_META", {})
+    monkeypatch.setattr(U, "_STAGE_ACTIVE", set())
+    fast = tmp_path / "fast"
+    fast.mkdir()
+    monkeypatch.setattr(W, "_fast_tmp", lambda: str(fast))
+    return fast
+
+
+def _events_fixture(sf_dir, tmp_path, edit):
+    """A throwaway sf_dir whose events.parquet is `edit(events)` (arrow)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    table = edit(pq.read_table(os.path.join(sf_dir, "events.parquet")))
+    pq.write_table(table, str(d / "events.parquet"))
+    return str(d)
+
+
+def test_staged_docs_split_is_id_ordered(spark, sf_dir):
+    """The documents replay (plans/windows.py _staged_docs_dir): 2 files
+    in mtime order, low doc_ids first, every doc_id exactly once -- the
+    arrival order the curation/minhash/media oracles reconstruct as
+    doc_id <= (min+max)//2."""
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _staged_docs_dir,
+    )
+
+    d, _schema = _staged_docs_dir(spark, sf_dir)
+    files = _staged_files(d)
+    assert len(files) == 2
+    low, high = (
+        [r.doc_id for r in spark.read.parquet(f).select("doc_id").collect()]
+        for f in files
+    )
+    assert low and high and max(low) < min(high)
+    ids = [r.doc_id for r in load_table(spark, sf_dir, "documents")
+           .select("doc_id").collect()]
+    assert sorted(low + high) == sorted(ids)
+    assert len(set(ids)) == len(ids)
+
+
+def test_staged_late_replay_parts(spark, sf_dir, tmp_path, private_stages):
+    """The out-of-order replay (plans/windows.py _staged_late_replay_dir):
+    3 files in mtime order, part 0 = the late time-half, parts 1/2 = the
+    even/odd event_id early rows, their union = the events table, and
+    NULL-ts rows ride with the early parts (the split is total)."""
+    import pyarrow as pa
+
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _staged_late_replay_dir,
+    )
+
+    def add_null_ts_rows(events):
+        top = max(events.column("event_id").to_pylist())
+        extra = events.slice(0, 2).to_pydict()
+        extra["event_id"] = [top + 1, top + 2]
+        extra["ts"] = [None, None]
+        return pa.concat_tables(
+            [events, pa.table(extra, schema=events.schema)])
+
+    fx = _events_fixture(sf_dir, tmp_path, add_null_ts_rows)
+    d, _schema = _staged_late_replay_dir(spark, fx)
+    files = _staged_files(d)
+    assert len(files) == 3
+    late, even, odd = (spark.read.parquet(f).collect() for f in files)
+    assert late and even and odd
+    assert all(r.ts is not None for r in late)
+    assert all(r.event_id % 2 == 0 for r in even)
+    assert all(r.event_id % 2 == 1 for r in odd)
+    early_ts = [r.ts for r in even + odd if r.ts is not None]
+    assert max(early_ts) < min(r.ts for r in late)
+    assert [r.ts for r in even + odd].count(None) == 2
+    events = load_table(spark, fx, "events").collect()
+    assert sorted(map(tuple, late + even + odd), key=repr) == sorted(
+        map(tuple, events), key=repr)
+
+
+def test_stage_split_rejects_degenerate_span(spark, sf_dir, tmp_path,
+                                             private_stages):
+    """One distinct timestamp cannot be split by time: staging raises
+    instead of handing the parities an empty micro-batch."""
+    import pyarrow as pa
+
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _staged_events_dir,
+    )
+
+    def one_timestamp(events):
+        head = events.slice(0, 5)
+        ts = pa.array([head.column("ts")[0].as_py()] * 5,
+                      type=head.schema.field("ts").type)
+        return head.set_column(head.schema.get_field_index("ts"), "ts", ts)
+
+    fx = _events_fixture(sf_dir, tmp_path, one_timestamp)
+    with pytest.raises(ValueError, match="degenerate"):
+        _staged_events_dir(spark, fx)
+
+
+def test_replay_runner_cleans_up_after_failing_batch(
+    spark, events_stream_dir, private_stages
+):
+    """_run_available_now's contract when the sink raises inside the
+    batch: the error propagates, the shuffle-partition conf is restored,
+    no query is left active, and the checkpoint it created is gone."""
+    from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
+        state_partitions,
+    )
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _run_available_now,
+    )
+
+    path, schema = events_stream_dir
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    during: list = []
+
+    def failing_sink(df, epoch_id):
+        during.append((spark.conf.get(conf),
+                       [p.name for p in private_stages.iterdir()]))
+        raise RuntimeError("sink failed inside the batch")
+
+    try:
+        writer = (spark.readStream.schema(schema).parquet(path)
+                  .writeStream.foreachBatch(failing_sink))
+        with pytest.raises(Exception, match="sink failed inside the batch"):
+            _run_available_now(spark, writer)
+        assert spark.conf.get(conf) == "3"
+    finally:
+        spark.conf.set(conf, prior)
+    ((conf_during, ckpts_during),) = during
+    assert conf_during == str(state_partitions())
+    assert len(ckpts_during) == 1  # the runner's own checkpoint existed...
+    assert list(private_stages.iterdir()) == []  # ...and is removed
+    assert spark.streams.active == []
+
+
+def test_replay_runner_keeps_caller_owned_checkpoint(
+    spark, events_stream_dir, tmp_path
+):
+    """A caller-owned checkpoint survives a failed run, and the rerun
+    redelivers the uncommitted batch from it (the pipeline parity's
+    outage-then-recovery shape)."""
+    from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
+        _run_available_now,
+    )
+
+    path, schema = events_stream_dir
+    ckpt = tmp_path / "ckpt"
+    delivered: list[int] = []
+
+    def run(fb):
+        _run_available_now(
+            spark,
+            spark.readStream.schema(schema).parquet(path)
+            .writeStream.foreachBatch(fb),
+            checkpoint=str(ckpt),
+        )
+
+    def failing_sink(df, epoch_id):
+        raise RuntimeError("outage")
+
+    with pytest.raises(Exception, match="outage"):
+        run(failing_sink)
+    assert (ckpt / "offsets" / "0").is_file()
+    assert not (ckpt / "commits" / "0").exists()
+    run(lambda df, epoch_id: delivered.append(epoch_id))
+    assert delivered == [0]
+    assert (ckpt / "commits" / "0").is_file()
+
+
 def test_streaming_throttle_parity_equals_greedy_batch(spark, sf_dir):
     """streaming_throttle_parity through the real engine (2 time-ordered
     micro-batches) must equal a driver-side greedy replay of the 6 h gap

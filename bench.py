@@ -3,19 +3,33 @@
 JSON line:
 
   {"metric": "suite_wall_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1, ..., "meta": {...}}
 
 Each query is executed to completion with the noop sink (full plan runs,
 nothing is collected to the driver), which is what a cluster job would do --
 `count()` would let Catalyst prune expensive projections and flatter the
 numbers.
+
+It is also the per-query profiler. Each query runs as two spans
+(perfbench.trace.Tracer): ``build``, the call ``fn(spark, sf_dir)`` that
+constructs the plan (and runs whatever Spark jobs the builder needs), and
+``exec``, the noop save. ``queries[name]`` is build + exec wall. The Spark event log, parsed once after the timed loop,
+splits each span into its jobs' stages, tasks, task run/CPU/GC time,
+shuffle, spill, Python-worker time and driver gap (see ``span_layer``).
+The full-suite run writes them to BENCH_FULL.json as
+``layers: {query: {"build": {...}, "exec": {...}}}`` next to ``meta``
+(host cores, commit, fixture dir, versions, start time); subset runs
+(SPARK_GRAFT_BENCH_QUERIES) print one ``# layers`` stderr line per query.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -23,7 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import pandas as pd
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entrymod
+from perfbench.run import git_meta
+from perfbench.trace import Tracer, covered, parse_event_log
 from sqldataintegrationfunctiontriggerapp_spark.session import DEFAULT_CPUS, get_session
 
 
@@ -92,6 +107,61 @@ def _warmup_dir(target: str) -> str | None:
     return min(cands)[1] if cands else None
 
 
+def run_query(spark, tracer: Tracer, name: str, fn, sf_dir: str) -> float:
+    """Build one registry entry's plan inside a ``build`` span and run it
+    to completion with the noop sink inside an ``exec`` span; each span's
+    Spark jobs run under its own job group. Returns build + exec wall."""
+    sc = spark.sparkContext
+    with tracer.span("build", sc=sc, query=name) as build:
+        df = fn(spark, sf_dir)
+    with tracer.span("exec", sc=sc, query=name) as run:
+        df.write.mode("overwrite").format("noop").save()
+    return sum(s["end"] - s["start"] for s in (build, run))
+
+
+_MB = 1 << 20
+# layer field -> (parse_event_log job field, scale)
+_JOB_SUMS = {
+    "stages": ("stages", 1),
+    "tasks": ("tasks", 1),
+    "task_run_s": ("run_ms", 1e-3),
+    "task_cpu_s": ("cpu_ns", 1e-9),
+    "gc_s": ("gc_ms", 1e-3),
+    "shuffle_read_mb": ("shuffle_read", 1 / _MB),
+    "shuffle_write_mb": ("shuffle_write", 1 / _MB),
+    "spill_mb": ("spill", 1 / _MB),
+}
+
+
+def span_layer(span: dict, events: dict) -> dict:
+    """One span's share of a ``parse_event_log`` result: its wall, its
+    jobs' summed stage/task/shuffle/spill facts, the Python-worker time of
+    the SQL executions those jobs belong to, and the driver gap -- the
+    span's wall not covered by any of its jobs (plan building, py4j,
+    driver-side collects), as perfbench's ``exec.driver_gap_s``."""
+    jobs = [events["jobs"][j] for j in span["jobs"] if j in events["jobs"]]
+    lo, hi = span["start"], span["end"]
+    execs = {j["sql_exec"] for j in jobs} - {None}
+    out = {"wall_s": hi - lo, "jobs": len(span["jobs"])}
+    for field, (key, scale) in _JOB_SUMS.items():
+        out[field] = sum(j[key] for j in jobs) * scale
+    out["python_s"] = sum(
+        events["python"][e]["run_ms"] for e in execs if e in events["python"]
+    ) / 1e3
+    out["driver_gap_s"] = (hi - lo) - covered(
+        [(j["submit"], j["end"] or hi) for j in jobs], lo, hi)
+    return {k: round(v, 3) if isinstance(v, float) else v
+            for k, v in out.items()}
+
+
+def query_layers(spans: list[dict], events: dict) -> dict:
+    """{query: {"build": {...}, "exec": {...}}} over ``run_query``'s spans."""
+    layers: dict[str, dict] = {}
+    for s in spans:
+        layers.setdefault(s["query"], {})[s["name"]] = span_layer(s, events)
+    return layers
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -114,7 +184,23 @@ def main() -> None:
     real_stdout_fd = os.dup(1)
     os.dup2(2, 1)
     sys.stdout = sys.stderr
-    spark = get_session(app_name="bench")
+    meta = {
+        "cpus": int(DEFAULT_CPUS), "nproc": len(os.sched_getaffinity(0)),
+        **git_meta(), "sf_dir": os.path.abspath(sf_dir),
+        "python": sys.version.split()[0],
+        "start_time": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+    }
+    # Spark event log for the per-query layers: uncompressed, in a temp dir
+    # removed at exit, written by the listener bus off the query threads
+    # and parsed only after the timed loop
+    log_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
+    atexit.register(shutil.rmtree, log_dir, True)
+    spark = get_session(app_name="bench", extra_conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.dir": f"file://{log_dir}",
+    })
+    meta["spark"] = spark.version
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
     # Python-worker warmup: fork + pandas import for the Arrow UDF pool once,
     # not inside the first measured pandas_udf query (real clusters run
@@ -206,6 +292,7 @@ def main() -> None:
         sampler = threading.Thread(target=_sample_storage, daemon=True)
         sampler.start()
     storage_peaks: dict[str, float] = {}
+    tracer = Tracer("bench", enabled=True)
     # Measure in registry-natural (module) order, NOT the driver's
     # correctness-sweep priority order: the sweep priority is reshuffled
     # every round toward queries with stale evidence, and whichever query
@@ -213,9 +300,10 @@ def main() -> None:
     # pools, AQE init) -- measured ~10x on a sub-second query. A stable
     # order keeps per-query times comparable round over round.
     from sqldataintegrationfunctiontriggerapp_spark import plans
-    # Optional subset for spot-benches at other scale factors (e.g. the sf1
-    # scaling table in COVERAGE.md): SPARK_GRAFT_BENCH_QUERIES="q1,q7",
-    # validated against the registry above BEFORE session startup. The
+    # Optional subset for spot-benches and per-query profiles:
+    # SPARK_GRAFT_BENCH_QUERIES="q1,q7", validated against the registry
+    # above BEFORE session startup and run in the order given, so earlier
+    # names warm the shared session stages a later target reuses. The
     # driver's per-round run sets no filter and measures the full suite.
     selected = (
         {n: plans.QUERIES[n] for n in wanted} if only else plans.QUERIES
@@ -226,9 +314,7 @@ def main() -> None:
             with peak_lock:
                 peak_holder["epoch"] += 1
                 peak_holder["peak"] = baseline
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
+        dt = run_query(spark, tracer, name, fn, sf_dir)
         timings[name] = round(dt, 3)
         total += dt
         if not sampling:
@@ -262,6 +348,9 @@ def main() -> None:
     peak_holder["stop"] = True
     probe_post = _calibration_probe(spark)
     print(f"# calibration probe (post): {probe_post:.2f}s", file=sys.stderr)
+    # stopping the session flushes and closes the event log
+    spark.stop()
+    layers = query_layers(tracer.spans, parse_event_log(log_dir))
     payload = {
         "metric": "suite_wall_sec",
         "value": round(total, 3),
@@ -273,6 +362,7 @@ def main() -> None:
         # cross-round ratios of these values measure the HOST, not the code
         "probe_sec_pre": probe_pre,
         "probe_sec_post": probe_post,
+        "meta": meta,
     }
     line = json.dumps(payload)
     # The driver's BENCH_r{N}.json keeps only a ~2 KB tail of stdout, which
@@ -280,13 +370,18 @@ def main() -> None:
     # queries from round-over-round comparison -- VERDICT r02 #8). Persist
     # the complete JSON next to the repo so the full suite is always
     # readable regardless of the driver's capture window.
+    # The per-query layers are kept out of the stdout line for that reason.
     # subset spot-benches and --no-ledger-sampling A/B runs must not
-    # clobber the canonical full-suite record (which carries the peaks)
+    # clobber the canonical full-suite record (which carries the peaks);
+    # they print each query's layers to stderr instead
     if not only and sampling:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_FULL.json"), "w") as f:
-            json.dump(payload, f, indent=1)
+            json.dump({**payload, "layers": layers}, f, indent=1)
             f.write("\n")
+    else:
+        for name, layer in layers.items():
+            print(f"# layers {name}: {json.dumps(layer)}", file=sys.stderr)
     os.write(real_stdout_fd, (line + "\n").encode())
     os.close(real_stdout_fd)
 

@@ -28,44 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-_BYTE_SUFFIXES = {
-    "": 1,
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-    "t": 1 << 40,
-    "tb": 1 << 40,
-    "p": 1 << 50,
-    "pb": 1 << 50,
-}
-
-
-def _parse_byte_conf(value: str, default: int = 134217728) -> int:
-    """Parse a Spark byte conf ("134217728", "128m", "128MB") to bytes.
-
-    Mirrors JavaUtils.byteStringAsBytes' suffix table (b/k/m/g/t/p with
-    optional trailing 'b'). Unparseable input falls back to the default
-    rather than raising -- this value only tunes a local-mode heuristic.
-    """
-    s = str(value).strip().lower()
-    i = len(s)
-    while i > 0 and not s[: i].isdigit():
-        i -= 1
-    num, suffix = s[:i], s[i:].strip()
-    if not num or suffix not in _BYTE_SUFFIXES:
-        return default
-    try:
-        # isdigit() admits characters int() rejects (e.g. superscripts) --
-        # keep the never-raise contract regardless
-        return int(num) * _BYTE_SUFFIXES[suffix]
-    except ValueError:
-        return default
-
-
 # sf_dirs whose shuffle-partition derivation has been applied to a session,
 # keyed by (applicationId, sf_dir) -- the derivation walks parquet footers
 # (~ms/file) so it runs once per pair, not per load_table call
@@ -171,8 +133,10 @@ def load_table(
             # on a cluster, so spreading is already a no-op -- skip the
             # local-only stat entirely.
             return df
-        split_bytes = _parse_byte_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        # the session's parsed spark.sql.files.maxPartitionBytes: Spark
+        # rejects an unparseable value at conf.set, so this always reads
+        split_bytes = (
+            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         )
         try:
             if os.path.isdir(path):

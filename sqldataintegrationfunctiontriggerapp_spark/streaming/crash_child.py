@@ -124,7 +124,15 @@ def main(argv: list[str]) -> int:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    except Exception:
+        # once the crash is armed, the halt can reach this thread first:
+        # py4j's connection to the dead JVM is refused before the batch
+        # thread gets to os._exit, and a raise here would exit 1
+        if len(seen_epochs) >= 2:
+            os._exit(EXIT_CODE)
+        raise
     # reaching here means the crash never fired (staging produced < 2
     # micro-batches) — exit 0 so the parent's returncode assert fails loudly
     return 0

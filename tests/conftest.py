@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.trace import Tracer
 from sqldataintegrationfunctiontriggerapp_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.001"  # smallest fixtures: tests stay fast
@@ -29,16 +30,11 @@ def count_jobs(spark):
     """``count_jobs(fn, *args)`` runs ``fn`` under a fresh job group and
     returns ``(result, number of Spark jobs it ran)``."""
     sc = spark.sparkContext
+    tracer = Tracer(f"count-jobs-{uuid.uuid4().hex}", enabled=True)
 
     def run(fn, *args, **kwargs):
-        group = f"count-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
+        with tracer.span("count_jobs", sc=sc) as rec:
             out = fn(*args, **kwargs)
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description",
-                         "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(prop, None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, len(rec["jobs"])
 
     return run

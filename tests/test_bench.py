@@ -1,11 +1,17 @@
-"""bench.py's warmup-dir choice: a smaller sibling fixture or nothing."""
+"""bench.py: the warmup-dir choice (a smaller sibling fixture or nothing)
+and the per-query build/exec layers."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
+import uuid
+
+import pytest
 
 import bench
+from perfbench.trace import Tracer
 
 
 def _fixture(path, n_bytes: int):
@@ -47,3 +53,93 @@ def test_warmup_dir_skips_sibling_vanishing_after_glob(tmp_path, monkeypatch):
 
     monkeypatch.setattr(os.path, "isdir", racing_isdir)
     assert bench._warmup_dir(str(target)) is None
+
+
+_MB = 1 << 20
+
+
+def _job(submit, end, sql_exec, **facts):
+    job = {"submit": submit, "end": end, "sql_exec": sql_exec, "group": None,
+           "stages": 0, "tasks": 0, "run_ms": 0, "cpu_ns": 0, "gc_ms": 0,
+           "shuffle_read": 0, "shuffle_write": 0, "spill": 0}
+    job.update(facts)
+    return job
+
+
+def test_query_layers_sums_each_phase_from_its_own_jobs():
+    events = {
+        "jobs": {
+            # jobs 1 and 2 overlap in [11, 12] and share SQL execution 7
+            1: _job(10.0, 12.0, 7, stages=2, tasks=5, run_ms=1000,
+                    cpu_ns=500_000_000, gc_ms=100, shuffle_read=2 * _MB,
+                    shuffle_write=_MB),
+            2: _job(11.0, 13.0, 7, stages=1, tasks=3, run_ms=500,
+                    spill=_MB // 2),
+            # still running at the event log's end: clipped at the span end
+            3: _job(14.0, None, 8, stages=1, tasks=1),
+            4: _job(20.5, 21.0, 9, stages=3, tasks=9, run_ms=4000),
+        },
+        "python": {7: {"rows": 10.0, "run_ms": 300.0},
+                   8: {"rows": 1.0, "run_ms": 200.0},
+                   9: {"rows": 99.0, "run_ms": 5000.0}},
+    }
+    spans = [
+        {"name": "build", "query": "qa", "start": 9.0, "end": 16.0,
+         "jobs": [1, 2, 3]},
+        {"name": "exec", "query": "qa", "start": 16.0, "end": 17.0, "jobs": []},
+        # job 99 is missing from the log: counted, but it adds no facts
+        {"name": "build", "query": "qb", "start": 20.0, "end": 20.2, "jobs": []},
+        {"name": "exec", "query": "qb", "start": 20.2, "end": 21.5,
+         "jobs": [4, 99]},
+    ]
+    layers = bench.query_layers(spans, events)
+    assert set(layers) == {"qa", "qb"}
+    assert set(layers["qa"]) == {"build", "exec"}
+    build = layers["qa"]["build"]
+    assert build == {
+        "wall_s": 7.0, "jobs": 3, "stages": 4, "tasks": 9,
+        "task_run_s": 1.5, "task_cpu_s": 0.5, "gc_s": 0.1,
+        "shuffle_read_mb": 2.0, "shuffle_write_mb": 1.0, "spill_mb": 0.5,
+        # execution 7 counted once although two of the span's jobs share it;
+        # execution 9 belongs to qb's jobs only
+        "python_s": 0.5,
+        # union of [10, 13] and [14, 16] covers 5 of the span's 7 seconds
+        "driver_gap_s": 2.0,
+    }
+    idle = layers["qa"]["exec"]
+    assert idle["jobs"] == 0 and idle["python_s"] == 0
+    assert idle["driver_gap_s"] == idle["wall_s"] == 1.0
+    other = layers["qb"]["exec"]
+    assert other["jobs"] == 2 and other["tasks"] == 9
+    assert other["python_s"] == 5.0
+    assert other["driver_gap_s"] == pytest.approx(0.8)
+    assert layers["qb"]["build"]["python_s"] == 0
+
+
+def test_run_query_splits_each_entry_into_build_and_exec(spark, sf_dir):
+    from sqldataintegrationfunctiontriggerapp_spark import plans
+
+    tracer = Tracer(f"bench-test-{uuid.uuid4().hex}", enabled=True)
+    names = ["percentiles", "q13_order_distribution"]
+    timings = {}
+    for name in names:
+        t0 = time.time()
+        timings[name] = bench.run_query(
+            spark, tracer, name, plans.QUERIES[name], sf_dir)
+        assert timings[name] <= time.time() - t0
+    layers = bench.query_layers(tracer.spans, {"jobs": {}, "python": {}})
+    jobs = {}
+    for name in names:
+        phases = {s["name"]: s for s in tracer.spans if s["query"] == name}
+        assert set(phases) == {"build", "exec"}
+        wall = sum(s["end"] - s["start"] for s in phases.values())
+        assert wall == pytest.approx(timings[name], abs=1e-9)
+        recorded = layers[name]["build"]["wall_s"] + layers[name]["exec"]["wall_s"]
+        assert recorded == pytest.approx(timings[name], abs=0.002)
+        # both entries open parquet tables without a schema: inferring it
+        # runs a Spark job while the plan is built
+        assert len(phases["build"]["jobs"]) >= 1
+        assert len(phases["exec"]["jobs"]) >= 1
+        assert not set(phases["build"]["jobs"]) & set(phases["exec"]["jobs"])
+        jobs[name] = set(phases["build"]["jobs"]) | set(phases["exec"]["jobs"])
+    assert not jobs[names[0]] & jobs[names[1]]

@@ -1,35 +1,39 @@
-"""Catalog helpers: byte-conf parsing for the spread heuristic (ADVICE r03).
-
-No SparkSession needed -- pure parsing. The spread gate itself is covered
-indirectly by every sweep query via load_table(spread=True) callers.
-"""
+"""Catalog helpers: the spread gate of ``load_table`` and session-stage
+eviction."""
 
 from __future__ import annotations
 
-import pytest
+from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
 
-from sqldataintegrationfunctiontriggerapp_spark.catalog import _parse_byte_conf
-
-
-@pytest.mark.parametrize(
-    ("raw", "expect"),
-    [
-        ("134217728", 134217728),      # plain int (Spark's default form)
-        ("134217728b", 134217728),     # explicit bytes suffix
-        ("128m", 128 << 20),           # JavaUtils short suffix
-        ("128MB", 128 << 20),          # human-readable, any case
-        (" 1g ", 1 << 30),             # whitespace tolerated
-        ("2t", 2 << 40),
-    ],
-)
-def test_parse_byte_conf_suffixes(raw, expect):
-    assert _parse_byte_conf(raw) == expect
+_SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
 
-@pytest.mark.parametrize("raw", ["", "mb", "garbage", "12.5m", "-1m", "²b"])
-def test_parse_byte_conf_falls_back_on_unparseable(raw):
-    # the value only tunes a local heuristic: never raise, use the default
-    assert _parse_byte_conf(raw) == 134217728
+def _round_robin(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "RoundRobinPartitioning" in plan
+
+
+def test_spread_gate_branches_return_the_same_rows(spark, sf_dir):
+    """``spread=True`` adds a round-robin exchange only when the table is
+    smaller than two scan splits per two cores: at the 128 MB default the
+    sf0.001 lineitem file is, at 1 KB splits it is not. Both branches
+    return the same rows."""
+    prev = spark.conf.get(_SPLIT_CONF, None)
+    try:
+        spark.conf.unset(_SPLIT_CONF)
+        spread = load_table(spark, sf_dir, "lineitem", spread=True)
+        assert _round_robin(spread)
+        rows = sorted(spread.collect())
+        spark.conf.set(_SPLIT_CONF, "1k")
+        split = load_table(spark, sf_dir, "lineitem", spread=True)
+        assert not _round_robin(split)
+        assert sorted(split.collect()) == rows
+    finally:
+        if prev is None:
+            spark.conf.unset(_SPLIT_CONF)
+        else:
+            spark.conf.set(_SPLIT_CONF, prev)
+    assert rows
 
 
 def test_session_stage_eviction_frees_checkpoint_blocks(spark, monkeypatch, tmp_path):

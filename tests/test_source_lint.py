@@ -8,6 +8,10 @@
 - The streaming parity harness under ``plans/`` stays one copy: one
   availableNow runner, one staged-split writer, one loopback receiver and
   one delivered-envelope aggregator.
+- Spark job measurement has one path, ``perfbench/trace.py``: no other
+  file sets a job group, reads the Spark UI's REST API or subclasses
+  ``StreamingQueryListener``. Per-query job facts come from ``bench.py``'s
+  spans and event-log parse.
 """
 
 from __future__ import annotations
@@ -64,6 +68,14 @@ def test_readme_env_table_matches_env_vars_read():
     assert not documented - read, f"in README but never read: {documented - read}"
 
 
+def _subclasses(node, base: str) -> bool:
+    return isinstance(node, ast.ClassDef) and any(
+        (b.attr if isinstance(b, ast.Attribute) else getattr(b, "id", None))
+        == base
+        for b in node.bases
+    )
+
+
 def _replay_harness_sites(node) -> str | None:
     """Which one-copy streaming-harness mechanism `node` is, if any."""
     if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
@@ -73,11 +85,7 @@ def _replay_harness_sites(node) -> str | None:
             return "trigger(availableNow=True)"
         if node.func.attr == "utime":
             return "os.utime"
-    if isinstance(node, ast.ClassDef) and any(
-        (b.attr if isinstance(b, ast.Attribute) else getattr(b, "id", None))
-        == "BaseHTTPRequestHandler"
-        for b in node.bases
-    ):
+    if _subclasses(node, "BaseHTTPRequestHandler"):
         return "BaseHTTPRequestHandler subclass"
     if (isinstance(node, ast.Subscript) and isinstance(node.slice, ast.Constant)
             and node.slice.value == "item"):
@@ -98,3 +106,37 @@ def test_streaming_replay_harness_has_one_copy():
     assert set(sites) == expected, f"mechanisms found: {sorted(sites)}"
     copies = {k: v for k, v in sites.items() if len(v) > 1}
     assert not copies, f"copied streaming-harness mechanisms: {copies}"
+
+
+_UI_REST_PATH = "/api/v1/applications"
+
+
+def _measurement_sites(node) -> str | None:
+    """Which second-measurement-path mechanism `node` is, if any."""
+    if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "setJobGroup"):
+        return "setJobGroup call"
+    if isinstance(node, ast.Attribute) and node.attr == "uiWebUrl":
+        return "uiWebUrl"
+    if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and _UI_REST_PATH in node.value):
+        return _UI_REST_PATH
+    if _subclasses(node, "StreamingQueryListener"):
+        return "StreamingQueryListener subclass"
+    return None
+
+
+def test_spark_jobs_are_measured_only_through_perfbench_trace():
+    paths = [
+        p for p in sorted(ROOT.rglob("*.py"))
+        if p != Path(__file__).resolve()
+        and not any(part.startswith(".") or part == "perfbench"
+                    for part in p.relative_to(ROOT).parts)
+    ]
+    found = [
+        f"{path.relative_to(ROOT)}:{node.lineno} {kind}"
+        for path, tree in _trees(paths)
+        for node in ast.walk(tree)
+        if (kind := _measurement_sites(node))
+    ]
+    assert not found, f"measurement outside perfbench/trace.py: {found}"

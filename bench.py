@@ -13,9 +13,11 @@ numbers.
 It is also the per-query profiler. Each query runs as two spans
 (perfbench.trace.Tracer): ``build``, the call ``fn(spark, sf_dir)`` that
 constructs the plan (and runs whatever Spark jobs the builder needs), and
-``exec``, the noop save. ``queries[name]`` is build + exec wall. The Spark event log, parsed once after the timed loop,
-splits each span into its jobs' stages, tasks, task run/CPU/GC time,
-shuffle, spill, Python-worker time and driver gap (see ``span_layer``).
+``exec``, the noop save. ``queries[name]`` is build + exec wall. The
+Spark event log, parsed once after the timed loop, gives each span the
+jobs submitted while it ran and splits it into their stages, tasks, task
+run/CPU/GC time, shuffle, spill, Python-worker time and driver gap (see
+``span_layer``).
 The full-suite run writes them to BENCH_FULL.json as
 ``layers: {query: {"build": {...}, "exec": {...}}}`` next to ``meta``
 (host cores, commit, fixture dir, versions, start time); subset runs
@@ -26,6 +28,7 @@ from __future__ import annotations
 
 import atexit
 import json
+import math
 import os
 import shutil
 import sys
@@ -109,12 +112,12 @@ def _warmup_dir(target: str) -> str | None:
 
 def run_query(spark, tracer: Tracer, name: str, fn, sf_dir: str) -> float:
     """Build one registry entry's plan inside a ``build`` span and run it
-    to completion with the noop sink inside an ``exec`` span; each span's
-    Spark jobs run under its own job group. Returns build + exec wall."""
-    sc = spark.sparkContext
-    with tracer.span("build", sc=sc, query=name) as build:
+    to completion with the noop sink inside an ``exec`` span. The spans
+    set no job group: ``span_layer`` finds their jobs in the event log by
+    submit time. Returns build + exec wall."""
+    with tracer.span("build", query=name) as build:
         df = fn(spark, sf_dir)
-    with tracer.span("exec", sc=sc, query=name) as run:
+    with tracer.span("exec", query=name) as run:
         df.write.mode("overwrite").format("noop").save()
     return sum(s["end"] - s["start"] for s in (build, run))
 
@@ -138,11 +141,18 @@ def span_layer(span: dict, events: dict) -> dict:
     jobs' summed stage/task/shuffle/spill facts, the Python-worker time of
     the SQL executions those jobs belong to, and the driver gap -- the
     span's wall not covered by any of its jobs (plan building, py4j,
-    driver-side collects), as perfbench's ``exec.driver_gap_s``."""
-    jobs = [events["jobs"][j] for j in span["jobs"] if j in events["jobs"]]
+    driver-side collects), as perfbench's ``exec.driver_gap_s``.
+
+    A span's jobs are those submitted inside [start, end], compared at the
+    log's millisecond resolution -- whatever job group they ran under, so
+    a streaming query's micro-batch jobs (each batch runs under the
+    stream's own group) count toward the span that ran the stream."""
     lo, hi = span["start"], span["end"]
+    lo_ms, hi_ms = math.floor(lo * 1000), math.floor(hi * 1000)
+    jobs = [j for j in events["jobs"].values()
+            if lo_ms <= round(j["submit"] * 1000) <= hi_ms]
     execs = {j["sql_exec"] for j in jobs} - {None}
-    out = {"wall_s": hi - lo, "jobs": len(span["jobs"])}
+    out = {"wall_s": hi - lo, "jobs": len(jobs)}
     for field, (key, scale) in _JOB_SUMS.items():
         out[field] = sum(j[key] for j in jobs) * scale
     out["python_s"] = sum(

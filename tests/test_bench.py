@@ -78,22 +78,28 @@ def test_query_layers_sums_each_phase_from_its_own_jobs():
             # still running at the event log's end: clipped at the span end
             3: _job(14.0, None, 8, stages=1, tasks=1),
             4: _job(20.5, 21.0, 9, stages=3, tasks=9, run_ms=4000),
+            # a job under another group (a streaming micro-batch) counts
+            # toward the span it was submitted in
+            5: _job(21.2, 21.4, None, stages=1, tasks=2, group="stream-run"),
+            # submitted between spans (bench's clearCache, the probes)
+            6: _job(18.0, 19.0, 10, stages=5, tasks=50, run_ms=9000),
+            # submitted in the span's first millisecond, before its start:
+            # compared at the event log's millisecond resolution
+            7: _job(22.0, 22.1, None, tasks=4),
         },
         "python": {7: {"rows": 10.0, "run_ms": 300.0},
                    8: {"rows": 1.0, "run_ms": 200.0},
                    9: {"rows": 99.0, "run_ms": 5000.0}},
     }
     spans = [
-        {"name": "build", "query": "qa", "start": 9.0, "end": 16.0,
-         "jobs": [1, 2, 3]},
-        {"name": "exec", "query": "qa", "start": 16.0, "end": 17.0, "jobs": []},
-        # job 99 is missing from the log: counted, but it adds no facts
-        {"name": "build", "query": "qb", "start": 20.0, "end": 20.2, "jobs": []},
-        {"name": "exec", "query": "qb", "start": 20.2, "end": 21.5,
-         "jobs": [4, 99]},
+        {"name": "build", "query": "qa", "start": 9.0, "end": 16.0},
+        {"name": "exec", "query": "qa", "start": 16.0, "end": 17.0},
+        {"name": "build", "query": "qb", "start": 20.0, "end": 20.2},
+        {"name": "exec", "query": "qb", "start": 20.2, "end": 21.5},
+        {"name": "build", "query": "qc", "start": 22.0004, "end": 22.5},
     ]
     layers = bench.query_layers(spans, events)
-    assert set(layers) == {"qa", "qb"}
+    assert set(layers) == {"qa", "qb", "qc"}
     assert set(layers["qa"]) == {"build", "exec"}
     build = layers["qa"]["build"]
     assert build == {
@@ -110,25 +116,49 @@ def test_query_layers_sums_each_phase_from_its_own_jobs():
     assert idle["jobs"] == 0 and idle["python_s"] == 0
     assert idle["driver_gap_s"] == idle["wall_s"] == 1.0
     other = layers["qb"]["exec"]
-    assert other["jobs"] == 2 and other["tasks"] == 9
+    assert other["jobs"] == 2 and other["tasks"] == 11
     assert other["python_s"] == 5.0
-    assert other["driver_gap_s"] == pytest.approx(0.8)
+    assert other["driver_gap_s"] == pytest.approx(0.6)
     assert layers["qb"]["build"]["python_s"] == 0
+    assert layers["qb"]["build"]["jobs"] == 0
+    assert layers["qc"]["build"]["jobs"] == 1
+    assert layers["qc"]["build"]["tasks"] == 4
+    assert sum(p["jobs"] for q in layers.values() for p in q.values()) == 6
+
+
+def _live_events(spark, job_ids) -> dict:
+    """A ``parse_event_log``-shaped job table for ``job_ids``, read from the
+    running application's status store: real submit/completion clocks,
+    no task facts."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = {}
+    for jid in job_ids:
+        data = store.job(jid)
+        end = data.completionTime()
+        jobs[jid] = _job(data.submissionTime().get().getTime() / 1000,
+                         end.get().getTime() / 1000 if end.isDefined() else None,
+                         None)
+    return {"jobs": jobs, "python": {}}
 
 
 def test_run_query_splits_each_entry_into_build_and_exec(spark, sf_dir):
+    """run_query sets no job group; every job it runs lands, by submit
+    time, in exactly one of its build/exec spans."""
     from sqldataintegrationfunctiontriggerapp_spark import plans
 
     tracer = Tracer(f"bench-test-{uuid.uuid4().hex}", enabled=True)
+    outer = Tracer(f"bench-test-all-{uuid.uuid4().hex}", enabled=True)
     names = ["percentiles", "q13_order_distribution"]
     timings = {}
-    for name in names:
-        t0 = time.time()
-        timings[name] = bench.run_query(
-            spark, tracer, name, plans.QUERIES[name], sf_dir)
-        assert timings[name] <= time.time() - t0
-    layers = bench.query_layers(tracer.spans, {"jobs": {}, "python": {}})
-    jobs = {}
+    with outer.span("all", sc=spark.sparkContext) as everything:
+        for name in names:
+            t0 = time.time()
+            timings[name] = bench.run_query(
+                spark, tracer, name, plans.QUERIES[name], sf_dir)
+            assert timings[name] <= time.time() - t0
+    assert all("jobs" not in s and "group" not in s for s in tracer.spans)
+    layers = bench.query_layers(
+        tracer.spans, _live_events(spark, everything["jobs"]))
     for name in names:
         phases = {s["name"]: s for s in tracer.spans if s["query"] == name}
         assert set(phases) == {"build", "exec"}
@@ -138,8 +168,7 @@ def test_run_query_splits_each_entry_into_build_and_exec(spark, sf_dir):
         assert recorded == pytest.approx(timings[name], abs=0.002)
         # both entries open parquet tables without a schema: inferring it
         # runs a Spark job while the plan is built
-        assert len(phases["build"]["jobs"]) >= 1
-        assert len(phases["exec"]["jobs"]) >= 1
-        assert not set(phases["build"]["jobs"]) & set(phases["exec"]["jobs"])
-        jobs[name] = set(phases["build"]["jobs"]) | set(phases["exec"]["jobs"])
-    assert not jobs[names[0]] & jobs[names[1]]
+        assert layers[name]["build"]["jobs"] >= 1
+        assert layers[name]["exec"]["jobs"] >= 1
+    attributed = sum(p["jobs"] for q in layers.values() for p in q.values())
+    assert attributed == len(everything["jobs"])

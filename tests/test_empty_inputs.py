@@ -4,6 +4,7 @@ match nothing -- operators must return empty results, not crash."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.operators import dedup as D
@@ -129,3 +130,112 @@ def test_classifier_weight_is_vocabulary_independent(spark):
     h = hashlib.md5(b"hello").hexdigest()
     bucket = (int(h[0], 16)) * 16 + int(h[1], 16)
     assert by_tok["hello"] == {_qc_weights()[bucket]}
+
+
+def _member(c):
+    """SemDeDup's pair-stage input: (vec_id, cluster_id, v, n2), zero-norm
+    rows excluded."""
+    return (
+        c.select("vec_id", S._as_double("embedding").alias("v"))
+        .withColumn("n2", S.dot(F.col("v"), F.col("v")))
+        .withColumn("cluster_id", (F.col("vec_id") % 3).cast("int"))
+        .where(F.col("n2") > 0)
+    )
+
+
+# Every public frame-or-model kernel of operators/similarity.py as
+# fn(corpus, queries, ref) -> DataFrame | list; `ref` is the non-empty
+# corpus, for kernels that take a prebuilt index (pivots, codebooks).
+# The flag says whether the kernel takes a query set.
+_PIVOTS = 4
+_SIMILARITY_KERNELS = {
+    "brute_force_topk": (lambda c, q, ref: S.brute_force_topk(c, q, k=3), True),
+    "brute_force_topk_blas": (
+        lambda c, q, ref: S.brute_force_topk_blas(c, q, k=3), True),
+    "ivf_scored": (
+        lambda c, q, ref: S.ivf_scored(c, q, n_lists=_PIVOTS, n_probe=2), True),
+    "ivf_topk": (
+        lambda c, q, ref: S.ivf_topk(c, q, k=3, n_lists=_PIVOTS, n_probe=2),
+        True),
+    "ivf_topk_blas": (
+        lambda c, q, ref: S.ivf_topk_blas(
+            c, q, k=3, n_lists=_PIVOTS, n_probe=2), True),
+    "ivf_probe_pairs": (
+        lambda c, q, ref: S.ivf_probe_pairs(
+            S.ivf_assign(c, S.ivf_pivots(ref, _PIVOTS)), q,
+            S.ivf_pivots(ref, _PIVOTS), n_probe=2), True),
+    "ivf_probe": (
+        lambda c, q, ref: S.ivf_probe(
+            S.ivf_assign(c, S.ivf_pivots(ref, _PIVOTS)), q,
+            S.ivf_pivots(ref, _PIVOTS), n_probe=2), True),
+    "ivf_probe_topk_blas": (
+        lambda c, q, ref: S.ivf_probe_topk_blas(
+            S.ivf_assign(c, S.ivf_pivots(ref, _PIVOTS)), q,
+            S.ivf_pivots(ref, _PIVOTS), k=3, n_probe=2), True),
+    "lsh_topk": (lambda c, q, ref: S.lsh_topk(c, q, k=3, nbits=2), True),
+    "cosine_pairs_above": (lambda c, q, ref: S.cosine_pairs_above(c, 0.4), False),
+    "cosine_pairs_above_blas": (
+        lambda c, q, ref: S.cosine_pairs_above_blas(c, 0.4), False),
+    "cosine_pairs_above_bucketed": (
+        lambda c, q, ref: S.cosine_pairs_above_bucketed(c, 0.4, n_pivots=4),
+        False),
+    "cosine_pairs_above_bucketed_blas": (
+        lambda c, q, ref: S.cosine_pairs_above_bucketed_blas(
+            c, 0.4, n_pivots=4), False),
+    "cosine_pairs_above_auto": (
+        lambda c, q, ref: S.cosine_pairs_above_auto(c, 0.4), False),
+    "cluster_pairs_above_blas": (
+        lambda c, q, ref: S.cluster_pairs_above_blas(_member(c), 0.4), False),
+    "semantic_pairs_auto": (
+        lambda c, q, ref: S.semantic_pairs_auto(_member(c), 0.4), False),
+    "ivf_pivots": (lambda c, q, ref: S.ivf_pivots(c, _PIVOTS), False),
+    "ivf_assign": (
+        lambda c, q, ref: S.ivf_assign(c, S.ivf_pivots(ref, _PIVOTS)), False),
+    "ivf_assign_blas": (
+        lambda c, q, ref: S.ivf_assign_blas(c, S.ivf_pivots(ref, _PIVOTS)),
+        False),
+    "kmeans_fit": (lambda c, q, ref: S.kmeans_fit(c, k=3, iters=1), False),
+    "kmeans_lloyd": (lambda c, q, ref: S.kmeans_lloyd(c, k=3, iters=1), False),
+    "pq_fit": (
+        lambda c, q, ref: S.pq_fit(c, m=4, k=4, iters=1, dim=64), False),
+    "pq_fit_multi": (
+        lambda c, q, ref: S.pq_fit_multi(
+            [c], [S.ivf_pivots(c, 4)], m=4, k=4, iters=1, dim=64)[0], False),
+    "pq_codes": (
+        lambda c, q, ref: S.pq_codes(
+            c, S.pq_fit(ref, m=4, k=4, iters=1, dim=64)), False),
+    "pq_codes_blas": (
+        lambda c, q, ref: S.pq_codes_blas(
+            c, S.pq_fit(ref, m=4, k=4, iters=1, dim=64)), False),
+    "pq_codes_auto": (
+        lambda c, q, ref: S.pq_codes_auto(
+            c, S.pq_fit(ref, m=4, k=4, iters=1, dim=64)), False),
+}
+
+
+def _rows(out) -> int:
+    return len(out) if isinstance(out, list) else out.count()
+
+
+@pytest.mark.parametrize("name", sorted(_SIMILARITY_KERNELS))
+def test_similarity_kernel_empty_inputs(spark, sf_dir, name):
+    """An empty corpus -- and an empty query set, for kernels that take
+    one -- yields zero rows (zero centroids/codebooks for the fits),
+    typed exactly like the kernel's result on non-empty input: a
+    downstream union, join or window over an empty batch must analyse
+    the same way as over a full one."""
+    from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
+
+    fn, takes_queries = _SIMILARITY_KERNELS[name]
+    corpus = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 64)
+    queries = corpus.where(F.col("vec_id") < 4)
+    none = spark.createDataFrame([], corpus.schema)
+    ref = fn(corpus, queries, corpus)
+    cases = [(none, queries)] + ([(corpus, none)] if takes_queries else [])
+    for c, q in cases:
+        out = fn(c, q, corpus)
+        assert _rows(out) == 0
+        if isinstance(ref, list):
+            assert ref and isinstance(out, list)
+        else:
+            assert out.schema == ref.schema, (out.schema, ref.schema)

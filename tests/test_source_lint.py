@@ -12,6 +12,12 @@
   file sets a job group, reads the Spark UI's REST API or subclasses
   ``StreamingQueryListener``. Per-query job facts come from ``bench.py``'s
   spans and event-log parse.
+- ``operators/similarity.py`` states each exactness rule once: the exact
+  ``np.add.accumulate`` re-score lives only in its helper, one top-k rank
+  window, one candidate-margin literal, one decimal-exact mean aggregate.
+- The scripts outside the package (``tools/*.py``, ``bench.py``,
+  ``__spark_entry__.py``) only reference package names that exist: no
+  test runs them, so a rename would otherwise break them silently.
 """
 
 from __future__ import annotations
@@ -140,3 +146,165 @@ def test_spark_jobs_are_measured_only_through_perfbench_trace():
         if (kind := _measurement_sites(node))
     ]
     assert not found, f"measurement outside perfbench/trace.py: {found}"
+
+
+SIMILARITY = PACKAGE / "operators" / "similarity.py"
+# the only functions that may run the exact left-to-right re-score fold
+_RESCORE_HELPERS = {"_exact_dots"}
+
+
+def _is_call_to(node, attr: str, *args) -> bool:
+    """``<anything>.attr(*args, ...)`` with the given leading constants."""
+    return (
+        isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+        and [getattr(a, "value", None) for a in node.args[:len(args)]]
+        == list(args)
+    )
+
+
+def _enclosing_functions(tree):
+    """{id(node): name of the top-level function holding it}."""
+    owner = {}
+    for top in tree.body:
+        if isinstance(top, ast.FunctionDef):
+            for node in ast.walk(top):
+                owner[id(node)] = top.name
+    return owner
+
+
+def test_similarity_exactness_rules_have_one_copy():
+    tree = ast.parse(SIMILARITY.read_text())
+    owner = _enclosing_functions(tree)
+    nodes = list(ast.walk(tree))
+    accumulate = [
+        f"{owner.get(id(n), '<module>')}:{n.lineno}" for n in nodes
+        if isinstance(n, ast.Attribute) and n.attr == "accumulate"
+        and isinstance(n.value, ast.Attribute) and n.value.attr == "add"
+    ]
+    topk_windows = [
+        n.lineno for n in nodes
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "orderBy"
+        and _is_call_to(n.func.value, "partitionBy", "query_id")
+        and any(_is_call_to(a, "desc", "cos") for a in n.args)
+    ]
+    margins = [
+        n.lineno for n in nodes
+        if isinstance(n, ast.Constant) and n.value == 1e-6
+    ]
+    margin_assigns = [
+        n.lineno for n in nodes
+        if isinstance(n, ast.Assign) and isinstance(n.value, ast.Constant)
+        and n.value.value == 1e-6
+    ]
+    means = [n.lineno for n in nodes if _is_call_to(n, "cast", "decimal(18,6)")]
+    problems = []
+    if not accumulate or any(a.split(":")[0] not in _RESCORE_HELPERS
+                             for a in accumulate):
+        problems.append(f"np.add.accumulate at {accumulate}")
+    if len(topk_windows) != 1:
+        problems.append(f"top-k rank windows at lines {topk_windows}")
+    if len(margins) != 1 or margin_assigns != margins:
+        problems.append(f"candidate margin 1e-6 at lines {margins}")
+    if len(means) != 1:
+        problems.append(f"decimal(18,6) mean aggregates at lines {means}")
+    assert not problems, problems
+
+
+PACKAGE_NAME = PACKAGE.name
+SCRIPTS = sorted((ROOT / "tools").glob("*.py")) + [
+    ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+
+
+def _module_path(dotted: str) -> Path | None:
+    """The source of a package module: ``x/y.py`` or ``x/y/__init__.py``."""
+    base = ROOT.joinpath(*dotted.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _top_level_names(dotted: str) -> set[str]:
+    """Names a module binds at top level (definitions, assignments,
+    imports, also inside top-level if/try blocks), plus its submodules
+    when it is a package."""
+    path = _module_path(dotted)
+    names: set[str] = set()
+
+    def visit(body):
+        for node in body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                names.update(n.id for t in targets for n in ast.walk(t)
+                             if isinstance(n, ast.Name))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names.update((a.asname or a.name).split(".")[0]
+                             for a in node.names)
+            elif isinstance(node, (ast.If, ast.Try)):
+                visit(node.body + node.orelse + getattr(node, "finalbody", []))
+                for handler in getattr(node, "handlers", []):
+                    visit(handler.body)
+
+    visit(ast.parse(path.read_text()).body)
+    if path.name == "__init__.py":
+        names.update(p.stem for p in path.parent.glob("*.py"))
+        names.update(p.parent.name for p in path.parent.glob("*/__init__.py"))
+    return names
+
+
+def _resolve(dotted: str, attrs: list[str]) -> str | None:
+    """Walk ``attrs`` from module ``dotted``; the first name that does not
+    exist, or None when the whole chain resolves (the walk stops at the
+    first non-module name)."""
+    for attr in attrs:
+        if attr not in _top_level_names(dotted):
+            return f"{dotted}.{attr}"
+        if _module_path(f"{dotted}.{attr}") is None:
+            return None
+        dotted = f"{dotted}.{attr}"
+    return None
+
+
+def _attr_chain(node) -> tuple[str, list[str]] | None:
+    """``Alias.a.b`` as ("Alias", ["a", "b"]) for the outermost Attribute."""
+    attrs = []
+    while isinstance(node, ast.Attribute):
+        attrs.append(node.attr)
+        node = node.value
+    return (node.id, attrs[::-1]) if isinstance(node, ast.Name) else None
+
+
+def test_scripts_reference_only_existing_package_names():
+    missing = []
+    for path, tree in _trees(SCRIPTS):
+        where = path.relative_to(ROOT)
+        aliases: dict[str, str] = {}  # local name -> package module
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").split(
+                    ".")[0] == PACKAGE_NAME:
+                for a in node.names:
+                    bad = _resolve(node.module, [a.name])
+                    if bad:
+                        missing.append(f"{where}:{node.lineno} {bad}")
+                    elif _module_path(f"{node.module}.{a.name}"):
+                        aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == PACKAGE_NAME and a.asname:
+                        aliases[a.asname] = a.name
+        outer = {id(n.value) for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute) or id(node) in outer:
+                continue
+            chain = _attr_chain(node)
+            if chain and chain[0] in aliases:
+                bad = _resolve(aliases[chain[0]], chain[1])
+                if bad:
+                    missing.append(f"{where}:{node.lineno} {bad}")
+    assert SCRIPTS and not missing, f"unresolved package names: {missing}"

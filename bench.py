@@ -17,7 +17,8 @@ constructs the plan (and runs whatever Spark jobs the builder needs), and
 Spark event log, parsed once after the timed loop, gives each span the
 jobs submitted while it ran and splits it into their stages, tasks, task
 run/CPU/GC time, shuffle, spill, Python-worker time and driver gap (see
-``span_layer``).
+``span_layer``); the JVM's codegen counters give the classes compiled in
+it and the seconds that took.
 The full-suite run writes them to BENCH_FULL.json as
 ``layers: {query: {"build": {...}, "exec": {...}}}`` next to ``meta``
 (host cores, commit, fixture dir, versions, start time); subset runs
@@ -110,15 +111,36 @@ def _warmup_dir(target: str) -> str | None:
     return min(cands)[1] if cands else None
 
 
+def codegen_counts(spark) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) so far: Spark's
+    Janino compile counter and compile-time sum. Both are JVM-global, so
+    in local mode they include the executors' compiles."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime() / 1e9,
+    )
+
+
 def run_query(spark, tracer: Tracer, name: str, fn, sf_dir: str) -> float:
     """Build one registry entry's plan inside a ``build`` span and run it
     to completion with the noop sink inside an ``exec`` span. The spans
     set no job group: ``span_layer`` finds their jobs in the event log by
-    submit time. Returns build + exec wall."""
+    submit time. Each span records the classes compiled while it ran
+    (``codegen_compiles``, ``codegen_s``), read at the span boundaries,
+    outside the spans. Returns build + exec wall."""
+    counts = [codegen_counts(spark)]
     with tracer.span("build", query=name) as build:
         df = fn(spark, sf_dir)
+    counts.append(codegen_counts(spark))
     with tracer.span("exec", query=name) as run:
         df.write.mode("overwrite").format("noop").save()
+    counts.append(codegen_counts(spark))
+    for span, (n0, s0), (n1, s1) in zip((build, run), counts, counts[1:]):
+        span["codegen_compiles"] = n1 - n0
+        span["codegen_s"] = s1 - s0
     return sum(s["end"] - s["start"] for s in (build, run))
 
 
@@ -141,7 +163,8 @@ def span_layer(span: dict, events: dict) -> dict:
     jobs' summed stage/task/shuffle/spill facts, the Python-worker time of
     the SQL executions those jobs belong to, and the driver gap -- the
     span's wall not covered by any of its jobs (plan building, py4j,
-    driver-side collects), as perfbench's ``exec.driver_gap_s``.
+    driver-side collects), as perfbench's ``exec.driver_gap_s``, and the
+    classes ``run_query`` counted compiled while it ran.
 
     A span's jobs are those submitted inside [start, end], compared at the
     log's millisecond resolution -- whatever job group they ran under, so
@@ -152,7 +175,9 @@ def span_layer(span: dict, events: dict) -> dict:
     jobs = [j for j in events["jobs"].values()
             if lo_ms <= round(j["submit"] * 1000) <= hi_ms]
     execs = {j["sql_exec"] for j in jobs} - {None}
-    out = {"wall_s": hi - lo, "jobs": len(jobs)}
+    out = {"wall_s": hi - lo, "jobs": len(jobs),
+           "codegen_compiles": span["codegen_compiles"],
+           "codegen_s": span["codegen_s"]}
     for field, (key, scale) in _JOB_SUMS.items():
         out[field] = sum(j[key] for j in jobs) * scale
     out["python_s"] = sum(
@@ -211,6 +236,8 @@ def main() -> None:
         "spark.eventLog.dir": f"file://{log_dir}",
     })
     meta["spark"] = spark.version
+    meta["codegen_cache_entries"] = int(
+        spark.conf.get("spark.sql.codegen.cache.maxEntries"))
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
     # Python-worker warmup: fork + pandas import for the Arrow UDF pool once,
     # not inside the first measured pandas_udf query (real clusters run

@@ -75,6 +75,53 @@ def _resize_shuffle_for(spark: SparkSession, sf_dir: str) -> None:
         pass  # sizing is an optimization; never fail a scan over it
 
 
+# (applicationId, absolute table path) -> (_schema_stamp at inference,
+# Spark's inferred schema); see load_table
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
+
+# reader confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+
+def _schema_stamp(spark: SparkSession, path: str) -> tuple:
+    """What a memoised schema of the local table ``path`` is valid for:
+    each file's (name, size, mtime_ns) -- the file itself, or every file
+    under the directory, a superset of the ones Spark reads -- and the
+    values of ``_INFERENCE_CONFS``."""
+    if os.path.isdir(path):
+        files = sorted(os.path.join(root, n)
+                       for root, _dirs, names in os.walk(path) for n in names)
+    else:
+        files = [path]
+    stats = []
+    for f in files:
+        st = os.stat(f)
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    return (tuple(stats),
+            tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+
+
+def _read_local(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inference job paid once
+    per session and table version: a repeated open passes the memoised
+    schema back with ``.schema()``, which runs no job."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    stamp = _schema_stamp(spark, path)
+    memo = _SCHEMAS.get(key)
+    if memo is not None and memo[0] == stamp:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -92,6 +139,15 @@ def load_table(
     The conf is set here (not only in session.get_session) because callers --
     the correctness driver, notebooks -- hand us their own bare SparkSession;
     it is runtime-settable SQL conf, so this works on any session.
+
+    Opening a local table without a schema makes Spark run a schema
+    inference job. The schema Spark inferred is memoised per application id
+    and absolute path, valid while each data file's (name, size, mtime_ns)
+    and the reader confs that change inference (``_INFERENCE_CONFS``) are
+    unchanged; a repeated open passes it back with ``.schema()`` and runs
+    no job. A table rewritten in place, a changed conf or a new session
+    infers again. Remote schemes (s3://, hdfs://) are not stat-ed and
+    always infer.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     _resize_shuffle_for(spark, sf_dir)
@@ -100,7 +156,7 @@ def load_table(
     if is_local and not os.path.exists(path):
         raise FileNotFoundError(f"fixture table {name!r} not found at {path}")
     try:
-        df = spark.read.parquet(path)
+        df = _read_local(spark, path) if is_local else spark.read.parquet(path)
     except AnalysisException as e:
         # Remote-scheme path (s3://, hdfs://) skipped the os.path.exists
         # check above; surface a missing fixture as the same crisp

@@ -1018,7 +1018,8 @@ def _nearest(book: list[list[float]], vec: Column, n2: Column) -> Column:
     distance, ties to the lowest index: the JVM argmin every IVF, k-means
     and PQ assignment uses, and `_blas_exact_argmin`'s reference. Pass
     `vec` and `n2` as column references: inside the zip_with lambda an
-    expression is re-evaluated once per codeword."""
+    expression is re-evaluated once per codeword (`_nearest_once` binds
+    columns nothing else reads)."""
     return argmin_index(_d2s_to_pivots(book, vec, n2), len(book)).cast("int")
 
 
@@ -1527,6 +1528,28 @@ def pq_fit(
                         m, k, iters, dim, vec_col, via_blas)[0]
 
 
+def _pq_subspaces(
+    frame: DataFrame,
+    books: list[list[list[float]]],
+    v: Column,
+    keep: tuple[str, ...] = (),
+) -> tuple[DataFrame, list[Column], list[Column]]:
+    """``frame`` projected to ``keep`` plus each subspace's slice of the
+    array<double> vector ``v`` and its squared norm, as columns computed
+    once per row; returns the frame and references to both column lists.
+    `_nearest` needs them as references: passed as expressions they are
+    re-evaluated once per codeword inside its zip_with lambda (measured at
+    sf0.1 on a 4-core host: the JVM pq_fit 4.0 s -> 2.4 s)."""
+    w = len(books[0][0])
+    sv = [f"_sv{s}" for s in range(len(books))]
+    n2 = [f"_n2{s}" for s in range(len(books))]
+    subs = frame.select(
+        *keep, *[F.slice(v, s * w + 1, w).alias(c) for s, c in enumerate(sv)]
+    ).select(*keep, *sv,
+             *[dot(F.col(c), F.col(c)).alias(n) for c, n in zip(sv, n2)])
+    return subs, [F.col(c) for c in sv], [F.col(n) for n in n2]
+
+
 def _pq_assign_long(
     corpus: DataFrame,
     books: list[list[list[float]]],
@@ -1538,21 +1561,12 @@ def _pq_assign_long(
     codes by the _blas_exact_argmin contract, test-pinned)."""
     if via_blas:
         return _pq_assign_long_blas(corpus, books, vec_col)
-    # subvectors and their norms as columns, computed once per row: passed
-    # to `_nearest` as expressions they would be re-evaluated per codeword
-    # (measured at sf0.1 on a 4-core host: the JVM pq_fit 4.0 s -> 2.4 s)
-    w = len(books[0][0])
-    sv = [f"_sv{s}" for s in range(len(books))]
-    n2 = [f"_n2{s}" for s in range(len(books))]
-    v = _as_double(vec_col)
-    subs = corpus.select(
-        *[F.slice(v, s * w + 1, w).alias(c) for s, c in enumerate(sv)]
-    ).select(*sv, *[dot(F.col(c), F.col(c)).alias(n) for c, n in zip(sv, n2)])
+    subs, sv, n2 = _pq_subspaces(corpus, books, _as_double(vec_col))
     rows = [
         F.struct(
             F.lit(s).alias("s"),
-            _nearest(book, F.col(sv[s]), F.col(n2[s])).alias("cid"),
-            F.col(sv[s]).alias("sv"),
+            _nearest(book, sv[s], n2[s]).alias("cid"),
+            sv[s].alias("sv"),
         )
         for s, book in enumerate(books)
     ]
@@ -1746,18 +1760,33 @@ def _pq_assign_long_blas(
     return base.mapInPandas(gen, "s int, cid int, sv array<double>")
 
 
-def pq_code_cols(
-    books: list[list[list[float]]], v: Column
-) -> list[Column]:
-    """One argmin codeword-id Column per subspace over an array<double>
-    vector expression (aliased code_0..code_{m-1}) -- shared by pq_codes
-    and the IVF+PQ composition so the encode rule can never drift."""
-    w = len(books[0][0])
-    subs = [F.slice(v, s * w + 1, w) for s in range(len(books))]
-    return [
-        _nearest(book, sub, dot(sub, sub)).alias(f"code_{s}")
-        for s, (book, sub) in enumerate(zip(books, subs))
-    ]
+def _nearest_once(book: list[list[float]], vec: Column, n2: Column) -> Column:
+    """`_nearest` with ``vec`` and ``n2`` bound once per row as the fields
+    of a one-element array's lambda variable. Projecting them as columns
+    is not enough where nothing else reads them: Catalyst's CollapseProject
+    inlines a column its consumer references once, and inside the zip_with
+    lambda that one reference is evaluated once per codeword."""
+    return F.transform(
+        F.array(F.struct(vec.alias("v"), n2.alias("n2"))),
+        lambda x: _nearest(book, x["v"], x["n2"]),
+    )[0]
+
+
+def pq_encode(
+    frame: DataFrame,
+    books: list[list[list[float]]],
+    v: Column,
+    keep: tuple[str, ...],
+) -> DataFrame:
+    """``frame``'s ``keep`` columns and one argmin codeword id per subspace
+    of the array<double> vector ``v`` (code_0..code_{m-1}) -- shared by
+    pq_codes and the IVF+PQ composition so the encode rule can never
+    drift."""
+    subs, sv, n2 = _pq_subspaces(frame, books, v, keep)
+    return subs.select(*keep, *[
+        _nearest_once(book, sv[s], n2[s]).alias(f"code_{s}")
+        for s, book in enumerate(books)
+    ])
 
 
 def pq_codes(
@@ -1770,9 +1799,7 @@ def pq_codes(
     pure map (m argmin expressions against codebook literals -- the
     ivf_assign argmin per subspace, zero-norm included: PQ is Euclidean).
     Returns (id, code_0..code_{{m-1}}); no shuffle, scan-speed."""
-    return corpus.select(
-        F.col(id_col), *pq_code_cols(books, _as_double(vec_col))
-    )
+    return pq_encode(corpus, books, _as_double(vec_col), (id_col,))
 
 
 def pq_codes_auto(

@@ -137,8 +137,9 @@ def truthful_ckpt(df):
        honest sizeInBytes; RDD-level blocks survive clearCache -- verified
        4,468,320 bytes reported before and after unpersist+clearCache);
        BIG stage: write local parquet from the cache and read it back
-       (consumers stream compressed columnar files; no Java-deser
-       rehydration of spilled blocks -- the 8 g OOM class retired);
+       with the cache's schema (consumers stream compressed columnar
+       files; no Java-deser rehydration of spilled blocks -- the 8 g OOM
+       class retired);
     4. release the now-redundant SQL-cache copy.
 
     The size is known only after step 1, so the branch is chosen before
@@ -168,7 +169,8 @@ def truthful_ckpt(df):
 
         path = tempfile.mkdtemp(prefix="stage_", dir=_stage_spill_root())
         cached.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+        # the files hold `cached`'s rows: its schema, not an inference job
+        out = spark.read.schema(cached.schema).parquet(path)
         out._staged_dir = StagedDir(path)
     else:
         out = cached.localCheckpoint()

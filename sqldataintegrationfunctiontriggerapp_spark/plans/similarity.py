@@ -403,16 +403,18 @@ def ann_index_publish_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             pivots = S.ivf_pivots(snapshot, 16)
             staging = os.path.join(base, f"staging_{version}")
-            S.ivf_assign(snapshot, pivots).write.parquet(
-                os.path.join(staging, "assigned")
-            )
+            assigned = S.ivf_assign(snapshot, pivots)
+            assigned.write.parquet(os.path.join(staging, "assigned"))
             with open(os.path.join(staging, "pivots.json"), "w") as f:
                 json.dump(pivots, f)
+            # the index was written from `assigned`: read it back with that
+            # schema instead of running a schema inference job
+            index_schema = assigned.schema
 
             def validate(p):
-                if spark.read.parquet(os.path.join(p, "assigned")).where(
-                    F.col("list_id").isNull()
-                ).count():
+                if spark.read.schema(index_schema).parquet(
+                    os.path.join(p, "assigned")
+                ).where(F.col("list_id").isNull()).count():
                     raise ValueError("null list_id in staged index")
 
             published.append(
@@ -422,7 +424,9 @@ def ann_index_publish_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur = table_current(root)
             with open(os.path.join(cur, "pivots.json")) as f:
                 served_pivots = json.load(f)
-            idx = spark.read.parquet(os.path.join(cur, "assigned"))
+            idx = spark.read.schema(index_schema).parquet(
+                os.path.join(cur, "assigned")
+            )
             scored = S.ivf_probe(
                 idx, snapshot.where(F.col("vec_id") < 5), served_pivots,
                 n_probe=4,
@@ -1321,9 +1325,7 @@ def _ivfpq_codes(e: DataFrame, pivots, books) -> DataFrame:
             extra_cols=["list_id"],
         )
     assigned = S.ivf_assign(e, pivots, include_zero_norm=True)
-    return assigned.select(
-        "neighbor_id", "list_id", *S.pq_code_cols(books, F.col("cv"))
-    )
+    return S.pq_encode(assigned, books, F.col("cv"), ("neighbor_id", "list_id"))
 
 
 def _ivfpq_rank(e: DataFrame, pivots, books, codes: DataFrame) -> DataFrame:

@@ -92,18 +92,24 @@ def test_query_layers_sums_each_phase_from_its_own_jobs():
                    9: {"rows": 99.0, "run_ms": 5000.0}},
     }
     spans = [
-        {"name": "build", "query": "qa", "start": 9.0, "end": 16.0},
-        {"name": "exec", "query": "qa", "start": 16.0, "end": 17.0},
-        {"name": "build", "query": "qb", "start": 20.0, "end": 20.2},
-        {"name": "exec", "query": "qb", "start": 20.2, "end": 21.5},
-        {"name": "build", "query": "qc", "start": 22.0004, "end": 22.5},
+        {"name": "build", "query": "qa", "start": 9.0, "end": 16.0,
+         "codegen_compiles": 12, "codegen_s": 0.25},
+        {"name": "exec", "query": "qa", "start": 16.0, "end": 17.0,
+         "codegen_compiles": 0, "codegen_s": 0.0},
+        {"name": "build", "query": "qb", "start": 20.0, "end": 20.2,
+         "codegen_compiles": 3, "codegen_s": 0.0421},
+        {"name": "exec", "query": "qb", "start": 20.2, "end": 21.5,
+         "codegen_compiles": 1, "codegen_s": 0.01},
+        {"name": "build", "query": "qc", "start": 22.0004, "end": 22.5,
+         "codegen_compiles": 0, "codegen_s": 0.0},
     ]
     layers = bench.query_layers(spans, events)
     assert set(layers) == {"qa", "qb", "qc"}
     assert set(layers["qa"]) == {"build", "exec"}
     build = layers["qa"]["build"]
     assert build == {
-        "wall_s": 7.0, "jobs": 3, "stages": 4, "tasks": 9,
+        "wall_s": 7.0, "jobs": 3, "codegen_compiles": 12, "codegen_s": 0.25,
+        "stages": 4, "tasks": 9,
         "task_run_s": 1.5, "task_cpu_s": 0.5, "gc_s": 0.1,
         "shuffle_read_mb": 2.0, "shuffle_write_mb": 1.0, "spill_mb": 0.5,
         # execution 7 counted once although two of the span's jobs share it;
@@ -121,6 +127,9 @@ def test_query_layers_sums_each_phase_from_its_own_jobs():
     assert other["driver_gap_s"] == pytest.approx(0.6)
     assert layers["qb"]["build"]["python_s"] == 0
     assert layers["qb"]["build"]["jobs"] == 0
+    # the codegen counts are the span's own, rounded like every float
+    assert layers["qb"]["build"]["codegen_compiles"] == 3
+    assert layers["qb"]["build"]["codegen_s"] == 0.042
     assert layers["qc"]["build"]["jobs"] == 1
     assert layers["qc"]["build"]["tasks"] == 4
     assert sum(p["jobs"] for q in layers.values() for p in q.values()) == 6
@@ -141,22 +150,33 @@ def _live_events(spark, job_ids) -> dict:
     return {"jobs": jobs, "python": {}}
 
 
-def test_run_query_splits_each_entry_into_build_and_exec(spark, sf_dir):
+def test_run_query_splits_each_entry_into_build_and_exec(
+        spark, sf_dir, monkeypatch):
     """run_query sets no job group; every job it runs lands, by submit
-    time, in exactly one of its build/exec spans."""
-    from sqldataintegrationfunctiontriggerapp_spark import plans
+    time, in exactly one of its build/exec spans, and every class compiled
+    while it runs in exactly one span's ``codegen_compiles``."""
+    from sqldataintegrationfunctiontriggerapp_spark import catalog, plans
 
+    # open the tables as a fresh session would: no schema memoised yet
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
     tracer = Tracer(f"bench-test-{uuid.uuid4().hex}", enabled=True)
     outer = Tracer(f"bench-test-all-{uuid.uuid4().hex}", enabled=True)
     names = ["percentiles", "q13_order_distribution"]
     timings = {}
+    compiled0, compile_s0 = bench.codegen_counts(spark)
     with outer.span("all", sc=spark.sparkContext) as everything:
         for name in names:
             t0 = time.time()
             timings[name] = bench.run_query(
                 spark, tracer, name, plans.QUERIES[name], sf_dir)
             assert timings[name] <= time.time() - t0
+    compiled1, compile_s1 = bench.codegen_counts(spark)
     assert all("jobs" not in s and "group" not in s for s in tracer.spans)
+    assert sum(s["codegen_compiles"] for s in tracer.spans) == (
+        compiled1 - compiled0)
+    assert sum(s["codegen_s"] for s in tracer.spans) == pytest.approx(
+        compile_s1 - compile_s0, abs=1e-9)
+    assert all(s["codegen_s"] >= 0 for s in tracer.spans)
     layers = bench.query_layers(
         tracer.spans, _live_events(spark, everything["jobs"]))
     for name in names:

@@ -1,9 +1,14 @@
-"""Catalog helpers: the spread gate of ``load_table`` and session-stage
-eviction."""
+"""Catalog helpers: the spread gate of ``load_table``, its schema memo, and
+session-stage eviction."""
 
 from __future__ import annotations
 
-from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
+import os
+
+import pytest
+
+from sqldataintegrationfunctiontriggerapp_spark import catalog
+from sqldataintegrationfunctiontriggerapp_spark.catalog import TABLES, load_table
 
 _SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
@@ -73,3 +78,56 @@ def test_session_stage_eviction_frees_checkpoint_blocks(spark, monkeypatch, tmp_
         spark, "/fake/dir_c", "evict_test", lambda: spark.range(1)
     )
     assert not staged.exists(), "evicted StagedDir was not removed"
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_memoised_schema_is_sparks_inferred_schema(
+        spark, sf_dir, count_jobs, sf):
+    """Every fixture table: the memo holds what ``spark.read.parquet``
+    infers, and a repeated open runs no job and returns the same schema
+    (``events.ts`` included, whichever type its branch sees)."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    app = spark.sparkContext.applicationId
+    for name in TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        first = load_table(spark, sf_dir, name)
+        memo = catalog._SCHEMAS[(app, os.path.abspath(path))][1]
+        assert memo == spark.read.parquet(path).schema, name
+        again, jobs = count_jobs(load_table, spark, sf_dir, name)
+        assert jobs == 0, name
+        assert again.schema == first.schema, name
+
+
+def test_table_rewritten_in_place_is_inferred_again(
+        spark, count_jobs, tmp_path, monkeypatch):
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    _, jobs = count_jobs(load_table, spark, str(tmp_path), "t")
+    assert jobs == 1
+    spark.range(3).selectExpr("id", "id * 2 AS extra") \
+        .write.mode("overwrite").parquet(path)
+    df, jobs = count_jobs(load_table, spark, str(tmp_path), "t")
+    assert jobs == 1
+    assert df.columns == ["id", "extra"]
+    assert sorted(df.collect()) == [(i, 2 * i) for i in range(3)]
+    _, jobs = count_jobs(load_table, spark, str(tmp_path), "t")
+    assert jobs == 0
+
+
+def test_missing_local_table_raises_file_not_found(spark, tmp_path):
+    with pytest.raises(FileNotFoundError, match="absent"):
+        load_table(spark, str(tmp_path), "absent")
+
+
+def test_new_session_infers_again(spark, sf_dir, count_jobs, monkeypatch):
+    """The memo is per application: another application id (a new
+    session) does not reuse this one's schema."""
+    load_table(spark, sf_dir, "region")
+    _, jobs = count_jobs(load_table, spark, sf_dir, "region")
+    assert jobs == 0
+    monkeypatch.setattr(catalog, "_SCHEMAS", dict(catalog._SCHEMAS))
+    monkeypatch.setattr(type(spark.sparkContext), "applicationId",
+                        property(lambda sc: "another-application"))
+    _, jobs = count_jobs(load_table, spark, sf_dir, "region")
+    assert jobs == 1

@@ -1313,6 +1313,33 @@ def test_truthful_ckpt_survives_clearcache_with_honest_stats(spark, sf_dir):
     assert out.count() == exploded.count()
 
 
+def test_ann_index_publish_reads_index_with_its_written_schema(
+        spark, sf_dir):
+    """ann_index_publish_probe reads each published index generation back
+    with the schema of the frame it wrote, which must be the schema Spark
+    infers from the files."""
+    import glob
+    import json
+    import os
+
+    from sqldataintegrationfunctiontriggerapp_spark import plans
+    from sqldataintegrationfunctiontriggerapp_spark.plans import _util
+
+    _util.drop_stage(spark, sf_dir, "ann_index_publish")
+    assert plans.QUERIES["ann_index_publish_probe"](spark, sf_dir).count()
+    base, _ = _util._STAGE_CACHE[
+        (spark.sparkContext.applicationId, sf_dir, "ann_index_publish")]
+    e = load_table(spark, sf_dir, "embeddings")
+    generations = glob.glob(os.path.join(base, "index_root", "v*"))
+    assert len(generations) == 2
+    for gen in generations:
+        with open(os.path.join(gen, "pivots.json")) as f:
+            written = S.ivf_assign(e, json.load(f)).schema
+        path = os.path.join(gen, "assigned")
+        assert (spark.read.schema(written).parquet(path).schema
+                == spark.read.parquet(path).schema)
+
+
 def test_greedy_dim_allocation_balances_the_ramp():
     """The measured-spectrum allocation rule (operators/similarity.py
     greedy_dim_allocation): on the 8-plateau power-of-two ramp the

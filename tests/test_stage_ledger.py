@@ -132,12 +132,16 @@ def test_truthful_ckpt_threshold_picks_branch(spark, monkeypatch):
     above a forced-low threshold goes to parquet."""
     _drop_test_stages()
     _pin(monkeypatch, spill_mb=100000)
-    small = truthful_ckpt(spark.range(100).select("id"))
+    stage = spark.range(100).select("id")
+    small = truthful_ckpt(stage)
     assert getattr(small, "_staged_dir", None) is None
+    assert small.schema == stage.schema
     small.unpersist()
     _pin(monkeypatch, spill_mb=0)
     big = truthful_ckpt(spark.range(5000).select("id"))
     assert getattr(big, "_staged_dir", None) is not None
+    # read back with the cached frame's schema: what inference returns
+    assert big.schema == spark.read.parquet(big._staged_dir).schema
     U._release_stage(big)
 
 

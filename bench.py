@@ -64,8 +64,8 @@ def _calibration_probe(spark) -> float:
     heap runs it with headroom).
 
     Reading the pair: pre >> post within one run is NOT host drift -- it
-    is heap/page warmth (measured r15: pre 12.9 s vs post 2.1 s under
-    SPARK_GRAFT_DRIVER_MEM=8g, the session.py big-fresh-heap
+    is heap/page warmth (measured r15: pre 12.9 s vs post 2.1 s with an
+    8g driver heap (spark.driver.memory=8g), the session.py big-fresh-heap
     demand-faulting pathology; and pre 53 s while a concurrent fixture
     generator saturated the box vs post 3.1 s after it finished). For
     cross-ROUND comparison bench_compare.py uses the pair's MEAN, and the

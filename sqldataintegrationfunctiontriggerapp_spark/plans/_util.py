@@ -369,14 +369,10 @@ def drop_stage(spark, sf_dir: str, name: str) -> None:
         _evict(key)
 
 
-def state_partitions() -> str:
-    """Shuffle-partition count the staged streaming replays run under (a
-    streaming query fixes it as its state-store count at first start): 8,
-    or $SPARK_GRAFT_STATE_PARTITIONS (tools/check_state_partitions.py sets
-    it to show results are invariant under the partition count)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
+# Shuffle-partition count the staged streaming replays run under (a
+# streaming query fixes it as its state-store count at first start; see
+# plans/windows._run_available_now)
+STATE_PARTITIONS = 8
 
 
 def _c(col: Column | str) -> Column:

@@ -17,11 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
-from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
-    DEC,
-    dsum,
-    state_partitions,
-)
+from sqldataintegrationfunctiontriggerapp_spark.plans import _util
+from sqldataintegrationfunctiontriggerapp_spark.plans._util import DEC, dsum
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 from sqldataintegrationfunctiontriggerapp_spark.plans.text import _mg_shard
 
@@ -563,8 +560,6 @@ def _stage_split(spark: SparkSession, sf_dir: str, key: str, table: str,
     import tempfile
     import time
 
-    from sqldataintegrationfunctiontriggerapp_spark.plans import _util
-
     def build():
         d = tempfile.mkdtemp(prefix=f"{key}_", dir=_fast_tmp())
         atexit.register(shutil.rmtree, d, ignore_errors=True)
@@ -686,14 +681,15 @@ def _run_available_now(spark: SparkSession, writer, checkpoint=None):
     A streaming query's STATE partition count is fixed at first start from
     spark.sql.shuffle.partitions; 32 state stores x (batches+1) commits is
     pure fixed overhead against a 2-file fixture replay, so the run uses
-    state_partitions() (results are partitioning-invariant: hash
+    _util.STATE_PARTITIONS (results are partitioning-invariant: hash
     aggregation / keyed state give the same rows under any partition count
-    -- pinned by the partitioning property tests, and r09 hashed the two
-    stateful parities identical at 8 vs 32 state stores at sf1 --
-    tools/check_state_partitions.py, recorded in COVERAGE.md). The conf is
-    restored in the finally; the suite is single-threaded, so nothing else
-    plans under the temporary value. A production tail sizes this to key
-    cardinality instead (state rows per partition), not to a fixture.
+    -- pinned by the partitioning property tests, and by
+    tests/test_streaming.py: the two stateful parities return identical
+    rows at 8 and at 32 state stores; r09 also hashed them at sf1,
+    recorded in COVERAGE.md). The conf is restored in the finally; the
+    suite is single-threaded, so nothing else plans under the temporary
+    value. A production tail sizes this to key cardinality instead (state
+    rows per partition), not to a fixture.
 
     Test-harness concessions, all documented local-mode-only (VERDICT r04
     "What's wrong" #4): staging/checkpoint dirs are driver-local mkdtemp,
@@ -711,7 +707,7 @@ def _run_available_now(spark: SparkSession, writer, checkpoint=None):
     prev_parts = spark.conf.get(shuffle_conf)
     owned = q = None
     try:
-        spark.conf.set(shuffle_conf, state_partitions())
+        spark.conf.set(shuffle_conf, str(_util.STATE_PARTITIONS))
         if checkpoint is None:
             checkpoint = owned = tempfile.mkdtemp(prefix="strm_ckpt_",
                                                   dir=_fast_tmp())

@@ -46,10 +46,13 @@ are chosen so the same code scales to a 1000-executor cluster reading 100 TB:
   metaspace against 210 MB. ``extra_conf`` and ``SPARK_GRAFT_EXTRA_CONF``
   override both like any other conf.
 
-At cluster scale the caller overrides ``shuffle_partitions`` (rule of thumb:
-2-3x total executor cores, or rely on AQE coalescing from a high initial
-value) and ``spark.sql.files.maxPartitionBytes`` stays at 128MB so a 100 TB
-scan yields ~800k input splits -- fine for a 1000-executor cluster.
+At cluster scale the caller sets ``spark.sql.shuffle.partitions`` (and
+``spark.master``, the memory confs) in ``extra_conf`` or
+``SPARK_GRAFT_EXTRA_CONF`` -- rule of thumb: 2-3x total executor cores, or
+rely on AQE coalescing from a high initial value; ``catalog.load_table``
+only ever raises the count for a directory whose bytes need more -- and
+``spark.sql.files.maxPartitionBytes`` stays at 128MB so a 100 TB scan
+yields ~800k input splits -- fine for a 1000-executor cluster.
 """
 
 from __future__ import annotations
@@ -65,127 +68,36 @@ DEFAULT_CPUS = os.environ.get(
     "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
 )
 
-# Explode-aware bytes-derived shuffle sizing (VERDICT r10 #3, reworked per
-# VERDICT r12 #2, generalized per VERDICT r13 #3): one reduce partition per
-# ~16 MB of LOGICAL input bytes, where logical = parquet UNCOMPRESSED bytes
-# (footer metadata -- compressed file size under-measured the sfb10
-# boilerplate corpus 5x: 67.7 MB on disk, 332.8 MB logical) + an
-# amplification term for TEXT bytes: shingle/span/posting consumers explode
-# each text token into a posting row carrying a k=8-gram string (~16x the
-# text bytes: sfb10's 327 MB of text built an ~8.3 GB resident posting
-# stage, r12 ladder). The r12/r13 rule keyed the amplification to files
-# named documents.parquet -- correct for every fixture, brittle by
-# construction (a corpus table under any other name silently reverted to
-# under-partitioning). Now the term is derived from the footers themselves:
-# the summed uncompressed bytes of BYTE_ARRAY columns (strings; binary
-# media columns ride along, a deliberate over-approximation -- their
-# decoders are per-row compute-heavy, so extra map-side splits never hurt
-# and AQE coalesces the reduce side). Measured landing points (r14):
-# testdata sf<=0.1 stay on the cpu floor (zero plan change for the bench
-# suite), sf1 41 (was 33), sf10 ~410, sfb10 >=354 (the level the r13
-# explode fix calibrated); over-partitioning above the floor is cheap
-# because AQE coalesces, the cap bounds scheduler overhead on this single
-# JVM. On a real cluster the same rule holds with the floor at 2-3x total
-# executor cores -- or the caller sets shuffle_partitions explicitly, which
-# (like the env override) always wins over the derivation.
-_SHUFFLE_TARGET_BYTES = 16 * 1024 * 1024
-_SHUFFLE_PARTITION_CAP = 4096
-_TEXT_EXPLODE_AMP = 16  # text/binary column bytes -> posting-row bytes
-
 # generated classes Spark keeps compiled (module docstring)
 CODEGEN_CACHE_ENTRIES = 4096
 
 
-def derive_shuffle_partitions(sf_dir: str, cpus: int) -> int:
-    """Partition count from fixture LOGICAL bytes: max(cpus,
-    ceil((uncompressed_bytes + 16 * text_column_bytes) / 16 MB)), capped.
-    Text bytes = BYTE_ARRAY column uncompressed sizes straight from the
-    same footers (no filename special-casing -- any exploding corpus
-    table is covered regardless of what it is called). Footers are read
-    driver-side (~ms per file); a footer that cannot be read falls back
-    to the file size with no amplification, and unreadable/empty dirs
-    fall back to the cpu floor so a missing fixture never breaks session
-    startup."""
-    import math
-
-    total = 0.0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, f)
-                try:
-                    import pyarrow.parquet as pq
-
-                    md = pq.ParquetFile(p).metadata
-                    unc = text = 0
-                    for i in range(md.num_row_groups):
-                        rg = md.row_group(i)
-                        unc += rg.total_byte_size
-                        for j in range(rg.num_columns):
-                            col = rg.column(j)
-                            if col.physical_type == "BYTE_ARRAY":
-                                text += col.total_uncompressed_size
-                    # text columns are the explode seam: span/shingle
-                    # postings materialize ~16x the text bytes
-                    unc += _TEXT_EXPLODE_AMP * text
-                except Exception:
-                    try:
-                        unc = os.path.getsize(p)
-                    except OSError:
-                        continue
-                total += unc
-    except OSError:
-        return cpus
-    if total <= 0:
-        return cpus
-    return max(
-        cpus,
-        min(_SHUFFLE_PARTITION_CAP, math.ceil(total / _SHUFFLE_TARGET_BYTES)),
-    )
-
-
 def get_session(
     app_name: str = "sqldataintegrationfunctiontriggerapp_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession."""
+    """Build (or fetch) the engine's SparkSession: the engine defaults
+    below, then ``$SPARK_GRAFT_EXTRA_CONF``, then ``extra_conf``, each
+    overriding the one before."""
     cpus = int(DEFAULT_CPUS)
-    # Partition-count resolution order: explicit argument > env override
-    # (kept for experiments) > bytes-derived default from the session's
-    # fixture dir. The r10 sf10 spot-bench needed the env knob by hand;
-    # the derivation makes the same config survive sf0.01 -> sf10 with
-    # zero overrides (VERDICT r10 #3).
-    if shuffle_partitions is None and os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS"
-    ):
-        shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
-    if shuffle_partitions is None:
-        shuffle_partitions = derive_shuffle_partitions(
-            os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-            cpus,
-        )
     # NOTE: spark.driver.memory is deliberately NOT set by default. On this
     # micro-VM, a LARGE heap (16-48g) made CPU-bound stages 10-50x slower
     # (measured: 32M md5s in 2-3s at the 1g default vs 26-127s with 16g) --
     # demand-faulting a big fresh heap dominates runtime. A MODERATE bump is
     # safe: the same md5 probe is 1.07s at 1g vs 1.08s at 4g (r08), so the
-    # pathology starts well above 4g. Set SPARK_GRAFT_DRIVER_MEM (e.g. 4g)
-    # when a workload genuinely needs the heap -- the sf1 spot-bench does:
-    # the shingle-stage columnar cache build OOMs 32 concurrent tasks in
-    # the 1g default (see COVERAGE.md sf1 scaling table).
-    # SPARK_GRAFT_MASTER: point the same engine at a real cluster manager
-    # (e.g. spark://host:7077 for the standalone multi-process shuffle
-    # measurement in COVERAGE) without touching call sites; explicit
-    # `master` argument still wins.
+    # pathology starts well above 4g. Set
+    # SPARK_GRAFT_EXTRA_CONF=spark.driver.memory=4g when a workload
+    # genuinely needs the heap -- the sf1 spot-bench does: the
+    # shingle-stage columnar cache build OOMs 32 concurrent tasks in the 1g
+    # default (see COVERAGE.md sf1 scaling table). spark.master the same
+    # way points the engine at a real cluster manager (e.g.
+    # spark://127.0.0.1:7077, tools/standalone_cluster.sh).
+    # The shuffle-partition count starts at the cpu floor;
+    # catalog.load_table raises it for a directory whose bytes need more.
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or os.environ.get("SPARK_GRAFT_MASTER")
-                or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -219,19 +131,12 @@ def get_session(
                 str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
-    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
-        builder = builder.config(
-            "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"]
-        )
-    if os.environ.get("SPARK_GRAFT_EXECUTOR_MEM"):
-        builder = builder.config(
-            "spark.executor.memory", os.environ["SPARK_GRAFT_EXECUTOR_MEM"]
-        )
     # SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs applied before
-    # the caller's extra_conf -- lets experiments (e.g. the r14 forced
-    # network-shuffle run: spark.shuffle.readHostLocalDisk=false;
-    # spark.locality.wait=0) flow through every existing tool without
-    # touching call sites. Explicit extra_conf still wins on conflicts.
+    # the caller's extra_conf -- lets experiments (a bigger heap, another
+    # master, the r14 forced network-shuffle run:
+    # spark.shuffle.readHostLocalDisk=false;spark.locality.wait=0) flow
+    # through every existing tool without touching call sites. Explicit
+    # extra_conf still wins on conflicts.
     for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in pair:
             k, v = pair.split("=", 1)

@@ -28,13 +28,19 @@ def sf_dir():
 @pytest.fixture()
 def count_jobs(spark):
     """``count_jobs(fn, *args)`` runs ``fn`` under a fresh job group and
-    returns ``(result, number of Spark jobs it ran)``."""
+    returns ``(result, number of Spark jobs it ran)``. The span sets the
+    job description to its name and clears only the group, so the prior
+    description is put back afterwards."""
     sc = spark.sparkContext
     tracer = Tracer(f"count-jobs-{uuid.uuid4().hex}", enabled=True)
 
     def run(fn, *args, **kwargs):
-        with tracer.span("count_jobs", sc=sc) as rec:
-            out = fn(*args, **kwargs)
+        description = sc.getLocalProperty("spark.job.description")
+        try:
+            with tracer.span("count_jobs", sc=sc) as rec:
+                out = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.job.description", description)
         return out, len(rec["jobs"])
 
     return run

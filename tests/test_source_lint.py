@@ -4,7 +4,8 @@
   builder self-check written as an assert silently disappears there.
 - README's environment table lists exactly the ``SPARK_GRAFT_*`` names the
   package and bench.py read, so a new knob cannot ship undocumented and a
-  removed one cannot linger in the docs.
+  removed one cannot linger in the docs; and ``tools/`` names no other
+  (a script setting a retired knob would silently do nothing).
 - The streaming parity harness under ``plans/`` stays one copy: one
   availableNow runner, one staged-split writer, one loopback receiver and
   one delivered-envelope aggregator.
@@ -72,6 +73,18 @@ def test_readme_env_table_matches_env_vars_read():
     assert read, "found no SPARK_GRAFT_* reads at all"
     assert not read - documented, f"read but not in README: {read - documented}"
     assert not documented - read, f"in README but never read: {documented - read}"
+
+
+def test_tools_name_only_env_vars_read():
+    read = _env_names_read()
+    named = {
+        f"{path.relative_to(ROOT)}: {name}"
+        for path in sorted((ROOT / "tools").glob("*.py"))
+        + sorted((ROOT / "tools").glob("*.sh"))
+        for name in ENV_NAME.findall(path.read_text())
+        if name not in read
+    }
+    assert not named, f"tools name env vars nothing reads: {sorted(named)}"
 
 
 def _subclasses(node, base: str) -> bool:

@@ -97,8 +97,15 @@ def test_state_get_runs_no_spark_job(spark, tmp_path, count_jobs):
     makes must not plan or run a Spark job."""
     st = StateStore(spark, str(tmp_path / "state"))
     st.save_allowed_columns("t1", "a,b")
-    assert count_jobs(st.get_allowed_columns, "t1") == ("a,b", 0)
-    assert count_jobs(st.get_allowed_columns, "missing") == (None, 0)
+    sc = spark.sparkContext
+    sc.setJobDescription("allowlist reads")
+    try:
+        assert count_jobs(st.get_allowed_columns, "t1") == ("a,b", 0)
+        assert count_jobs(st.get_allowed_columns, "missing") == (None, 0)
+        # count_jobs leaves the caller's job description as it found it
+        assert sc.getLocalProperty("spark.job.description") == "allowlist reads"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_state_upsert_leaves_bucket_neighbours_exact(spark, tmp_path):

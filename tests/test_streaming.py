@@ -265,7 +265,7 @@ def test_replay_runner_cleans_up_after_failing_batch(
     batch: the error propagates, the shuffle-partition conf is restored,
     no query is left active, and the checkpoint it created is gone."""
     from sqldataintegrationfunctiontriggerapp_spark.plans._util import (
-        state_partitions,
+        STATE_PARTITIONS,
     )
     from sqldataintegrationfunctiontriggerapp_spark.plans.windows import (
         _run_available_now,
@@ -291,7 +291,7 @@ def test_replay_runner_cleans_up_after_failing_batch(
     finally:
         spark.conf.set(conf, prior)
     ((conf_during, ckpts_during),) = during
-    assert conf_during == str(state_partitions())
+    assert conf_during == str(STATE_PARTITIONS)
     assert len(ckpts_during) == 1  # the runner's own checkpoint existed...
     assert list(private_stages.iterdir()) == []  # ...and is removed
     assert spark.streams.active == []
@@ -329,6 +329,40 @@ def test_replay_runner_keeps_caller_owned_checkpoint(
     run(lambda df, epoch_id: delivered.append(epoch_id))
     assert delivered == [0]
     assert (ckpt / "commits" / "0").is_file()
+
+
+def test_stateful_parities_are_invariant_under_state_store_count(
+    spark, sf_dir, monkeypatch
+):
+    """Keyed state and hash aggregation give the same rows under any
+    partition count: the two stateful parities (one shared replay) return
+    identical sorted rows with 32 and with 8 state stores."""
+    from sqldataintegrationfunctiontriggerapp_spark import plans
+    from sqldataintegrationfunctiontriggerapp_spark.plans import _util as U
+    from sqldataintegrationfunctiontriggerapp_spark.plans import windows as W
+
+    names = ("streaming_throttle_parity", "streaming_entity_stats_parity")
+    runner = W._run_available_now
+    stores: list = []
+
+    def recording_runner(spark, writer, checkpoint=None):
+        q = runner(spark, writer, checkpoint)
+        stores.append({op["numShufflePartitions"]
+                       for p in q.recentProgress for op in p.stateOperators})
+        return q
+
+    monkeypatch.setattr(W, "_run_available_now", recording_runner)
+    rows = {}
+    # 8 last, so the memo the rest of the session sees is the default run
+    for parts in (32, 8):
+        monkeypatch.setattr(U, "STATE_PARTITIONS", parts)
+        U.drop_stage(spark, sf_dir, "fused_stateful_sink")
+        rows[parts] = [
+            sorted(map(tuple, plans.QUERIES[n](spark, sf_dir).collect()))
+            for n in names
+        ]
+    assert stores == [{32}, {8}]
+    assert all(rows[8]) and rows[32] == rows[8]
 
 
 def test_streaming_throttle_parity_equals_greedy_batch(spark, sf_dir):

@@ -139,8 +139,10 @@ import sys
 sys.path.insert(0, %(repo)r)
 from sqldataintegrationfunctiontriggerapp_spark.session import get_session
 
-spark = get_session(app_name="daemon-cwd", master="local[1]",
-                    shuffle_partitions=1)
+spark = get_session(app_name="daemon-cwd")
+print("MASTER", spark.conf.get("spark.master"))
+print("SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions"))
+print("HEAP", spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory())
 
 def which_daemon(frames):
     import sys
@@ -156,11 +158,21 @@ spark.stop()
 
 def test_python_task_runs_from_any_working_directory(tmp_path):
     """A driver started outside the repo still starts Python workers: the
-    daemon module reaches them through spark.executorEnv.PYTHONPATH."""
+    daemon module reaches them through spark.executorEnv.PYTHONPATH. The
+    child's session is sized through SPARK_GRAFT_EXTRA_CONF alone, so the
+    launch-time confs (master, driver heap) are shown to reach the JVM."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_EXTRA_CONF"] = (
+        "spark.master=local[1];spark.sql.shuffle.partitions=1;"
+        "spark.driver.memory=768m")
     proc = subprocess.run(
         [sys.executable, "-c", _FROM_ELSEWHERE % {"repo": REPO}],
         capture_output=True, text=True, timeout=300, cwd=tmp_path, env=env,
     )
     assert proc.returncode == 0, f"stderr tail:\n{proc.stderr[-3000:]}"
-    assert f"DAEMON {DAEMON}" in proc.stdout
+    out = dict(line.split(" ", 1) for line in proc.stdout.splitlines()
+               if line.startswith(("DAEMON ", "MASTER ", "SHUFFLE ", "HEAP ")))
+    assert out["DAEMON"] == DAEMON
+    assert (out["MASTER"], out["SHUFFLE"]) == ("local[1]", "1")
+    # the 1g default heap reports exactly 1 GiB
+    assert int(out["HEAP"]) <= 768 * 1024 * 1024

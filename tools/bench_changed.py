@@ -8,9 +8,10 @@ commit resolved through the import graph), so "what gets re-benched"
 and "what jumps the correctness sweep" cannot drift apart.
 
 Method matches the r08 sf1 spot-bench: bench.py suite-style (noop sink,
-clearCache between queries, registry-natural order), SPARK_GRAFT_DRIVER_MEM
-=4g on both sides. Linear scaling would be ~10x; the table records the
-measured ratio per query.
+clearCache between queries, registry-natural order), a 4g driver heap
+(SPARK_GRAFT_EXTRA_CONF=spark.driver.memory=4g) on both sides; a
+SPARK_GRAFT_EXTRA_CONF already set is appended and wins. Linear scaling
+would be ~10x; the table records the measured ratio per query.
 
 Usage: python tools/bench_changed.py [--queries a,b,c] [--sf1 DIR] [--base C]
 """
@@ -27,12 +28,15 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
-def run_bench(sf_dir: str, queries: list[str]) -> dict[str, float]:
+def run_bench(sf_dir: str, queries: list[str],
+              driver_mem: str = "4g") -> dict[str, float]:
+    extra = [f"spark.driver.memory={driver_mem}",
+             os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")]
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_QUERIES=",".join(queries),
-        SPARK_GRAFT_DRIVER_MEM=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"),
+        SPARK_GRAFT_EXTRA_CONF=";".join(c for c in extra if c),
     )
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
@@ -65,23 +69,14 @@ def main() -> int:
     t01 = run_bench("/root/testdata/sf0.1", queries)
     t1 = run_bench(sf1_dir, queries)
     # optional third column: --sf10 DIR benches the 100x fixture with the
-    # sf10 method from COVERAGE.md (8g driver; shuffle partitions are now
-    # bytes-derived by session.derive_shuffle_partitions -- r10's manual
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS=256 knob retired, VERDICT r10 #3)
+    # sf10 method from COVERAGE.md (8g driver; shuffle partitions are
+    # bytes-derived by catalog.derive_shuffle_partitions)
     sf10_dir = opt("--sf10", None)
     t10 = None
     if sf10_dir:
         if not os.path.isdir(sf10_dir):
             raise SystemExit(f"sf10 fixture missing: {sf10_dir}")
-        prev_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-        os.environ["SPARK_GRAFT_DRIVER_MEM"] = "8g"
-        try:
-            t10 = run_bench(sf10_dir, queries)
-        finally:
-            if prev_mem is None:
-                os.environ.pop("SPARK_GRAFT_DRIVER_MEM", None)
-            else:
-                os.environ["SPARK_GRAFT_DRIVER_MEM"] = prev_mem
+        t10 = run_bench(sf10_dir, queries, driver_mem="8g")
     hdr10 = " sf10 s | ratio10 |" if t10 else ""
     print(f"| query | sf0.1 s | sf1 s | ratio |{hdr10}")
     print("|---|---|---|---|" + ("---|---|" if t10 else ""))

@@ -3,7 +3,7 @@
 # (8 cores / 6g each = the same 32 cores as local[32], but with real
 # process boundaries: serialized shuffles, per-executor Python workers,
 # broadcast copies). Drive the engine at it with
-#   SPARK_GRAFT_MASTER=spark://127.0.0.1:7077 python bench.py ...
+#   SPARK_GRAFT_EXTRA_CONF=spark.master=spark://127.0.0.1:7077 python bench.py ...
 # (session.py sets spark.executorEnv.PYTHONPATH automatically so executor
 # Python workers can import the engine package; a multi-node deployment
 # ships a wheel via --py-files instead.)

@@ -1,5 +1,7 @@
-"""Deduplication operator family (north-star C1-C3): exact, keyed
-latest-wins, MinHash+LSH, SimHash, and n-gram Jaccard.
+"""Deduplication operator family (north-star C1, C3): exact, MinHash+LSH,
+SimHash, n-gram Jaccard, and the component closure over near-dup pairs.
+The operators are building blocks; plans/dedup.py composes them into the
+pair chains and owns their materialization (its session stages).
 
 Portability-by-construction: the fuzzy hashes are built from md5 (identical
 in Spark and DuckDB) instead of engine hash functions, so every stage is
@@ -102,11 +104,14 @@ def word_shingles_pos(df, text_col: str = "text", n: int = 3,
     )
 
 
+# MinHash rows per band (see minhash_signatures).
+_ROWS_PER_BAND = 2
+
+
 def minhash_signatures(shingled: DataFrame, n_bands: int = 8,
-                       id_col: str = "doc_id",
-                       rows_per_band: int = 2) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """Per-(doc, band) MinHash signature: each band is the concatenation of
-    `rows_per_band` independent minhashes (min over shingles of
+    `_ROWS_PER_BAND` independent minhashes (min over shingles of
     md5(salt || '|' || shingle), salt = band*r+i), computed as ONE wide
     aggregation (n_bands*r min columns) then unpivoted with stack(). vs the
     naive crossJoin(bands) + groupBy(doc, band): the aggregate's shuffle
@@ -115,14 +120,14 @@ def minhash_signatures(shingled: DataFrame, n_bands: int = 8,
     volume, and map-side partial aggregation collapses everything before
     the exchange.
 
-    rows_per_band controls the candidate false-positive rate: a band
+    _ROWS_PER_BAND controls the candidate false-positive rate: a band
     collides with probability J^r, so r=1 makes every pair sharing a single
     hot shingle minimum a candidate (measured 82k candidates from 5k docs at
     sf0.1); r=2 drops that to the pairs that agree on two independent
     minima (~200) while keeping recall at J>=0.7 above 99% with 8 bands --
     the verification join then touches 400x fewer pairs, which is the whole
     point of banding at scale."""
-    r = rows_per_band
+    r = _ROWS_PER_BAND
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{b * r + i}|"), F.col("shingle"))))
         .alias(f"_s{b}_{i}")
@@ -238,89 +243,34 @@ def verify_jaccard(candidates: DataFrame, shingled: DataFrame,
     )
 
 
-def minhash_lsh_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      shingle_n: int = 3, n_bands: int = 8,
-                      threshold: float = 0.7) -> DataFrame:
-    """C3 end-to-end: shingle -> MinHash band signatures -> LSH collision
-    candidates -> exact-Jaccard verification. Returns (doc_a, doc_b, jaccard).
-
-    The returned pair table is materialized eagerly (localCheckpoint) so the
-    shingle cache -- which feeds signatures + sizes + both verification
-    sides -- can be released before returning; callers in long-lived sessions
-    would otherwise accumulate dead caches (one per call) on the executors.
-    The pair table itself is tiny relative to the corpus (bounded by real
-    near-dups plus band collisions), so holding it checkpointed is cheap."""
-    # shingled feeds signatures + sizes + both verification sides: cache it
-    # so the explode/tokenize work happens once per run, not four times,
-    # and MATERIALIZE it so every downstream join plans against the
-    # cache's actual size, not the explode child's estimate (r10 -- see
-    # verify_jaccard).
-    shingled = word_shingles(df, text_col, shingle_n, id_col).persist()
-    shingled.count()
-    try:
-        sigs = minhash_signatures(shingled, n_bands, id_col)
-        # trust_stats: shingled is materialized above, so every estimate
-        # downstream is honest (the sigs aggregate propagates the cache's
-        # real bytes, conservative-large) -- AQE picks the join strategy
-        # from actual runtime sizes instead of the defensive merge hints.
-        # materialized (and counted) because verify_jaccard consumes the
-        # candidate table twice since r15: once as the doc-id restriction
-        # list, once as the intersection join's left side
-        cands = lsh_candidate_pairs(
-            sigs, id_col, trust_stats=True
-        ).localCheckpoint()
-        result = verify_jaccard(
-            cands, shingled, threshold, id_col, trust_stats=True,
-            n_candidates=cands.count(),
-        ).localCheckpoint()
-    finally:
-        shingled.unpersist()
-    return result
-
-
 # stop-shingle broadcast bound for ngram_jaccard_pairs: two-column rows
 # (short string, long); 1M rows is tens of MB serialized -- unambiguously
 # broadcastable. Above it the anti join shuffles (AQE-planned).
 _STOP_SHINGLE_BROADCAST_MAX_ROWS = 1_000_000
 
+# Document-frequency cap of ngram_jaccard_pairs' stop-shingle filter.
+_MAX_SHINGLE_DF = 1000
 
-def ngram_jaccard_pairs(df: DataFrame | None, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        shingle_n: int = 3, threshold: float = 0.8,
-                        max_shingle_df: int = 1000,
-                        shingled: DataFrame | None = None) -> DataFrame:
+
+def ngram_jaccard_pairs(shingled: DataFrame, threshold: float = 0.8,
+                        id_col: str = "doc_id") -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted-index join (the
-    exact baseline LSH approximates). The self-join's per-pair match count IS
-    the intersection size, so jaccard comes from one join + one aggregate --
-    no candidate materialization + re-verification pass.
+    exact baseline LSH approximates) over the caller's (id, shingle) table,
+    e.g. the session-scoped shingle stage in plans/dedup.py. The self-join's
+    per-pair match count IS the intersection size, so jaccard comes from
+    one join + one aggregate -- no candidate materialization +
+    re-verification pass.
 
     Scale guard: the inverted-index join's row count is bounded by
     sum(df(shingle)^2), so one stop-phrase shared by 1M documents would alone
     generate 10^12 rows. Shingles with document frequency above
-    ``max_shingle_df`` are therefore removed from the shingle UNIVERSE before
-    anything else -- the standard stop-element filter: boilerplate carries no
-    discrimination, and jaccard is then computed exactly (intersection AND
-    sizes) over the filtered universe, keeping the measure internally
-    consistent. At test SFs the cap cannot bind (500 docs < cap=1000), so
-    the DuckDB oracle over unfiltered shingles matches bit-for-bit.
-
-    ``shingled`` lets the caller hand in an already-materialized
-    (id, shingle) table (e.g. the session-scoped shared stage in
-    plans/dedup.py, reused by the MinHash family); ownership then stays
-    with the caller -- no persist/unpersist here, and ``df`` must be None
-    (passing both invites a silently inconsistent shingle universe). When
-    absent the shingle table is built from ``df`` and cached locally for
-    the duration of the call."""
-    own_shingled = shingled is None
-    if own_shingled:
-        if df is None:
-            raise ValueError("ngram_jaccard_pairs needs df or shingled")
-        shingled = word_shingles(df, text_col, shingle_n, id_col).persist()
-    elif df is not None:
-        raise ValueError(
-            "pass df OR a pre-built shingled table, not both: the shingle "
-            "universe must have exactly one source"
-        )
+    ``_MAX_SHINGLE_DF`` are therefore removed from the shingle UNIVERSE
+    before anything else -- the standard stop-element filter: boilerplate
+    carries no discrimination, and jaccard is then computed exactly
+    (intersection AND sizes) over the filtered universe, keeping the
+    measure internally consistent. At test SFs the cap cannot bind (500
+    docs < cap=1000), so the DuckDB oracle over unfiltered shingles matches
+    bit-for-bit."""
     rare = stop = None
     try:
         dfreq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
@@ -334,7 +284,7 @@ def ngram_jaccard_pairs(df: DataFrame | None, text_col: str = "text",
         # table), shuffled left_anti otherwise -- which is the 100 TB
         # shape regardless. Results are identical either way (same anti
         # join semantics).
-        stop = dfreq.where(F.col("_df") > max_shingle_df).persist()
+        stop = dfreq.where(F.col("_df") > _MAX_SHINGLE_DF).persist()
         stop_side = (
             F.broadcast(stop)
             if stop.count() <= _STOP_SHINGLE_BROADCAST_MAX_ROWS
@@ -373,8 +323,6 @@ def ngram_jaccard_pairs(df: DataFrame | None, text_col: str = "text",
             .localCheckpoint()
         )
     finally:
-        if own_shingled:
-            shingled.unpersist()
         if stop is not None:
             stop.unpersist()
         if rare is not None:
@@ -390,10 +338,13 @@ def ngram_jaccard_pairs(df: DataFrame | None, text_col: str = "text",
 # is the only shape that scales.
 _CC_DRIVER_MAX_EDGES = 2_000_000
 
+# Round cap of connected_components' distributed min-label loop: pointer
+# jumping converges in O(log n) rounds, so 25 covers any real graph.
+_CC_MAX_ITER = 25
+
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", max_iter: int = 25,
-                         driver_max_edges: int | None = None) -> DataFrame:
+                         dst: str = "doc_b") -> DataFrame:
     """Connected components over an undirected edge list, returning
     (node, component_id) with component_id = min node id in the component --
     the step that turns near-dup *pairs* into dedup *groups* (pick one keeper
@@ -442,10 +393,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # id; test_connected_components_equals_union_find asserts BOTH routes
     # against an independent reference on arbitrary hypothesis graphs.
     # At 100 TB dup graphs carry billions of edges and take the loop.
-    if driver_max_edges is None:
-        driver_max_edges = _CC_DRIVER_MAX_EDGES
     n_sym = sym.count()
-    if n_sym <= driver_max_edges:
+    if n_sym <= _CC_DRIVER_MAX_EDGES:
         spark = edges.sparkSession
         node_type = edges.schema[src].dataType
         parent: dict = {}
@@ -505,7 +454,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         .withColumn("comp", F.col("node"))
         .localCheckpoint()
     )
-    for it in range(max_iter):
+    for it in range(_CC_MAX_ITER):
         nbr_min = (
             sym.join(labels.withColumnRenamed("node", "v"), "v")
             .groupBy("u")
@@ -562,7 +511,6 @@ def annotate_survivors(
     comps: DataFrame,
     id_col: str = "doc_id",
     comp_col: str = "component_id",
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """Materialize the dedup decision over the FULL corpus: left-join the
     (node, component) labels from `connected_components` back onto every
@@ -574,12 +522,9 @@ def annotate_survivors(
     `cosine_pairs_above_auto`): one count over the already-materialized
     (localCheckpointed) label table picks broadcast when comps is small,
     shuffled left join otherwise. Both branches are bit-identical by
-    construction (same join keys, same projection; test-pinned).
-    ``broadcast_max_rows=0`` forces the shuffled branch."""
-    if broadcast_max_rows is None:
-        broadcast_max_rows = _SURVIVORS_BROADCAST_MAX_ROWS
+    construction (same join keys, same projection; test-pinned)."""
     c = comps.select(F.col(id_col), F.col(comp_col).alias("_cid"))
-    if broadcast_max_rows and comps.count() <= broadcast_max_rows:
+    if comps.count() <= _SURVIVORS_BROADCAST_MAX_ROWS:
         c = F.broadcast(c)
     return docs.join(c, id_col, "left").select(
         *[F.col(x) for x in docs.columns],

@@ -53,13 +53,19 @@ from pyspark.sql import functions as F
 # (total rank mass <= 1) below 2^53, so BIGINT<->double stays exact.
 RANK_SCALE = 1e15
 
+# Lineage of the O(|N|) per-node state grows by a few joins per round, so
+# pagerank and label_propagation truncate it with localCheckpoint every
+# _CHECKPOINT_EVERY rounds (same discipline as connected_components). Short
+# fixed-iteration runs -- like the registered 3-iteration queries -- stay
+# checkpoint-free (no extra jobs).
+_CHECKPOINT_EVERY = 5
+
 
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Fixed-iteration weighted PageRank.
 
@@ -69,13 +75,8 @@ def pagerank(
 
     ``edges`` is referenced ``iterations`` times; callers pass a
     localCheckpointed/persisted frame when it is expensive to recompute
-    (the registered query does — see plans/graph.py).
-
-    ``checkpoint_every``: lineage of the O(|N|) rank frame grows by three
-    joins per iteration, so long runs truncate it with localCheckpoint
-    every N rounds (same discipline as connected_components). The default
-    leaves short fixed-iteration runs — like the registered 3-iteration
-    query — checkpoint-free (no extra jobs).
+    (the registered query does — see plans/graph.py). The rank frame's
+    lineage is truncated every ``_CHECKPOINT_EVERY`` rounds.
     """
     n_nodes = nodes.count()  # bounded driver state: one long
     if n_nodes == 0:
@@ -122,7 +123,7 @@ def pagerank(
                 )
             ).alias("rank"),
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
+        if (it + 1) % _CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint()
     return ranks
 
@@ -164,7 +165,6 @@ def label_propagation(
     edges: DataFrame,
     nodes: DataFrame,
     iterations: int = 3,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Synchronous label propagation (LPA, Raghavan et al. 2007) with a
     deterministic twist: each node votes for itself once alongside its
@@ -190,7 +190,7 @@ def label_propagation(
     Scale shape: each round is one edges ⋈ labels equi-join + one
     (node, label) hash aggregate + one per-node top-1 window — all
     shuffle-partitioned on node ids, state is O(|N|) and never collected.
-    Lineage is truncated every ``checkpoint_every`` rounds like the other
+    Lineage is truncated every ``_CHECKPOINT_EVERY`` rounds like the other
     iterative operators.
     """
     from pyspark.sql import Window
@@ -213,7 +213,7 @@ def label_propagation(
             .where(F.col("rn") == 1)
             .select("node", "label")
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
+        if (it + 1) % _CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint()
     return labels
 

@@ -25,15 +25,10 @@ from sqldataintegrationfunctiontriggerapp_spark.plans.sampling import (
 
 _TOKS = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
 
-# Shared-stage memo (VERDICT r03 #4): dedup_minhash_lsh /
-# minhash_jaccard_estimate both need shingle -> signature -> LSH-candidate,
-# and dedup_ngram_jaccard / dedup_components both need the exact >=0.8 pair
-# table. Within one session+sf_dir the stage is computed ONCE
-# (localCheckpointed -- lineage-free, executor-resident) and every family
-# member reuses it; whichever query runs first pays the build. Memoization
-# + dead-application eviction live in plans/_util.py session_stage (shared
-# with the IVF index in plans/similarity.py).
-_stage = session_stage
+# The MinHash family's near-duplicate threshold: exact Jaccard of a
+# verified LSH pair. Every consumer of the pair table, Spark and oracle,
+# filters at this one value.
+_NEAR_DUP_J = 0.7
 
 
 def _shingles_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,7 +62,7 @@ def _shingles_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
             D.word_shingles(load_table(spark, sf_dir, "documents"), n=3)
         )
 
-    return _stage(spark, sf_dir, "shingles_n3", build)
+    return session_stage(spark, sf_dir, "shingles_n3", build)
 
 
 def _minhash_stage(spark: SparkSession, sf_dir: str):
@@ -78,7 +73,13 @@ def _minhash_stage(spark: SparkSession, sf_dir: str):
     truthful_ckpt (honest stats AND clearCache-proof -- see
     _shingles_stage) so the candidate self-join and the verification joins
     run unhinted with AQE choosing the strategy from real sizes at every
-    scale."""
+    scale. This is the engine's one MinHash composition: every MinHash
+    query, and the dup-graph queries in plans/graph.py, read this stage.
+
+    Shared-stage memo (VERDICT r03 #4): within one session+sf_dir the
+    stage is computed ONCE (localCheckpointed -- lineage-free,
+    executor-resident) and every family member reuses it; whichever query
+    runs first pays the build (plans/_util.py session_stage)."""
 
     def build():
         shingled = _shingles_stage(spark, sf_dir)
@@ -95,20 +96,32 @@ def _minhash_stage(spark: SparkSession, sf_dir: str):
         )
         return sigs, cands, jacc0
 
-    return _stage(spark, sf_dir, "minhash_n3_b8", build)
+    return session_stage(spark, sf_dir, "minhash_n3_b8", build)
+
+
+def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The verified MinHash near-dup pairs (doc_a, doc_b, jaccard): the
+    shared stage's jacc0 at _NEAR_DUP_J -- the one pair table
+    dedup_minhash_lsh serves and every near-dup-graph query reads."""
+    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
+    return jacc0.where(F.col("jaccard") >= _NEAR_DUP_J)
 
 
 def _ngram_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs >= 0.8 (already localCheckpointed by the
     operator), shared by the pair listing and the component closure; the
     shingle universe comes from the shared stage."""
-    return _stage(
+    return session_stage(
         spark, sf_dir, "ngram_n3_t08",
         lambda: D.ngram_jaccard_pairs(
-            None, shingle_n=3, threshold=0.8,
-            shingled=_shingles_stage(spark, sf_dir),
+            _shingles_stage(spark, sf_dir), threshold=0.8
         ),
     )
+
+
+# --- oracle CTE fragments ---------------------------------------------------
+# Each pair chain is written once here and composed per oracle; every oracle
+# still computes its result from the fixture tables on its own.
 
 # word 3-gram shingles, distinct, docs with >= 3 tokens (1-indexed DuckDB slices)
 _SHINGLED = f"""
@@ -118,6 +131,73 @@ _SHINGLED = f"""
     FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
     WHERE len(toks) >= 3
 """
+
+# MinHash candidates over `ex`: 8 band signatures, each two md5 minima
+# (operators/dedup.minhash_signatures), and the pairs colliding in a band.
+_MINHASH_CAND = """bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
+    sig AS (
+        SELECT doc_id, band,
+               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
+               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
+        FROM ex CROSS JOIN bands
+        GROUP BY doc_id, band
+    ),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM sig a JOIN sig b
+          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+    )"""
+
+# Exact inverted-index candidates over `ex`: every pair sharing a shingle.
+_NGRAM_CAND = """cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+    )"""
+
+# The tail both candidate chains feed: jacc(doc_a, doc_b, jaccard), the
+# exact Jaccard of every `cand` pair over the `ex` shingle sets.
+_JACCARD = """sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
+    inter AS (
+        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+        FROM cand c
+        JOIN ex ea ON ea.doc_id = c.doc_a
+        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
+        GROUP BY c.doc_a, c.doc_b
+    ),
+    jacc AS (
+        SELECT i.doc_a, i.doc_b,
+               CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard
+        FROM inter i
+        JOIN sizes sa ON sa.doc_id = i.doc_a
+        JOIN sizes sb ON sb.doc_id = i.doc_b
+    )"""
+
+# The two chains, shingles through `jacc`, and their pair tables:
+# pairs(doc_a, doc_b, jaccard) -- _near_dup_pairs and _ngram_pairs_stage.
+_MINHASH_JACC = f"ex AS ({_SHINGLED}),\n    {_MINHASH_CAND},\n    {_JACCARD}"
+_NGRAM_JACC = f"ex AS ({_SHINGLED}),\n    {_NGRAM_CAND},\n    {_JACCARD}"
+_NEAR_DUP_PAIRS = f"""{_MINHASH_JACC},
+    pairs AS (SELECT * FROM jacc WHERE jaccard >= {_NEAR_DUP_J})"""
+_NGRAM_PAIRS = f"""{_NGRAM_JACC},
+    pairs AS (SELECT * FROM jacc WHERE jaccard >= 0.8)"""
+
+# Connected components of `pairs` as a recursive closure (the oracle twin
+# of operators/dedup.connected_components; needs WITH RECURSIVE):
+# comp(doc_id, component_id = min id reachable), docs with >= 1 pair only.
+_COMPONENTS = """sym AS (
+        SELECT doc_a AS u, doc_b AS v FROM pairs
+        UNION
+        SELECT doc_b AS u, doc_a AS v FROM pairs
+    ),
+    reach AS (
+        SELECT u, v FROM sym
+        UNION
+        SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v
+    ),
+    comp AS (
+        SELECT u AS doc_id, LEAST(u, MIN(v)) AS component_id
+        FROM reach GROUP BY u
+    )"""
 
 
 @register(
@@ -136,70 +216,21 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_lsh",
-    oracle=f"""
-    WITH ex AS ({_SHINGLED}),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM ex CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.7
-    """,
+    oracle=f"WITH {_NEAR_DUP_PAIRS} SELECT doc_a, doc_b, jaccard FROM pairs",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: MinHash (md5-permutation) band signatures -> LSH collision
-    candidates -> exact-Jaccard verification at 0.7. The shingle/signature/
-    candidate/verify stage is shared with minhash_jaccard_estimate via the
-    session-scoped memo (one build per suite run, not one per query); this
-    query is the >=0.7 filter over the materialized verify table."""
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
-    return jacc0.where(F.col("jaccard") >= 0.7)
+    candidates -> exact-Jaccard verification at _NEAR_DUP_J. The
+    shingle/signature/candidate/verify stage is shared with
+    minhash_jaccard_estimate via the session-scoped memo (one build per
+    suite run, not one per query); this query is the _NEAR_DUP_J filter
+    over the materialized verify table."""
+    return _near_dup_pairs(spark, sf_dir)
 
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH ex AS ({_SHINGLED}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.8
-    """,
+    oracle=f"WITH {_NGRAM_PAIRS} SELECT doc_a, doc_b, jaccard FROM pairs",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (>= 0.8) via inverted-index join --
@@ -211,38 +242,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_components",
     oracle=f"""
-    WITH RECURSIVE ex AS ({_SHINGLED}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    edges AS (
-        SELECT i.doc_a, i.doc_b
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.8
-    ),
-    sym AS (
-        SELECT doc_a AS u, doc_b AS v FROM edges
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM edges
-    ),
-    reach AS (
-        SELECT u, v FROM sym
-        UNION
-        SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v
-    )
-    SELECT u AS doc_id, LEAST(u, MIN(v)) AS component_id
-    FROM reach GROUP BY u
+    WITH RECURSIVE {_NGRAM_PAIRS},
+    {_COMPONENTS}
+    SELECT doc_id, component_id FROM comp
     """,
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,7 +328,7 @@ def _cos_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         return truthful_ckpt(S.cosine_pairs_above_auto(e, 0.4))
 
-    return _stage(spark, sf_dir, "cos_pairs_04", build)
+    return session_stage(spark, sf_dir, "cos_pairs_04", build)
 
 
 @register(
@@ -387,20 +389,7 @@ def dedup_duplicate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_jaccard_estimate",
     oracle=f"""
-    WITH ex AS ({_SHINGLED}),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM ex CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
+    WITH {_MINHASH_JACC},
     agree AS (
         SELECT c.doc_a, c.doc_b,
                CAST(SUM(CASE WHEN sa.sig = sb.sig THEN 1 ELSE 0 END) AS INTEGER)
@@ -409,22 +398,12 @@ def dedup_duplicate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sig sa ON sa.doc_id = c.doc_a
         JOIN sig sb ON sb.doc_id = c.doc_b AND sb.band = sa.band
         GROUP BY c.doc_a, c.doc_b
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
     )
     SELECT g.doc_a, g.doc_b, g.n_bands_agree,
            sqrt(CAST(g.n_bands_agree AS DOUBLE) / 8) AS est_jaccard,
-           CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard
+           j.jaccard
     FROM agree g
-    JOIN inter i ON i.doc_a = g.doc_a AND i.doc_b = g.doc_b
-    JOIN sizes sa ON sa.doc_id = g.doc_a
-    JOIN sizes sb ON sb.doc_id = g.doc_b
+    JOIN jacc j ON j.doc_a = g.doc_a AND j.doc_b = g.doc_b
     """,
 )
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,40 +448,8 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_survivors",
     oracle=f"""
-    WITH RECURSIVE ex AS ({_SHINGLED}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    edges AS (
-        SELECT i.doc_a, i.doc_b
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.8
-    ),
-    sym AS (
-        SELECT doc_a AS u, doc_b AS v FROM edges
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM edges
-    ),
-    reach AS (
-        SELECT u, v FROM sym
-        UNION
-        SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v
-    ),
-    comp AS (
-        SELECT u AS doc_id, LEAST(u, MIN(v)) AS component_id
-        FROM reach GROUP BY u
-    )
+    WITH RECURSIVE {_NGRAM_PAIRS},
+    {_COMPONENTS}
     SELECT d.doc_id,
            COALESCE(c.component_id, d.doc_id) AS canonical_id,
            COALESCE(c.component_id, d.doc_id) = d.doc_id AS kept,
@@ -539,6 +486,78 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RUN_K = 8  # aligned-run shingle width (tokens)
+
+# Oracle fragments of the span family. The posting block: t(doc_id, tk)
+# token arrays and sh(doc_id, pos, shingle), every positional _RUN_K-token
+# shingle (1-based positions; Spark's 0-based ones cancel in every emitted
+# quantity).
+_POSTINGS = f"""t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
+    sh AS (
+        SELECT doc_id, u.p AS pos, u.s AS shingle
+        FROM (
+            SELECT doc_id,
+                   UNNEST([{{'p': i, 's': array_to_string(tk[i:i+{_RUN_K - 1}], ' ')}}
+                           for i in range(1, len(tk) - {_RUN_K - 2})]) AS u
+            FROM t WHERE len(tk) >= {_RUN_K}
+        )
+    )"""
+
+
+def _span_runs_sql(postings: str) -> str:
+    """Oracle tail of span DETECTION over the posting CTE `postings`: per
+    doc pair, the maximal runs along each match diagonal (the SQL twin of
+    _span_runs_agg over _span_pair_positions)."""
+    return f"""m AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
+        FROM {postings} a JOIN {postings} b USING (shingle)
+        WHERE a.doc_id < b.doc_id
+    ),
+    isl AS (
+        SELECT doc_a, doc_b, pa, pb,
+               pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
+                                       ORDER BY pa) AS island
+        FROM m
+    ),
+    runs AS (
+        SELECT doc_a, doc_b, COUNT(*) + {_RUN_K - 1} AS run_tokens
+        FROM isl GROUP BY doc_a, doc_b, pa - pb, island
+    )
+    SELECT doc_a, doc_b,
+           CAST(MAX(run_tokens) AS BIGINT) AS max_run_tokens,
+           CAST(COUNT(*) AS BIGINT) AS n_runs,
+           CAST(SUM(run_tokens) AS BIGINT) AS sum_run_tokens
+    FROM runs GROUP BY doc_a, doc_b
+    """
+
+
+def _span_removal_sql(postings: str) -> str:
+    """Oracle tail of span REMOVAL over the posting CTE `postings`: drop
+    every token of a later document covered by a shingle an earlier one
+    shares, re-stitch the rest (the SQL twin of _span_removal_plan)."""
+    return f"""mpos AS (
+        SELECT DISTINCT b.doc_id AS doc_id, b.pos AS pb
+        FROM {postings} a JOIN {postings} b USING (shingle)
+        WHERE a.doc_id < b.doc_id
+    ),
+    cov AS (
+        SELECT DISTINCT doc_id, pb + i.o AS cpos
+        FROM mpos, UNNEST(range({_RUN_K})) AS i(o)
+    ),
+    tok AS (
+        SELECT doc_id, UNNEST(tk) AS token,
+               UNNEST(range(1, len(tk) + 1)) AS pos
+        FROM t
+    )
+    SELECT tok.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_tokens,
+           CAST(SUM(CASE WHEN c.cpos IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_removed,
+           string_agg(CASE WHEN c.cpos IS NULL THEN token END,
+                      ' ' ORDER BY tok.pos) AS cleaned_text
+    FROM tok LEFT JOIN cov c
+      ON c.doc_id = tok.doc_id AND c.cpos = tok.pos
+    GROUP BY tok.doc_id
+    """
 
 
 def _span_runs_agg(m: DataFrame) -> DataFrame:
@@ -602,38 +621,7 @@ def _df_capped_postings(sh: DataFrame) -> DataFrame:
 
 @register(
     "crossdoc_span_runs",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    sh AS (
-        SELECT doc_id, u.p AS pos, u.s AS shingle
-        FROM (
-            SELECT doc_id,
-                   UNNEST([{{'p': i, 's': array_to_string(tk[i:i+{_RUN_K - 1}], ' ')}}
-                           for i in range(1, len(tk) - {_RUN_K - 2})]) AS u
-            FROM t WHERE len(tk) >= {_RUN_K}
-        )
-    ),
-    m AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-        FROM sh a JOIN sh b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    isl AS (
-        SELECT doc_a, doc_b, pa, pb,
-               pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-                                       ORDER BY pa) AS island
-        FROM m
-    ),
-    runs AS (
-        SELECT doc_a, doc_b, COUNT(*) + {_RUN_K - 1} AS run_tokens
-        FROM isl GROUP BY doc_a, doc_b, pa - pb, island
-    )
-    SELECT doc_a, doc_b,
-           CAST(MAX(run_tokens) AS BIGINT) AS max_run_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_runs,
-           CAST(SUM(run_tokens) AS BIGINT) AS sum_run_tokens
-    FROM runs GROUP BY doc_a, doc_b
-    """,
+    oracle=f"WITH {_POSTINGS},\n    {_span_runs_sql('sh')}",
 )
 def crossdoc_span_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-SPAN detection -- the substring-level dedup
@@ -782,41 +770,7 @@ def minhash_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "crossdoc_span_removal",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    sh AS (
-        SELECT doc_id, u.p AS pos, u.s AS shingle
-        FROM (
-            SELECT doc_id,
-                   UNNEST([{{'p': i, 's': array_to_string(tk[i:i+{_RUN_K - 1}], ' ')}}
-                           for i in range(1, len(tk) - {_RUN_K - 2})]) AS u
-            FROM t WHERE len(tk) >= {_RUN_K}
-        )
-    ),
-    mpos AS (
-        SELECT DISTINCT b.doc_id AS doc_id, b.pos AS pb
-        FROM sh a JOIN sh b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    cov AS (
-        SELECT DISTINCT doc_id, pb + i.o AS cpos
-        FROM mpos, UNNEST(range({_RUN_K})) AS i(o)
-    ),
-    tok AS (
-        SELECT doc_id, UNNEST(tk) AS token,
-               UNNEST(range(1, len(tk) + 1)) AS pos
-        FROM t
-    )
-    SELECT tok.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN c.cpos IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_removed,
-           string_agg(CASE WHEN c.cpos IS NULL THEN token END,
-                      ' ' ORDER BY tok.pos) AS cleaned_text
-    FROM tok LEFT JOIN cov c
-      ON c.doc_id = tok.doc_id AND c.cpos = tok.pos
-    GROUP BY tok.doc_id
-    """,
+    oracle=f"WITH {_POSTINGS},\n    {_span_removal_sql('sh')}",
 )
 def crossdoc_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVE half of substring-level dedup (Lee et al. 2022 section 4:
@@ -964,36 +918,7 @@ def _span_removal_plan(docs: DataFrame, sh: DataFrame) -> DataFrame:
 @register(
     "split_leakage_audit",
     oracle=f"""
-    WITH ex AS ({_SHINGLED}),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM ex CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-        SELECT i.doc_a, i.doc_b,
-               CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.7
-    ),
+    WITH {_NEAR_DUP_PAIRS},
     sp AS (
         SELECT doc_id,
                CASE WHEN md5(CAST(doc_id AS VARCHAR)) < '{_SPLIT_VAL_HI}'
@@ -1021,8 +946,8 @@ def _span_removal_plan(docs: DataFrame, sh: DataFrame) -> DataFrame:
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split contamination audit -- the check every eval pipeline
     needs BEFORE trusting a held-out score: near-duplicate pairs (exact
-    Jaccard >= 0.7 over the shared MinHash-LSH stage, the same pair set
-    dedup_minhash_lsh serves) classified by the train/val/test assignment
+    Jaccard >= _NEAR_DUP_J over the shared MinHash-LSH stage, the same pair
+    set dedup_minhash_lsh serves) classified by the train/val/test assignment
     of their endpoints (train_val_split's md5 rule). A pair straddling
     two splits is a LEAK: the val/test member is effectively training
     data, and a model's held-out score on it is memorization, not
@@ -1049,8 +974,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table) -- and one <=6-group hash aggregate. At 100 TB the
     audit is FREE once dedup ran -- which is the operational point: run
     it on the pair table you already have."""
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
-    pairs = jacc0.where(F.col("jaccard") >= 0.7)
+    pairs = _near_dup_pairs(spark, sf_dir)
     sp = SPLITS.split_assign(
         load_table(spark, sf_dir, "documents")
     ).select("doc_id", "split")
@@ -1083,42 +1007,13 @@ _CAP_F = 2  # max docs a shingle may appear in before it is masked
 @register(
     "crossdoc_span_runs_capped",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    sh AS (
-        SELECT doc_id, u.p AS pos, u.s AS shingle
-        FROM (
-            SELECT doc_id,
-                   UNNEST([{{'p': i, 's': array_to_string(tk[i:i+{_RUN_K - 1}], ' ')}}
-                           for i in range(1, len(tk) - {_RUN_K - 2})]) AS u
-            FROM t WHERE len(tk) >= {_RUN_K}
-        )
-    ),
+    WITH {_POSTINGS},
     keepable AS (
         SELECT shingle FROM sh
         GROUP BY shingle HAVING COUNT(DISTINCT doc_id) <= {_CAP_F}
     ),
     shc AS (SELECT sh.* FROM sh JOIN keepable USING (shingle)),
-    m AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-        FROM shc a JOIN shc b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    isl AS (
-        SELECT doc_a, doc_b, pa, pb,
-               pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-                                       ORDER BY pa) AS island
-        FROM m
-    ),
-    runs AS (
-        SELECT doc_a, doc_b, COUNT(*) + {_RUN_K - 1} AS run_tokens
-        FROM isl GROUP BY doc_a, doc_b, pa - pb, island
-    )
-    SELECT doc_a, doc_b,
-           CAST(MAX(run_tokens) AS BIGINT) AS max_run_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_runs,
-           CAST(SUM(run_tokens) AS BIGINT) AS sum_run_tokens
-    FROM runs GROUP BY doc_a, doc_b
-    """,
+    {_span_runs_sql("shc")}""",
 )
 def crossdoc_span_runs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """crossdoc_span_runs WITH the production posting-frequency cap the
@@ -1149,16 +1044,7 @@ _F_AUTO = 64  # hottest-posting-list bound before the capped branch takes over
 # WHERE keeps every posting when the corpus-wide hottest posting list is
 # within _F_AUTO (the uncapped branch) and otherwise masks shingles hotter
 # than _CAP_F (the capped branch), exactly the Spark-side routing below.
-_SPAN_SHC_SQL = f"""t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    sh AS (
-        SELECT doc_id, u.p AS pos, u.s AS shingle
-        FROM (
-            SELECT doc_id,
-                   UNNEST([{{'p': i, 's': array_to_string(tk[i:i+{_RUN_K - 1}], ' ')}}
-                           for i in range(1, len(tk) - {_RUN_K - 2})]) AS u
-            FROM t WHERE len(tk) >= {_RUN_K}
-        )
-    ),
+_SPAN_SHC_SQL = f"""{_POSTINGS},
     dfs AS (
         SELECT shingle, COUNT(DISTINCT doc_id) AS df FROM sh GROUP BY shingle
     ),
@@ -1186,7 +1072,7 @@ def _span_postings_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _stage(spark, sf_dir, "span_postings_k8", build)
+    return session_stage(spark, sf_dir, "span_postings_k8", build)
 
 
 def _span_dfs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1208,7 +1094,7 @@ def _span_dfs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count_distinct("doc_id").alias("df"))
         )
 
-    return _stage(spark, sf_dir, "span_posting_dfs", build)
+    return session_stage(spark, sf_dir, "span_posting_dfs", build)
 
 
 def _span_postings_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1267,29 +1153,7 @@ def _span_postings_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "crossdoc_span_runs_auto",
-    oracle=f"""
-    WITH {_SPAN_SHC_SQL},
-    m AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa, b.pos AS pb
-        FROM shc a JOIN shc b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    isl AS (
-        SELECT doc_a, doc_b, pa, pb,
-               pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-                                       ORDER BY pa) AS island
-        FROM m
-    ),
-    runs AS (
-        SELECT doc_a, doc_b, COUNT(*) + {_RUN_K - 1} AS run_tokens
-        FROM isl GROUP BY doc_a, doc_b, pa - pb, island
-    )
-    SELECT doc_a, doc_b,
-           CAST(MAX(run_tokens) AS BIGINT) AS max_run_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_runs,
-           CAST(SUM(run_tokens) AS BIGINT) AS sum_run_tokens
-    FROM runs GROUP BY doc_a, doc_b
-    """,
+    oracle=f"WITH {_SPAN_SHC_SQL},\n    {_span_runs_sql('shc')}",
 )
 def crossdoc_span_runs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """crossdoc_span_runs behind the frequency-measured route
@@ -1307,32 +1171,7 @@ def crossdoc_span_runs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "crossdoc_span_removal_auto",
-    oracle=f"""
-    WITH {_SPAN_SHC_SQL},
-    mpos AS (
-        SELECT DISTINCT b.doc_id AS doc_id, b.pos AS pb
-        FROM shc a JOIN shc b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    cov AS (
-        SELECT DISTINCT doc_id, pb + i.o AS cpos
-        FROM mpos, UNNEST(range({_RUN_K})) AS i(o)
-    ),
-    tok AS (
-        SELECT doc_id, UNNEST(tk) AS token,
-               UNNEST(range(1, len(tk) + 1)) AS pos
-        FROM t
-    )
-    SELECT tok.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN c.cpos IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_removed,
-           string_agg(CASE WHEN c.cpos IS NULL THEN token END,
-                      ' ' ORDER BY tok.pos) AS cleaned_text
-    FROM tok LEFT JOIN cov c
-      ON c.doc_id = tok.doc_id AND c.cpos = tok.pos
-    GROUP BY tok.doc_id
-    """,
+    oracle=f"WITH {_SPAN_SHC_SQL},\n    {_span_removal_sql('shc')}",
 )
 def crossdoc_span_removal_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """crossdoc_span_removal behind the same frequency-measured route --
@@ -1355,65 +1194,17 @@ _KFOLD_K = 5
 
 
 _GKF_ORACLE = f"""
-    WITH RECURSIVE tokd AS (
-        SELECT doc_id, UNNEST(list_distinct(
-            [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)]
-        )) AS shingle
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(text, '\\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3
-    ),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM tokd CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM tokd GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN tokd ea ON ea.doc_id = c.doc_a
-        JOIN tokd eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-        SELECT i.doc_a, i.doc_b
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.7
-    ),
-    sym AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT u, v FROM sym
-        UNION
-        SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v
-    ),
-    comp AS (
-        SELECT d.doc_id,
-               COALESCE(LEAST(d.doc_id, m.mn), d.doc_id) AS component_id
-        FROM documents d
-        LEFT JOIN (SELECT u, MIN(v) AS mn FROM reach GROUP BY u) m
-          ON m.u = d.doc_id
+    WITH RECURSIVE {_NEAR_DUP_PAIRS},
+    {_COMPONENTS},
+    labelled AS (
+        SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS component_id
+        FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
     ),
     folded AS (
         SELECT doc_id, component_id,
                CAST(('0x' || substr(md5(CAST(component_id AS VARCHAR)), 1, 13))
                     AS BIGINT) % {_KFOLD_K} AS fold
-        FROM comp
+        FROM labelled
     ),
     straddle AS (
         SELECT COUNT(*) AS n
@@ -1446,11 +1237,10 @@ def group_kfold_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing is the engine's standard md5-52-bit-prefix integer idiom.
     Scale shape: pair stage (laddered elsewhere) + component loop on
     true pairs + one doc-grain hash -- the summary is k rows."""
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
     pairs = (
-        jacc0.where(F.col("jaccard") >= 0.7)
+        _near_dup_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .localCheckpoint()  # read by the component loop and the straddle audit
     )
     comp = D.connected_components(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1493,36 +1283,7 @@ _SWEEP_THRESHOLDS = [0.5, 0.7, 0.8, 0.9]
 @register(
     "dedup_threshold_sweep",
     oracle=f"""
-    WITH ex AS ({_SHINGLED}),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM ex CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    jacc AS (
-        SELECT i.doc_a, i.doc_b,
-               CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter)
-                   AS jaccard
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-    ),
+    WITH {_MINHASH_JACC},
     thr AS (SELECT UNNEST([{", ".join(f"CAST({t} AS DOUBLE)"
                                       for t in _SWEEP_THRESHOLDS)}]) AS t),
     sel AS (

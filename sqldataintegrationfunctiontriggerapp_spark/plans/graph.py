@@ -32,7 +32,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
-from sqldataintegrationfunctiontriggerapp_spark.operators.graph import pagerank
+from sqldataintegrationfunctiontriggerapp_spark.operators.graph import (
+    label_propagation,
+    pagerank,
+    triangle_counts,
+    triangle_delta,
+)
+from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
+    _NEAR_DUP_PAIRS,
+    _near_dup_pairs,
+)
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 
 _PR_ITERS = 3
@@ -121,48 +130,9 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The minhash >= 0.7 near-dup pair chain, as the oracle's edge builder
-# (verbatim the dedup_minhash_lsh oracle CTEs, symmetrized to an
-# undirected unit-weight edge list).
-_DUP_EDGES = """
-    tokd AS (
-        SELECT doc_id, UNNEST(list_distinct(
-            [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)]
-        )) AS shingle
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(text, '\\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3
-    ),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM tokd CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM tokd GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN tokd ea ON ea.doc_id = c.doc_a
-        JOIN tokd eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    ),
-    pairs AS (
-        SELECT i.doc_a, i.doc_b
-        FROM inter i
-        JOIN sizes sa ON sa.doc_id = i.doc_a
-        JOIN sizes sb ON sb.doc_id = i.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.7
-    ),
+# The near-dup graph as the oracle's edge builder: the verified MinHash
+# pairs (plans/dedup.py), symmetrized to an undirected unit-weight edge list.
+_DUP_EDGES = f"""{_NEAR_DUP_PAIRS},
     edges AS (
         SELECT doc_a AS src, doc_b AS dst, 1 AS w FROM pairs
         UNION ALL
@@ -195,7 +165,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the REAL near-duplication graph (where
     pagerank_nations exercises the operator on the 25-node toy, this runs
     it on corpus-scale data): nodes are all documents, undirected
-    unit-weight edges are the verified MinHash pairs at Jaccard >= 0.7
+    unit-weight edges are the verified MinHash pairs at Jaccard >= _NEAR_DUP_J
     (the shared LSH stage -- the same pair table dedup_minhash_lsh,
     dedup_survivors, and split_leakage_audit serve). Centrality in this
     graph is a curation signal the pair list alone cannot give: a
@@ -212,12 +182,7 @@ def pagerank_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     true near-dup pairs, not n^2); each iteration is one node-keyed
     left join + exact integer aggregate -- linear in |docs| + |edges|
     per iteration at any corpus size."""
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
-        _minhash_stage,
-    )
-
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
-    pairs = jacc0.where(F.col("jaccard") >= 0.7).select("doc_a", "doc_b")
+    pairs = _near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.select(
             F.col("doc_a").alias("src"),
@@ -279,15 +244,7 @@ def triangle_count_dup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/graph.py:triangle_counts. Reference scope: mandated
     pipeline surface (SURVEY §2.C3 adjacents), not a reference operator.
     """
-    from sqldataintegrationfunctiontriggerapp_spark.operators.graph import (
-        triangle_counts,
-    )
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
-        _minhash_stage,
-    )
-
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
-    pairs = jacc0.where(F.col("jaccard") >= 0.7).select("doc_a", "doc_b")
+    pairs = _near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     out = triangle_counts(pairs)
     return out.select(F.col("node").alias("doc_id"), "triangles")
 
@@ -343,15 +300,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     operators/graph.py:label_propagation; the oracle replays the same
     recurrence as chained CTEs over the same LSH-verified edge list.
     """
-    from sqldataintegrationfunctiontriggerapp_spark.operators.graph import (
-        label_propagation,
-    )
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
-        _minhash_stage,
-    )
-
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
-    p = jacc0.where(F.col("jaccard") >= 0.7).select("doc_a", "doc_b")
+    p = _near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = p.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(
@@ -464,17 +413,8 @@ def triangle_ivm_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     same doctrine as the GDPR orphan audit and kmv_jaccard's exact
     columns) -- any miscounted multiplicity or missed position breaks the
     hash. Integer-only; rides the shared MinHash pair stage."""
-    from sqldataintegrationfunctiontriggerapp_spark.operators.graph import (
-        triangle_counts,
-        triangle_delta,
-    )
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
-        _minhash_stage,
-    )
-
-    _sigs, _cands, jacc0 = _minhash_stage(spark, sf_dir)
     pairs = (
-        jacc0.where(F.col("jaccard") >= 0.7)
+        _near_dup_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint()  # true-pair-bounded; read by 7 joins below
     )

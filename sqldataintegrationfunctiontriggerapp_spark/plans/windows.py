@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
 from sqldataintegrationfunctiontriggerapp_spark.plans import _util
 from sqldataintegrationfunctiontriggerapp_spark.plans._util import DEC, dsum
+from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import (
+    _NEAR_DUP_J,
+    _NEAR_DUP_PAIRS,
+)
 from sqldataintegrationfunctiontriggerapp_spark.plans.registry import register
 from sqldataintegrationfunctiontriggerapp_spark.plans.text import _mg_shard
 
@@ -2019,46 +2023,17 @@ def streaming_crash_recovery_parity(spark: SparkSession, sf_dir: str) -> DataFra
     return _delivered_frame(spark, delivered)
 
 
-def _minhash_ingest_oracle() -> str:
-    from sqldataintegrationfunctiontriggerapp_spark.plans.dedup import _SHINGLED
-
-    return f"""
-    WITH ex AS ({_SHINGLED}),
-    mid AS (SELECT (MIN(doc_id) + MAX(doc_id)) // 2 AS m FROM documents),
-    bands AS (SELECT CAST(range AS INTEGER) AS band FROM range(8)),
-    sig AS (
-        SELECT doc_id, band,
-               MIN(md5(CAST(band * 2 AS VARCHAR) || '|' || shingle))
-               || MIN(md5(CAST(band * 2 + 1 AS VARCHAR) || '|' || shingle)) AS sig
-        FROM ex CROSS JOIN bands
-        GROUP BY doc_id, band
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN ex ea ON ea.doc_id = c.doc_a
-        JOIN ex eb ON eb.doc_id = c.doc_b AND eb.shingle = ea.shingle
-        GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) AS jaccard,
-           CAST(CASE WHEN i.doc_b <= mid.m THEN 1 ELSE 2 END
+@register(
+    "streaming_minhash_dedup_parity",
+    oracle=f"""
+    WITH {_NEAR_DUP_PAIRS},
+    mid AS (SELECT (MIN(doc_id) + MAX(doc_id)) // 2 AS m FROM documents)
+    SELECT p.doc_a, p.doc_b, p.jaccard,
+           CAST(CASE WHEN p.doc_b <= mid.m THEN 1 ELSE 2 END
                 AS INTEGER) AS detected_batch
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    CROSS JOIN mid
-    WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.7
-    """
-
-
-@register("streaming_minhash_dedup_parity", oracle=_minhash_ingest_oracle())
+    FROM pairs p CROSS JOIN mid
+    """,
+)
 def streaming_minhash_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEDUP-ON-ARRIVAL -- near-duplicate detection against an
     INCREMENTALLY MAINTAINED MinHash index, the production shape of
@@ -2070,7 +2045,8 @@ def streaming_minhash_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFram
     exact Jaccard against the standing shingle store, and (d) appends its
     signatures/shingles to the index (localCheckpoint per batch -- the
     between-trigger persistence a lakehouse table provides). Output: every
-    verified >=0.7 pair tagged with the micro-batch that DETECTED it.
+    verified near-dup pair (Jaccard >= _NEAR_DUP_J) tagged with the
+    micro-batch that DETECTED it.
 
     THE ORACLE IS THE BATCH LSH RUN (dedup_minhash_lsh's pair table, plus
     the id-split detection batch): incremental-equals-batch holds exactly
@@ -2126,7 +2102,8 @@ def streaming_minhash_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFram
             .select("doc_a", "doc_b")
             .distinct()
         )
-        verified = D.verify_jaccard(cands, standing_sh, threshold=0.7)
+        verified = D.verify_jaccard(cands, standing_sh,
+                                    threshold=_NEAR_DUP_J)
         state["pairs"].append(
             verified.withColumn(
                 "detected_batch", F.lit(state["n"]).cast("int")

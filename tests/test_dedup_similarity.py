@@ -10,22 +10,68 @@ from sqldataintegrationfunctiontriggerapp_spark.catalog import load_table
 from sqldataintegrationfunctiontriggerapp_spark.operators import dedup as D
 from sqldataintegrationfunctiontriggerapp_spark.operators import multimodal as MM
 from sqldataintegrationfunctiontriggerapp_spark.operators import similarity as S
+from sqldataintegrationfunctiontriggerapp_spark.plans import dedup as PD
 
 
 def test_minhash_lsh_finds_all_exact_jaccard_pairs(spark, sf_dir):
-    """LSH candidates at 8 bands must recall every pair with true J>=0.8
-    (collision miss prob (1-0.8)^8 ~ 2.6e-6; the fixtures' planted dups)."""
-    d = load_table(spark, sf_dir, "documents")
+    """The shipped MinHash composition at 8 bands must recall every pair
+    with true J>=0.8 that the exact n-gram stage finds (collision miss prob
+    (1-0.8)^8 ~ 2.6e-6; the fixtures' planted dups), with the same exact
+    Jaccard."""
+    _sigs, _cands, jacc0 = PD._minhash_stage(spark, sf_dir)
     exact = {
-        (r.doc_a, r.doc_b)
-        for r in D.ngram_jaccard_pairs(d, threshold=0.8).collect()
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in PD._ngram_pairs_stage(spark, sf_dir).collect()
     }
     lsh = {
-        (r.doc_a, r.doc_b)
-        for r in D.minhash_lsh_dedup(d, threshold=0.8).collect()
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jacc0.where(F.col("jaccard") >= 0.8).collect()
     }
     assert exact, "fixtures should contain planted near-dups"
     assert exact == lsh
+
+
+def _pair_rows(df):
+    return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+
+
+def test_verify_jaccard_semi_join_branches_bitwise_identical(
+        spark, sf_dir, monkeypatch):
+    """The candidate-doc restriction semi-join is broadcast under
+    _VERIFY_BROADCAST_MAX_PAIRS and left to AQE above it; on the MinHash
+    stage's own inputs both branches return the same pairs with
+    bit-identical jaccard."""
+    shingled = PD._shingles_stage(spark, sf_dir)
+    _sigs, cands, _jacc0 = PD._minhash_stage(spark, sf_dir)
+    n = cands.count()
+
+    def verified():
+        out = D.verify_jaccard(cands, shingled, 0.0, trust_stats=True,
+                               n_candidates=n)
+        hinted = "strategy=broadcast" in str(
+            out._jdf.queryExecution().optimizedPlan()
+        )
+        return _pair_rows(out), hinted
+
+    broadcast, hinted = verified()
+    assert hinted and broadcast, "default branch broadcasts the doc list"
+    monkeypatch.setattr(D, "_VERIFY_BROADCAST_MAX_PAIRS", -1)
+    unhinted, hinted = verified()
+    assert not hinted
+    assert unhinted == broadcast
+
+
+def test_stop_shingle_anti_join_branches_bitwise_identical(
+        spark, sf_dir, monkeypatch):
+    """The stop-shingle anti join is broadcast under
+    _STOP_SHINGLE_BROADCAST_MAX_ROWS and shuffled above it; both branches
+    return the same pairs with bit-identical jaccard."""
+    shingled = PD._shingles_stage(spark, sf_dir)
+    broadcast = _pair_rows(D.ngram_jaccard_pairs(shingled, threshold=0.0))
+    monkeypatch.setattr(D, "_STOP_SHINGLE_BROADCAST_MAX_ROWS", -1)
+    shuffled = _pair_rows(D.ngram_jaccard_pairs(shingled, threshold=0.0))
+    assert broadcast
+    assert shuffled == broadcast
 
 
 def test_bucketed_cosine_pairs_match_bruteforce_exactly(spark, sf_dir):
@@ -599,16 +645,17 @@ def test_frame_sample_offsets(spark, sf_dir):
     assert bad.count() == 0
 
 
-def test_connected_components_rejects_non_integral_ids(spark):
+def test_connected_components_rejects_non_integral_ids(spark, monkeypatch):
     """Python ``<`` (driver route) and Spark ``min`` (distributed route) can
     order double ids differently (NaN), so the gate refuses them on both
     routes instead of letting the routes diverge."""
     edges = spark.createDataFrame(
         [(1.0, 2.0), (2.0, float("nan"))], "doc_a double, doc_b double"
     )
-    for driver_max_edges in (None, -1):
+    for bound in (D._CC_DRIVER_MAX_EDGES, -1):
+        monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", bound)
         with pytest.raises(ValueError, match="doc_a.*double"):
-            D.connected_components(edges, driver_max_edges=driver_max_edges)
+            D.connected_components(edges)
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -894,7 +941,7 @@ def test_blas_ivf_assign_matches_jvm_exactly(spark, sf_dir):
         assert set(a) == ({1, 2} if flag else {2})
 
 
-def test_annotate_survivors_branches_bitwise_identical(spark):
+def test_annotate_survivors_branches_bitwise_identical(spark, monkeypatch):
     """The size-gated survivor join (r10: kills the forced broadcast of
     the data-dependent component table) must produce identical rows on
     the broadcast branch and the shuffled-join branch, including docs
@@ -909,11 +956,10 @@ def test_annotate_survivors_branches_bitwise_identical(spark):
         (r.doc_id, r.canonical_id, r.kept, r.source)
         for r in D.annotate_survivors(docs, comps).collect()
     }
+    monkeypatch.setattr(D, "_SURVIVORS_BROADCAST_MAX_ROWS", -1)
     shuf = {
         (r.doc_id, r.canonical_id, r.kept, r.source)
-        for r in D.annotate_survivors(
-            docs, comps, broadcast_max_rows=0
-        ).collect()
+        for r in D.annotate_survivors(docs, comps).collect()
     }
     assert bcast == shuf
     assert len(bcast) == 10

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -64,9 +65,7 @@ def _union_find_components(edges):
 @PROP
 @given(edges=edges_strategy)
 def test_connected_components_equals_union_find(spark, edges):
-    from sqldataintegrationfunctiontriggerapp_spark.operators.dedup import (
-        connected_components,
-    )
+    from sqldataintegrationfunctiontriggerapp_spark.operators import dedup as D
 
     # drop self-loops the operator's symmetrized-edge model also ignores,
     # keep duplicates (they must be harmless)
@@ -76,18 +75,20 @@ def test_connected_components_equals_union_find(spark, edges):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {
         r.doc_id: r.component_id
-        for r in connected_components(df).collect()
+        for r in D.connected_components(df).collect()
     }
     want = _union_find_components(edges)
     assert got == want
     # Route equality (OPTIMIZATION r16): the size-gated driver-side
     # union-find (the default at this scale) and the distributed
-    # min-label loop (forced via driver_max_edges=-1, the 100 TB shape)
-    # must agree row for row on arbitrary graphs.
-    loop = {
-        r.doc_id: r.component_id
-        for r in connected_components(df, driver_max_edges=-1).collect()
-    }
+    # min-label loop (forced via _CC_DRIVER_MAX_EDGES=-1, the 100 TB
+    # shape) must agree row for row on arbitrary graphs.
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "_CC_DRIVER_MAX_EDGES", -1)
+        loop = {
+            r.doc_id: r.component_id
+            for r in D.connected_components(df).collect()
+        }
     assert loop == want
 
 
@@ -230,6 +231,7 @@ def test_ngram_jaccard_pairs_equals_brute_force(spark, texts):
     # at <=8 docs.
     from sqldataintegrationfunctiontriggerapp_spark.operators.dedup import (
         ngram_jaccard_pairs,
+        word_shingles,
     )
 
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -237,7 +239,7 @@ def test_ngram_jaccard_pairs_equals_brute_force(spark, texts):
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in ngram_jaccard_pairs(
-            df, shingle_n=2, threshold=0.0
+            shingled=word_shingles(df, n=2), threshold=0.0
         ).collect()
     }
 
@@ -270,7 +272,7 @@ def test_minhash_signatures_equal_python_reference(spark, pairs):
     # ORACLE PARITY: the one-wide-aggregate banded signature (the shape
     # whose shuffle carries one row per doc, not n_bands rows per shingle)
     # must equal the definitional per-doc computation: band b's signature
-    # is the concatenation of rows_per_band independent minima of
+    # is the concatenation of _ROWS_PER_BAND independent minima of
     # md5(salt || '|' || shingle), salt = b*r+i. Spark's md5() and
     # hashlib.md5 both emit lowercase hex, so the strings compare exactly.
     import hashlib
@@ -283,9 +285,7 @@ def test_minhash_signatures_equal_python_reference(spark, pairs):
     df = spark.createDataFrame(pairs, "doc_id long, shingle string")
     got = {
         (r.doc_id, r.band): r.sig
-        for r in minhash_signatures(
-            df, n_bands=4, rows_per_band=2
-        ).collect()
+        for r in minhash_signatures(df, n_bands=4).collect()
     }
     docs = {}
     for d, s in pairs:

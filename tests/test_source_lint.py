@@ -16,6 +16,10 @@
 - ``operators/similarity.py`` states each exactness rule once: the exact
   ``np.add.accumulate`` re-score lives only in its helper, one top-k rank
   window, one candidate-margin literal, one decimal-exact mean aggregate.
+- The dedup family's pair chains under ``plans/`` stay one copy each: the
+  MinHash signature SQL, the Jaccard intersection join, the positional
+  postings, the span island numbering, and the Spark near-dup filter at
+  ``_NEAR_DUP_J``.
 - The scripts outside the package (``tools/*.py``, ``bench.py``,
   ``__spark_entry__.py``) only reference package names that exist: no
   test runs them, so a rename would otherwise break them silently.
@@ -223,6 +227,27 @@ def test_similarity_exactness_rules_have_one_copy():
     if len(means) != 1:
         problems.append(f"decimal(18,6) mean aggregates at lines {means}")
     assert not problems, problems
+
+
+# One marker per pair-chain fragment; f-string brace escapes are folded so
+# a marker reads as the SQL it builds.
+_PAIR_CHAIN_MARKERS = (
+    "MIN(md5(CAST(band * 2 AS VARCHAR)",
+    "eb.shingle = ea.shingle",
+    "UNNEST([{'p': i",
+    "pa - row_number() OVER",
+    'F.col("jaccard") >= _NEAR_DUP_J',
+)
+
+
+def test_dedup_pair_chains_have_one_copy():
+    sites: dict[str, list[str]] = {m: [] for m in _PAIR_CHAIN_MARKERS}
+    for path in sorted((PACKAGE / "plans").rglob("*.py")):
+        text = path.read_text().replace("{{", "{")
+        for marker, found in sites.items():
+            found += [str(path.relative_to(ROOT))] * text.count(marker)
+    wrong = {m: found for m, found in sites.items() if len(found) != 1}
+    assert not wrong, f"pair-chain fragments not written once: {wrong}"
 
 
 PACKAGE_NAME = PACKAGE.name
